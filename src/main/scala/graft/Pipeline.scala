@@ -52,16 +52,8 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
       val obs = Observation(s"staging-$batchGuid-$t")
       (t, df.observe(obs, F.count(F.lit(1)).as("n")), obs)
     }
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val settled = Await.result(
-        Future.sequence(staged.map { case (t, df, _) =>
-          Future(wh.append(s"$stagingDir/$t", df))
-            .transform(scala.util.Success(_))
-        }), scala.concurrent.duration.Duration(10, "min"))
-      settled.collectFirst { case scala.util.Failure(e) => throw e }
-    }
+    Warehouse.settleAll(staged.map { case (t, df, _) =>
+      () => wh.append(s"$stagingDir/$t", df) })
     def observedCount(obs: Observation): Long =
       obs.get("n") match { case n: Number => n.longValue(); case _ => 0L }
     val sp = wh.spark.read.parquet(wh.path(s"$stagingDir/Provider"))

@@ -3462,8 +3462,8 @@ object SparkEntry {
     // VIEW of a lakehouse corpus table (FtsSync): the corpus suffers an
     // append seed, a text-editing UPDATE (retract + re-admit of the same
     // ids), a scattered DV delete, and an upserting MERGE that also inserts
-    // two new docs — one sync per window applies each commit exactly once
-    // through the per-commit retract/ingest ledgers, and BM25 over the
+    // two new docs — one sync per window applies the whole window as ONE
+    // index commit, ledgered per corpus version, and BM25 over the
     // synced index must be bit-identical to a from-scratch build over the
     // corpus's LIVE state, which the oracle restates as a CASE/filter/UNION
     // over raw documents. n_docs pins the telescoped stats (N after

@@ -286,7 +286,7 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
     * untouched. Fails fast when the index was never built.
     */
   def addVectors(fresh: DataFrame, idCol: String, vecCol: String): Unit =
-    admit(fresh, idCol, vecCol, batchId = None)
+    commit(None, Some(normalized(fresh, idCol, vecCol)), batchId = None)
 
   /** [[addVectors]] plus a `(batch_id)` ingest-ledger row written in the SAME
     * atomic section — the streaming-replay guard ([[graft.streaming.IvfStream]]):
@@ -299,7 +299,7 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
     */
   def addVectorsLedgered(fresh: DataFrame, idCol: String, vecCol: String,
       batchId: Long): Unit =
-    if (!ingested(batchId)) admit(fresh, idCol, vecCol, Some(batchId))
+    if (!ingested(batchId)) commit(None, Some(normalized(fresh, idCol, vecCol)), Some(batchId))
 
   /** True when `batchId` was already admitted (a checkpoint replay). */
   def ingested(batchId: Long): Boolean =
@@ -307,40 +307,6 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
       .filter(col("batch_id") === batchId).isEmpty
 
   def ingestLedger(): DataFrame = wh.read(ingestTable, ingestSchema)
-
-  /** `(n, meanCos, nextSeq)` in ONE fused driver job — the batch aggregate
-    * and the stats-table max were two serial stage waves per admit, real
-    * latency on a per-micro-batch ingest (the PersistedPostings fusion).
-    */
-  private def meanCosAndSeq(assigned: DataFrame): (Long, Option[Double], Long) = {
-    val r = assigned.agg(count(lit(1)).as("__n"), avg(col("cos6")).as("__mc"))
-      .crossJoin(wh.read(statsTable, statsSchema).agg(max(col("seq")).as("__s")))
-      .head()
-    (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)),
-      if (r.isNullAt(2)) 1L else r.getLong(2) + 1L)
-  }
-
-  private def admit(fresh: DataFrame, idCol: String, vecCol: String,
-      batchId: Option[Long]): Unit = {
-    require(wh.exists(centroidsTable), s"$centroidsTable absent — build() first")
-    val assigned = assignWithCos(normalized(fresh, idCol, vecCol), centroids())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (n, meanCos, seq) = meanCosAndSeq(assigned)
-      wh.atomically { w =>
-        // independent staged writes — concurrent on a transactional view
-        w.stageAll(Seq(
-          () => w.append(assignTable,
-            withCode(withPq(assigned.drop("cos6"), currentCb(), pqResidual(), centroids()))
-              .sortWithinPartitions("cell")),
-          () => w.append(statsTable, statsRow(seq, "batch", n, meanCos))) ++
-          batchId.map { b =>
-            () => w.append(ingestTable, wh.spark.createDataFrame(
-              java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
-          }.toSeq)
-      }
-    } finally assigned.unpersist(false)
-  }
 
   /** GDPR-style retraction: remove `ids`' cell assignments WITHOUT
     * rewriting the cell-sorted files — ids scatter across every cell, so a
@@ -357,6 +323,11 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
     */
   def retractVectors(ids: Seq[Long]): Long = retract(ids, batchId = None)
 
+  private def retract(ids: Seq[Long], batchId: Option[Long]): Long = {
+    require(ids.nonEmpty, "retractVectors with no ids")
+    commit(Some(ids), None, batchId)
+  }
+
   /** [[retractVectors]] plus a `(batch_id)` retraction-ledger row in the
     * SAME commit — the replay guard a change-feed maintenance driver needs
     * (the [[graft.streaming.FtsSync]] pattern): a replayed window sees its
@@ -371,114 +342,84 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
     wh.exists(retractTable) && !wh.read(retractTable, ingestSchema)
       .filter(col("batch_id") === batchId).isEmpty
 
-  /** Marker-only retraction-ledger row — a chunked giant retraction's
-    * completion marker ([[graft.operators.PersistedPostings.ledgerRetraction]]'s
-    * twin for cell assignments).
+  /** Apply a run of change-feed commits — the [[graft.streaming.VectorSync]]
+    * hook — as ONE atomic index commit PER corpus version, ascending: the
+    * version's tombstones and `retract` stats row, its fresh assignments and
+    * `batch` stats row, and a ledger row per present half publish together,
+    * so an UPDATE's re-embedded vector replaces its predecessor atomically
+    * and the `batch` rows [[drifted]] reads stay one per corpus commit.
+    * Caller contract ([[graft.streaming.ChangeFeedSync]]): no listed half is
+    * already ledgered; an empty retraction id set ledgers its version
+    * without tombstoning anything.
     */
-  def ledgerRetraction(batchId: Long): Unit =
-    if (!retracted(batchId)) wh.append(retractTable, wh.spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(batchId))),
-      ingestSchema))
+  def applyWindowLedgered(retracts: Seq[(Long, Seq[Long])],
+      admits: Seq[(Long, DataFrame)], idCol: String, vecCol: String): Unit = {
+    val outs = retracts.toMap
+    val ins = admits.toMap
+    (outs.keySet ++ ins.keySet).toSeq.sorted.foreach { v =>
+      commit(outs.get(v), ins.get(v).map(normalized(_, idCol, vecCol)), Some(v))
+    }
+  }
 
-  /** Apply ONE corpus commit's whole row-level change — retraction of
-    * `outIds` AND admission of `fresh` — as ONE atomic index commit
-    * ([[graft.operators.PersistedPostings.applyChangeLedgered]]'s
-    * contract, for cell assignments): tombstones, the retract stats row,
-    * the fresh assignments, the batch stats row, and BOTH ledger rows
-    * publish together, so an UPDATE's re-embedded vector replaces its
-    * predecessor atomically and a window of K corpus commits costs K
-    * index commits instead of 2K. Replay converges through the same
-    * per-commit ledgers; a half-applied state from the old two-commit
-    * driver finishes its missing half here.
+  /** ONE index commit of a retraction and/or an admission: `out`'s
+    * merge-on-read tombstones with a `retract` stats row (negative n), the
+    * normalized `fresh` batch assigned against the persisted centroids with
+    * its `batch` stats row, and — under `batchId` — a ledger row per present
+    * half. The scalar aggregates (batch n, mean cosine, next seq) are ONE
+    * fused driver job and the staged writes run concurrently on a
+    * transactional view; an admission-only commit also runs on the base
+    * warehouse, its ledger row last. Returns tombstoned assignment rows.
     */
-  def applyChangeLedgered(outIds: Seq[Long], fresh: Option[DataFrame],
-      idCol: String, vecCol: String, batchId: Long): Unit = {
-    // ONE fused ledger probe (both replay ledgers are tiny batch-count
-    // tables; the split probes were two fixed driver jobs per synced commit)
-    val (wasRetracted, wasIngested) = ledgerState(batchId)
-    val needOut = outIds.nonEmpty && !wasRetracted
-    val needIn = fresh.isDefined && !wasIngested
-    if (!needOut && !needIn) ()
-    else if (!needOut) admit(fresh.get, idCol, vecCol, Some(batchId))
-    else if (!needIn) retract(outIds, Some(batchId))
-    else {
-      val awh = wh match {
-        case a: graft.sources.AtomicWarehouse => a
-        case _ => throw new IllegalStateException(
-          "applyChangeLedgered needs an AtomicWarehouse — merge-on-read " +
-            "retraction rides deletion vectors")
-      }
+  private def commit(out: Option[Seq[Long]], fresh: Option[DataFrame],
+      batchId: Option[Long]): Long = {
+    if (fresh.isDefined)
       require(wh.exists(centroidsTable), s"$centroidsTable absent — build() first")
-      require(wh.exists(statsTable), s"$statsTable absent — build() first")
-      val distinct = outIds.distinct
-      val assigned = assignWithCos(normalized(fresh.get, idCol, vecCol), centroids())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // ONE fused driver job: batch stats + next seq (was two head()s)
-        val (n, meanCos, seq) = meanCosAndSeq(assigned)
-        def ledgerRowDf: DataFrame = wh.spark.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(batchId))),
-          ingestSchema)
-        def rest(w: Warehouse): Unit = w.stageAll(Seq(
-          () => w.append(statsTable,
-            statsRow(seq, "retract", -distinct.size.toLong, None)
-              .union(statsRow(seq + 1, "batch", n, meanCos))),
-          () => w.append(retractTable, ledgerRowDf),
-          () => w.append(assignTable,
-            withCode(withPq(assigned.drop("cos6"), currentCb(), pqResidual(), centroids()))
-              .sortWithinPartitions("cell")),
-          () => w.append(ingestTable, ledgerRowDf)))
-        val r = awh.deleteWhereDv(assignTable, assignSchema,
-          Seq(graft.sources.ColIn("id", distinct)), alsoInTx = rest)
-        // ids that match no live assignment tombstone nothing, but the
-        // admission and both ledger rows must still land — atomically
-        if (r.deleted == 0L) wh.atomically(rest)
-      } finally assigned.unpersist(false)
-    }
-  }
-
-  /** (retracted, ingested) for `batchId` in ONE driver job — the
-    * [[graft.operators.PersistedPostings]] fused-probe twin.
-    */
-  private def ledgerState(batchId: Long): (Boolean, Boolean) = {
-    val probes = Seq(retractTable, ingestTable).zip(Seq("r", "i")).flatMap {
-      case (tbl, tag) =>
-        if (!wh.exists(tbl)) None
-        else Some(wh.read(tbl, ingestSchema)
-          .filter(col("batch_id") === batchId).limit(1)
-          .select(lit(tag).as("__t")))
-    }
-    if (probes.isEmpty) (false, false)
-    else {
-      val hit = probes.reduce(_ unionAll _).collect().map(_.getString(0)).toSet
-      (hit.contains("r"), hit.contains("i"))
-    }
-  }
-
-  private def retract(ids: Seq[Long], batchId: Option[Long]): Long = {
-    require(ids.nonEmpty, "retractVectors with no ids")
-    val awh = wh match {
-      case a: graft.sources.AtomicWarehouse => a
-      case _ => throw new IllegalStateException(
-        "retractVectors needs an AtomicWarehouse — merge-on-read " +
-          "retraction rides deletion vectors")
-    }
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
-    val distinct = ids.distinct
-    val seq = wh.read(statsTable, statsSchema).agg(max(col("seq"))).head() match {
-      case r if r.isNullAt(0) => 1L
-      case r => r.getLong(0) + 1L
-    }
-    val r = awh.deleteWhereDv(assignTable, assignSchema,
-      Seq(graft.sources.ColIn("id", distinct)),
-      alsoInTx = w => {
-        w.append(statsTable, statsRow(seq, "retract", -distinct.size.toLong, None))
-        batchId.foreach { b =>
-          w.append(retractTable, wh.spark.createDataFrame(
-            java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
+    val ids = out.getOrElse(Nil).distinct
+    val assigned = fresh.map(f => assignWithCos(f, centroids())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try {
+      val statsRows: Option[DataFrame] =
+        if (ids.isEmpty && assigned.isEmpty) None
+        else {
+          val r = assigned.map(_.agg(count(lit(1)).as("__n"), avg(col("cos6")).as("__mc")))
+            .getOrElse(wh.spark.sql("SELECT CAST(0 AS BIGINT) __n, CAST(NULL AS DOUBLE) __mc"))
+            .crossJoin(wh.read(statsTable, statsSchema).agg(max(col("seq")).as("__s")))
+            .head()
+          val seq = if (r.isNullAt(2)) 1L else r.getLong(2) + 1L
+          val retractRow =
+            if (ids.nonEmpty) Some(statsRow(seq, "retract", -ids.size.toLong, None)) else None
+          val batchRow = assigned.map(_ => statsRow(seq + retractRow.size, "batch",
+            r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+          (retractRow ++ batchRow).reduceOption(_ union _)
         }
-      })
-    r.deleted
+      def ledgerRow(w: Warehouse, table: String): Option[() => Unit] = batchId.map { b =>
+        () => w.append(table, wh.spark.createDataFrame(
+          java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
+      }
+      def rest(w: Warehouse): Unit = w.stageAll(Seq(
+        assigned.map(a => () => w.append(assignTable,
+          withCode(withPq(a.drop("cos6"), currentCb(), pqResidual(), centroids()))
+            .sortWithinPartitions("cell"))),
+        statsRows.map(s => () => w.append(statsTable, s)),
+        out.flatMap(_ => ledgerRow(w, retractTable)),
+        fresh.flatMap(_ => ledgerRow(w, ingestTable))
+      ).flatten)
+      val deleted =
+        if (ids.isEmpty) 0L
+        else (wh match {
+          case a: graft.sources.AtomicWarehouse => a
+          case _ => throw new IllegalStateException(
+            "retractVectors needs an AtomicWarehouse — merge-on-read " +
+              "retraction rides deletion vectors")
+        }).deleteWhereDv(assignTable, assignSchema,
+          Seq(graft.sources.ColIn("id", ids)), alsoInTx = rest).deleted
+      // ids that match no live assignment tombstone nothing (deleteWhereDv
+      // no-ops WITHOUT committing), but the stats, the admission and the
+      // ledger rows must still land — atomically
+      if (deleted == 0L) wh.atomically(rest)
+      deleted
+    } finally assigned.foreach(_.unpersist(false))
   }
 
   def centroids(): DataFrame = wh.read(centroidsTable, centroidSchema)

@@ -321,89 +321,13 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
     wh.exists(retractTable) && !wh.read(retractTable, ingestSchema)
       .filter(col("batch_id") === batchId).isEmpty
 
-  /** Record `batchId` in the retraction ledger WITHOUT touching the index
-    * — the COMPLETION marker a chunked giant retraction writes after its
-    * last chunk landed (each chunk ledgered its own sub-id; see
-    * [[graft.streaming.FtsSync.applyCommitFrame]]).
-    */
-  def ledgerRetraction(batchId: Long): Unit =
-    if (!retracted(batchId)) wh.append(retractTable, wh.spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(batchId))),
-      ingestSchema))
-
-  /** Apply ONE corpus commit's whole row-level change — retraction of
-    * `outIds` AND admission of `fresh` — as ONE atomic index commit: the
-    * tombstones, the negative stats row, the fresh postings, the positive
-    * stats row, and BOTH ledger rows publish together. This is the
-    * change-feed maintenance fast path ([[graft.streaming.FtsSync]]): an
-    * UPDATE (retract + re-admit of the same ids) or an upserting MERGE
-    * applies to the index atomically — no crash window where the old text
-    * is gone and the new not yet searchable — and a window of K corpus
-    * commits costs K index commits instead of 2K. Replay converges through
-    * the same per-commit ledgers as the split path; a half-applied state
-    * left by a crash of the OLD two-commit driver finishes its missing
-    * half here (the ledgers are consulted independently).
-    */
-  def applyChangeLedgered(outIds: Seq[Long], fresh: Option[DataFrame],
-      idCol: String, textCol: String, batchId: Long): Unit = {
-    // ONE fused ledger probe: both replay ledgers are tiny batch-count
-    // tables, and the two separate isEmpty probes were two of the four
-    // fixed driver jobs every synced DML commit paid (FtsSyncProbe2)
-    val (wasRetracted, wasIngested) = ledgerState(batchId)
-    val needOut = outIds.nonEmpty && !wasRetracted
-    val needIn = fresh.isDefined && !wasIngested
-    if (!needOut && !needIn) ()
-    else if (!needOut) {
-      if (!wasIngested) admit(fresh.get, idCol, textCol, Some(batchId))
-    }
-    else if (!needIn) retract(outIds, Some(batchId))
-    else {
-      val awh = wh match {
-        case a: graft.sources.AtomicWarehouse => a
-        case _ => throw new IllegalStateException(
-          "applyChangeLedgered needs an AtomicWarehouse — merge-on-read " +
-            "retraction rides deletion vectors")
-      }
-      require(wh.exists(statsTable), s"$statsTable absent — build() first")
-      val distinct = outIds.distinct
-      val toks = tokensOf(fresh.get, idCol, textCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // ONE fused driver job for every scalar the commit needs (was three
-        // serial head()s — batch stats, retractee Σdl, next seq): cross join
-        // of one-row aggregates, materializing the toks persist as it runs
-        val r0 = toks.agg(count(lit(1)).as("__n"),
-            sum(size(col("__ts")).cast(LongType)).as("__sumdl"))
-          .crossJoin(dlGoneAggFrame(distinct))
-          .crossJoin(seqAggFrame).head()
-        val n = r0.getLong(0)
-        val sumdl = if (r0.isNullAt(1)) 0L else r0.getLong(1)
-        val dlGone = r0.getLong(2)
-        val seq = nextSeq(r0, 3)
-        def ledgerRowDf: DataFrame = wh.spark.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(batchId))),
-          ingestSchema)
-        def rest(w: Warehouse): Unit = w.stageAll(Seq(
-          () => w.append(statsTable,
-            statsRow(seq, -distinct.size.toLong, -dlGone)
-              .union(statsRow(seq + 1, n, sumdl))),
-          () => w.append(retractTable, ledgerRowDf),
-          () => w.append(postingsTable, postingsOfToks(toks).sortWithinPartitions("t")),
-          () => w.append(ingestTable, ledgerRowDf)))
-        val r = awh.deleteWhereDv(postingsTable, postingsSchema,
-          Seq(graft.sources.ColIn("id", distinct)), alsoInTx = rest)
-        // token-less retractees tombstone nothing, but the stats correction,
-        // the admission, and both ledger rows must still land — atomically
-        if (r.deleted == 0L) wh.atomically(rest)
-      } finally toks.unpersist(false)
-    }
-  }
-
-  /** Apply a WHOLE multi-commit change window as ONE atomic index commit —
-    * the K-commit fusion of [[applyChangeLedgered]] (which fused one
-    * commit's retract+admit): the per-commit fixed latency (ledger probes,
-    * scalar aggregates, a manifest commit fsync each) dominated small-churn
-    * windows, and a window of K corpus commits cost K index commits.
+  /** Apply a change window (or its run between two over-cap commits) as
+    * ONE atomic index commit — the [[graft.streaming.FtsSync]] hook. The
+    * per-commit fixed latency (ledger probes, scalar aggregates, a manifest
+    * commit fsync each) dominated small-churn windows; here K corpus
+    * commits cost one index commit, and an UPDATE (retract + re-admit of the same ids) or an
+    * upserting MERGE lands atomically — no crash window where the old text
+    * is gone and the new not yet searchable.
     *
     * Equivalence to the sequential replay (what the `etl_fts_sync` oracle
     * checks — a from-scratch build over the live corpus):
@@ -423,35 +347,32 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
     *     the fused commit writes. Individual stats ROWS differ; their sums
     *     (N, Σdl — the only consumers) are bit-equal, integer addition.
     *   - LEDGERS: the same per-version rows land, all-or-nothing; replay of
-    *     a crashed window sees none applied and replays whole.
+    *     a crashed window sees none applied and replays whole. A version
+    *     whose retraction was ledgered earlier arrives with only its
+    *     admission — the pre-window state already holds the applied half.
     *
-    * Returns false WITHOUT side effects when the window cannot be proven
-    * fusable — any window version already (partially) ledgered, e.g. a
-    * wound-back cursor replaying an old two-commit crash — the caller then
-    * falls back to the per-commit path, whose ledger probes converge each
-    * version independently. `retracts` values must be ≤censusIdCap-bounded
-    * distinct id sets (the ChangeFeedSync census contract).
+    * A one-version window (a seed sync, a single UPDATE, a giant retraction's
+    * chunk) skips the netting: its retractions all precede its admissions,
+    * so R is every retracted id and A every admitted row, and no aggregation
+    * shuffles the admitted text. Caller contract
+    * ([[graft.streaming.ChangeFeedSync]]): no listed half is already
+    * ledgered, and `retracts` holds distinct, census-capped id sets (an
+    * empty set ledgers its version without tombstoning anything).
     */
   def applyWindowLedgered(retracts: Seq[(Long, Seq[Long])],
-      admits: Seq[(Long, DataFrame)], idCol: String, textCol: String): Boolean = {
+      admits: Seq[(Long, DataFrame)], idCol: String, textCol: String): Unit = {
     val versions = (retracts.map(_._1) ++ admits.map(_._1)).distinct
-    if (versions.isEmpty) return true
-    if (anyLedgered(versions)) return false
-    val awh = wh match {
-      case a: graft.sources.AtomicWarehouse => a
-      case _ => throw new IllegalStateException(
-        "applyWindowLedgered needs an AtomicWarehouse — merge-on-read " +
-          "retraction rides deletion vectors")
-    }
+    if (versions.isEmpty) return
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
-    import org.apache.spark.sql.types.LongType
     // per-id retract version bounds, driver-side (census-capped sets)
     val retractMin = scala.collection.mutable.Map[Long, Long]()
     val retractMax = scala.collection.mutable.Map[Long, Long]()
-    retracts.foreach { case (v, ids) => ids.distinct.foreach { id =>
+    retracts.foreach { case (v, ids) => ids.foreach { id =>
       retractMin(id) = retractMin.get(id).fold(v)(math.min(_, v))
       retractMax(id) = retractMax.get(id).fold(v)(math.max(_, v))
     } }
+    // a one-version window needs no netting (see above)
+    val single = versions.size == 1
     val ua = admits.map { case (v, df) =>
       df.select(col(idCol).cast(LongType).as("id"), col(textCol).as("__text"),
         lit(v).as("__v"))
@@ -462,7 +383,7 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
     // are trivially R. One driver job over the admit union, retract ids only.
     val rids = retractMin.keys.toSeq
     val admitMinV: Map[Long, Long] = (ua, rids) match {
-      case (Some(u), ids) if ids.nonEmpty =>
+      case (Some(u), ids) if ids.nonEmpty && !single =>
         u.filter(col("id").isInCollection(ids))
           .groupBy(col("id")).agg(min(col("__v")).as("mv")).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -473,95 +394,71 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
     // A: the last admitted text of ids whose LAST window event is an
     // admission (max admit version ≥ max retract version; a tie is
     // admit-last). The retract bounds ride in as a broadcast local relation.
-    val finalDocs: Option[DataFrame] = ua.map { u =>
-      val agg = u.groupBy(col("id")).agg(
-        max_by(col("__text"), col("__v")).as("__text"), max(col("__v")).as("__maxv"))
-      val filtered =
-        if (retractMax.isEmpty) agg
-        else {
-          val rmax = wh.spark.createDataFrame(
-            java.util.Arrays.asList(retractMax.toSeq.sortBy(_._1).map { case (id, v) =>
-              org.apache.spark.sql.Row(Long.box(id), Long.box(v)) }: _*),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("id", LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("__maxrv", LongType, nullable = false))))
-          agg.join(broadcast(rmax), Seq("id"), "left")
-            .filter(col("__maxrv").isNull || col("__maxrv") <= col("__maxv"))
-        }
-      filtered.select(col("id").as(idCol), col("__text").as(textCol))
-    }
+    val finalDocs: Option[DataFrame] =
+      if (single) admits.headOption.map(_._2)
+      else ua.map { u =>
+        val agg = u.groupBy(col("id")).agg(
+          max_by(col("__text"), col("__v")).as("__text"), max(col("__v")).as("__maxv"))
+        val filtered =
+          if (retractMax.isEmpty) agg
+          else {
+            val rmax = wh.spark.createDataFrame(
+              java.util.Arrays.asList(retractMax.toSeq.sortBy(_._1).map { case (id, v) =>
+                org.apache.spark.sql.Row(Long.box(id), Long.box(v)) }: _*),
+              StructType(Seq(StructField("id", LongType, nullable = false),
+                StructField("__maxrv", LongType, nullable = false))))
+            agg.join(broadcast(rmax), Seq("id"), "left")
+              .filter(col("__maxrv").isNull || col("__maxrv") <= col("__maxv"))
+          }
+        filtered.select(col("id").as(idCol), col("__text").as(textCol))
+      }
     val toks = finalDocs.map(d => tokensOf(d, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
-      // ONE fused scalar job: admitted stats + retractee Σdl + next seq
-      val statsAgg = toks.map(_.agg(count(lit(1)).as("__n"),
-          sum(size(col("__ts")).cast(LongType)).as("__sumdl")))
-        .getOrElse(wh.spark.sql("SELECT CAST(0 AS BIGINT) __n, CAST(0 AS BIGINT) __sumdl"))
-      val dlAgg =
-        if (R.isEmpty) wh.spark.sql("SELECT CAST(0 AS BIGINT) __dlgone")
-        else dlGoneAggFrame(R)
-      val r0 = statsAgg.crossJoin(dlAgg).crossJoin(seqAggFrame).head()
-      val nA = r0.getLong(0)
-      val sumdlA = if (r0.isNullAt(1)) 0L else r0.getLong(1)
-      val dlGone = r0.getLong(2)
-      val seq = nextSeq(r0, 3)
+      val statsRows: Option[DataFrame] =
+        if (R.isEmpty && toks.isEmpty) None
+        else {
+          // ONE fused scalar job: admitted stats + retractee Σdl + next seq
+          val statsAgg = toks.map(_.agg(count(lit(1)).as("__n"),
+              sum(size(col("__ts")).cast(LongType)).as("__sumdl")))
+            .getOrElse(wh.spark.sql("SELECT CAST(0 AS BIGINT) __n, CAST(0 AS BIGINT) __sumdl"))
+          val dlAgg =
+            if (R.isEmpty) wh.spark.sql("SELECT CAST(0 AS BIGINT) __dlgone")
+            else dlGoneAggFrame(R)
+          val r0 = statsAgg.crossJoin(dlAgg).crossJoin(seqAggFrame).head()
+          val seq = nextSeq(r0, 3)
+          val neg = if (R.nonEmpty) Some(statsRow(seq, -R.size.toLong, -r0.getLong(2))) else None
+          val pos = toks.map(_ => statsRow(seq + neg.size,
+            r0.getLong(0), if (r0.isNullAt(1)) 0L else r0.getLong(1)))
+          (neg ++ pos).reduceOption(_ union _)
+        }
       def ledgerDf(vs: Seq[Long]): DataFrame = wh.spark.createDataFrame(
         java.util.Arrays.asList(vs.sorted.map(v =>
           org.apache.spark.sql.Row(Long.box(v))): _*), ingestSchema)
-      val statsRows = Seq(
-        if (R.nonEmpty) Some(statsRow(seq, -R.size.toLong, -dlGone)) else None,
-        if (admits.nonEmpty) Some(statsRow(seq + 1, nA, sumdlA)) else None
-      ).flatten.reduce(_ union _)
       def rest(w: Warehouse): Unit = w.stageAll(Seq(
-        Some(() => w.append(statsTable, statsRows)),
-        if (retracts.nonEmpty)
-          Some(() => w.append(retractTable, ledgerDf(retracts.map(_._1)))) else None,
+        statsRows.map(s => () => w.append(statsTable, s)),
         toks.map(t =>
           () => w.append(postingsTable, postingsOfToks(t).sortWithinPartitions("t"))),
-        if (admits.nonEmpty)
-          Some(() => w.append(ingestTable, ledgerDf(admits.map(_._1)))) else None
+        Some(retracts.map(_._1)).filter(_.nonEmpty)
+          .map(vs => () => w.append(retractTable, ledgerDf(vs))),
+        Some(admits.map(_._1)).filter(_.nonEmpty)
+          .map(vs => () => w.append(ingestTable, ledgerDf(vs)))
       ).flatten)
-      val deleted =
-        if (R.isEmpty) 0L
-        else awh.deleteWhereDv(postingsTable, postingsSchema,
-          Seq(graft.sources.ColIn("id", R)), alsoInTx = rest).deleted
       // token-less retractees tombstone nothing (deleteWhereDv no-ops
       // WITHOUT committing), and an R-less window never calls it — the stats
       // corrections, admissions and ledger rows must still land, atomically
-      if (R.isEmpty || deleted == 0L) wh.atomically(rest)
-      true
+      val deleted =
+        if (R.isEmpty) 0L
+        else atomicWh("applyWindowLedgered").deleteWhereDv(postingsTable, postingsSchema,
+          Seq(graft.sources.ColIn("id", R)), alsoInTx = rest).deleted
+      if (deleted == 0L) wh.atomically(rest)
     } finally toks.foreach(_.unpersist(false))
   }
 
-  /** True when ANY of `versions` already has a row in EITHER replay ledger
-    * — one driver job over both tiny tables.
-    */
-  private def anyLedgered(versions: Seq[Long]): Boolean = {
-    val probes = Seq(retractTable, ingestTable).flatMap { tbl =>
-      if (!wh.exists(tbl)) None
-      else Some(wh.read(tbl, ingestSchema)
-        .filter(col("batch_id").isInCollection(versions)).limit(1))
-    }
-    probes.nonEmpty && probes.reduce(_ unionAll _).limit(1).collect().nonEmpty
-  }
-
-  /** (retracted, ingested) for `batchId` in ONE driver job: both ledgers are
-    * tiny batch-count tables and the split [[retracted]]/[[ingested]] probes
-    * cost a full stage wave each, per synced commit.
-    */
-  private def ledgerState(batchId: Long): (Boolean, Boolean) = {
-    val probes = Seq(retractTable, ingestTable).zip(Seq("r", "i")).flatMap {
-      case (tbl, tag) =>
-        if (!wh.exists(tbl)) None
-        else Some(wh.read(tbl, ingestSchema)
-          .filter(col("batch_id") === batchId).limit(1)
-          .select(lit(tag).as("__t")))
-    }
-    if (probes.isEmpty) (false, false)
-    else {
-      val hit = probes.reduce(_ unionAll _).collect().map(_.getString(0)).toSet
-      (hit.contains("r"), hit.contains("i"))
-    }
+  private def atomicWh(op: String): graft.sources.AtomicWarehouse = wh match {
+    case a: graft.sources.AtomicWarehouse => a
+    case _ => throw new IllegalStateException(
+      s"$op needs an AtomicWarehouse — merge-on-read retraction rides deletion vectors")
   }
 
   /** Σ dl over the distinct retractee ids, as a one-row aggregate frame —
@@ -574,12 +471,7 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
 
   private def retract(ids: Seq[Long], batchId: Option[Long]): Long = {
     require(ids.nonEmpty, "retractDocs with no ids")
-    val awh = wh match {
-      case a: graft.sources.AtomicWarehouse => a
-      case _ => throw new IllegalStateException(
-        "retractDocs needs an AtomicWarehouse — merge-on-read retraction " +
-          "rides deletion vectors")
-    }
+    val awh = atomicWh("retractDocs")
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
     val distinct = ids.distinct
     // ONE fused driver job: Σdl of the retractees + next sequence number

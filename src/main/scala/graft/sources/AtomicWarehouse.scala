@@ -1088,16 +1088,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       * invisible until the commit, so independent thunks only share the
       * (synchronized) stage bookkeeping.
       */
-    override def stageAll(writes: Seq[() => Unit]): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.util.{Failure, Try}
-      val settled: Seq[Try[Unit]] = Await.result(
-        Future.sequence(writes.map(f => Future(f())
-          .transform(scala.util.Success(_)))),
-        scala.concurrent.duration.Duration(10, "min"))
-      settled.collectFirst { case Failure(e) => throw e }
-    }
+    override def stageAll(writes: Seq[() => Unit]): Unit = Warehouse.settleAll(writes)
   }
 
   // ---- public transactional surface ---------------------------------------

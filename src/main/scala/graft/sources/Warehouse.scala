@@ -205,3 +205,20 @@ class Warehouse(val spark: SparkSession, val root: String) {
     throw new IllegalStateException("unreachable")
   }
 }
+
+object Warehouse {
+  /** Run independent thunks concurrently and wait for EVERY one to settle
+    * before the first failure (if any) propagates — no sibling is left
+    * mid-write. The wait is unbounded: each future is failure-transformed,
+    * so it cannot hang on an error, and a large write must not abort at a
+    * timeout while its siblings keep running.
+    */
+  def settleAll(thunks: Seq[() => Unit]): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val settled = Await.result(
+      Future.sequence(thunks.map(f => Future(f()).transform(scala.util.Success(_)))),
+      scala.concurrent.duration.Duration.Inf)
+    settled.collectFirst { case scala.util.Failure(e) => throw e }
+  }
+}

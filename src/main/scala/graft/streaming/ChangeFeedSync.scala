@@ -2,21 +2,25 @@ package graft.streaming
 
 import graft.sources.AtomicWarehouse
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, collect_set, count, max, when}
+import org.apache.spark.sql.functions.{col, collect_set, count, lit, max, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The GENERIC maintenance loop for a derived structure riding a corpus
   * table's change feed — the shape [[FtsSync]] proved for the inverted
   * index, factored so every persisted index maintains the same way: pull
-  * the window since the cursor, apply it COMMIT BY COMMIT (retraction for
-  * `delete`/`update_preimage` ids, admission for `insert`/
-  * `update_postimage` rows — an UPDATE is retract-then-admit of the same
-  * id), and advance the cursor last. Exactly-once belongs to the
-  * IMPLEMENTATIONS: `retract`/`admit` receive the corpus COMMIT VERSION as
-  * their batch id (stable across replays, where a window id would shift
-  * when a crash widens the next window) and must ledger it in the same
-  * commit as their effect — then a wound-back cursor replays the whole
-  * history and every applied commit no-ops.
+  * the window since the cursor, hand its retractions (`delete`/
+  * `update_preimage` ids) and admissions (`insert`/`update_postimage` rows)
+  * to ONE per-index hook, [[applyWindow]], and advance the cursor last. An
+  * UPDATE is retract-then-admit of the same id inside one corpus commit.
+  *
+  * Exactly-once rides the index's two replay LEDGERS, `(batch_id)` tables
+  * keyed by corpus COMMIT VERSION (stable across replays, where a window id
+  * would shift when a crash widens the next window): the hook writes a
+  * version's ledger rows in the same commit as its effect, and `sync()`
+  * probes both ledgers ONCE per window and drops every half already
+  * ledgered — a wound-back cursor replays the whole history and every
+  * applied commit no-ops, and a half-applied legacy commit (retraction
+  * ledgered, admission lost) finishes its missing half.
   *
   * A window with no corpus commit does NOT advance the cursor: the cursor
   * write itself commits, so a no-op sync would mint versions forever when
@@ -29,76 +33,42 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
     corpusSchema: StructType, idCol: String) {
 
-  /** Warehouse holding the maintenance cursor (usually the index's). */
+  /** Warehouse holding the maintenance cursor and the replay ledgers (the
+    * index's).
+    */
   protected def cursorWh: graft.sources.Warehouse
 
   /** Cursor table name — one per maintained structure. */
   def cursorTable: String
 
-  /** Un-learn `ids` (one corpus commit's deletes + update pre-images),
-    * ledgered under `version` in the same commit as the effect.
-    */
-  protected def retract(ids: Seq[Long], version: Long): Unit
+  /** The index's retraction and admission ledgers (`batch_id` rows). */
+  protected def retractLedger: String
+  protected def ingestLedger: String
 
-  /** Learn `rows` (one corpus commit's inserts + update post-images, in
-    * corpus schema), ledgered under `version` likewise.
+  /** Apply a run of window commits to the index, ledgering every listed
+    * version in the same commit(s) as its effect: `retracts` are
+    * per-version distinct retraction id sets (an EMPTY set ledgers the
+    * version's retraction without tombstoning — the completion marker of a
+    * chunked giant retraction), `admits` per-version admission rows in
+    * corpus schema. Versions arrive ascending, none of their halves is
+    * already ledgered, and every listed retraction applies before the
+    * same version's admission.
     */
-  protected def admit(rows: DataFrame, version: Long): Unit
-
-  /** Apply ONE corpus commit — retraction of `outIds` then admission of
-    * `in` (either side may be absent). The default is the split path
-    * (retract commit, then admit commit); implementations whose index
-    * supports it override with a FUSED single-commit apply
-    * (`applyChangeLedgered`), halving commits for update-shaped churn and
-    * closing the crash window where a doc's old state is un-learned but
-    * its new state not yet admitted.
-    */
-  protected def applyCommit(outIds: Seq[Long], in: Option[DataFrame],
-      version: Long): Unit = {
-    if (outIds.nonEmpty) retract(outIds, version)
-    in.foreach(admit(_, version))
-  }
+  protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
+      admits: Seq[(Long, DataFrame)]): Unit
 
   /** Max retraction ids per commit materialized on the driver by the
     * census. Per-commit churn is the RIGHT bound for CDC — but it is the
     * writer's bound, not ours: one adversarial commit deleting 10⁸ rows
     * would OOM the driver through a `collect_set`. Above the cap the
-    * commit routes through [[applyCommitFrame]] with the retraction set
-    * left distributed.
+    * commit's retraction streams through [[retractChunked]] instead.
     */
   protected def censusIdCap: Int = 1000000
 
-  /** Giant-churn apply: `applyCommit`'s contract with the retraction ids
-    * as a distinct single-column (`id`, LongType) DataFrame that never
-    * touched the driver. The default falls back to a driver
-    * materialization (correct for every implementation, reinstating the
-    * memory exposure the cap flagged); implementations with a join-shaped
-    * retraction override it to stay distributed end-to-end.
-    */
-  protected def applyCommitFrame(out: DataFrame, in: Option[DataFrame],
-      version: Long): Unit =
-    applyCommit(out.collect().map(_.getLong(0)).toSeq, in, version)
-
-  /** Apply the window's commits, version-sorted. The default replays them
-    * COMMIT BY COMMIT (exactly the pre-window-fusion behavior: over-cap
-    * retractions stay distributed via [[applyCommitFrame]], the rest go
-    * through [[applyCommit]]). Implementations whose index supports it
-    * override with a FUSED whole-window apply ([[FtsSync]] →
-    * [[graft.operators.PersistedPostings.applyWindowLedgered]]): a K-commit
-    * window then costs ONE index commit instead of K — per-commit fixed
-    * latency (ledger probes, scalar aggregates, manifest commit fsync) was
-    * the dominant cost of small-churn windows — and must fall back to this
-    * default whenever the fused path cannot prove equivalence (a replayed
-    * window with partially-applied versions, an over-cap commit).
-    */
-  protected def applyWindow(commits: Seq[ChangeFeedSync.SyncCommit]): Unit =
-    commits.foreach { c =>
-      if (c.nOut > censusIdCap) applyCommitFrame(c.outFrame(), c.in, c.version)
-      else applyCommit(c.outIds, c.in, c.version)
-    }
-
   private val cursorSchema = StructType(Seq(
     StructField("version", LongType, nullable = false)))
+  private val ledgerSchema = StructType(Seq(
+    StructField("batch_id", LongType, nullable = false)))
 
   /** The corpus-log version the structure reflects (0 = never synced). */
   def cursor(): Int =
@@ -121,16 +91,57 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
     */
   @volatile private var emptyScan: Option[(Int, Int)] = None
 
+  /** The window's rows in both replay ledgers, as `(tag, batch_id, 0, 0)`
+    * rows shaped to ride the census job: corpus versions in `(from, head]`
+    * and every chunk sub-id of those versions (a contiguous negative range,
+    * [[ChangeFeedSync.chunkLedgerId]]). Both tables are batch-count sized.
+    */
+  private def ledgerHits(from: Int, head: Int): Seq[DataFrame] = {
+    val b = col("batch_id")
+    val inWindow = b.between(from + 1L, head.toLong) ||
+      b.between(ChangeFeedSync.chunkLedgerId(head + 1L, 0) + 1L,
+        ChangeFeedSync.chunkLedgerId(from + 1L, 0))
+    Seq(retractLedger -> "r", ingestLedger -> "i").collect {
+      case (tbl, tag) if cursorWh.exists(tbl) =>
+        cursorWh.read(tbl, ledgerSchema).filter(inWindow)
+          .select(lit(tag), b, lit(0L), lit(0L))
+    }
+  }
+
+  /** Giant-churn retraction (over [[censusIdCap]]): the id frame streams
+    * through the driver in SORTED, cap-bounded chunks (`toLocalIterator`
+    * holds one partition at a time — peak driver memory is a chunk, never
+    * the commit's whole id set). Each chunk applies through the hook under
+    * its own deterministic sub-id ([[ChangeFeedSync.chunkLedgerId]]), so a
+    * crashed replay skips the chunks in `done` instead of double-applying
+    * them; the caller ledgers the plain version as the completion marker.
+    */
+  private def retractChunked(out: DataFrame, version: Long, done: Set[Long]): Unit = {
+    val it = out.orderBy(col("id")).toLocalIterator()
+    val buf = scala.collection.mutable.ArrayBuffer[Long]()
+    var chunk = 0
+    def flush(): Unit = if (buf.nonEmpty) {
+      val sub = ChangeFeedSync.chunkLedgerId(version, chunk)
+      if (!done(sub)) applyWindow(Seq(sub -> buf.toList), Nil)
+      chunk += 1
+      buf.clear()
+    }
+    while (it.hasNext) {
+      buf += it.next().getLong(0)
+      if (buf.size >= censusIdCap) flush()
+    }
+    flush()
+  }
+
   /** Apply everything the corpus committed since the cursor. Returns the
     * new cursor (unchanged when the window held no corpus change).
     *
     * The window is materialized ONCE (it is churn-sized, never
-    * corpus-sized) and a single census aggregate yields every per-commit
-    * retraction id set and admission count — without it, each commit in
-    * the window would re-read every change file three times (version
-    * probe, retract-id collect, emptiness check), a per-commit fixed cost
-    * that dominates small-churn windows and scales with window WIDTH
-    * rather than churn.
+    * corpus-sized) and ONE census job yields every per-commit retraction
+    * and admission count together with the window's replay-ledger rows; one
+    * id-set aggregate follows, for the whole window. The window then reaches
+    * [[applyWindow]] as ONE run, split only at over-cap commits, whose
+    * retraction goes through [[retractChunked]] between the runs.
     */
   def sync(): Int = {
     val head = srcWh.versions().lastOption.getOrElse(0)
@@ -145,42 +156,59 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
     try {
       val ct = col(srcWh.changeTypeCol)
       val retracting = ct.isin("delete", "update_preimage")
+      val admitting = ct.isin("insert", "update_postimage")
       val vCol = col("_commit_version").cast(LongType)
       // ONE driver job: per-commit churn COUNTS (no id materialization yet
-      // — a single adversarial 10⁸-row delete must not OOM the driver)
-      val census = feed.groupBy(vCol.as("v"))
+      // — a single adversarial 10⁸-row delete must not OOM the driver) and
+      // the window's replay-ledger rows
+      val rows = (feed.groupBy(vCol.as("v"))
         .agg(
           count(when(retracting, 1)).as("nOut"),
-          count(when(ct.isin("insert", "update_postimage"), 1)).as("nIn"))
-        .collect()
+          count(when(admitting, 1)).as("nIn"))
+        .select(lit("c"), col("v"), col("nOut"), col("nIn")) +: ledgerHits(from, head))
+        .reduce(_ unionAll _).collect()
+      def tagged(tag: String) = rows.filter(_.getString(0) == tag)
+      val census = tagged("c").map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(_._1)
       if (census.isEmpty) { emptyScan = Some((cur, head)); return cur }
-      // second job, still ONE for the whole window: id sets for the
-      // commits under the cap (the common case — every set is bounded by
-      // censusIdCap by construction). Over-cap commits keep their ids
-      // distributed and route through applyCommitFrame.
-      val smallVs = census.filter(r => r.getAs[Long]("nOut") <= censusIdCap &&
-        r.getAs[Long]("nOut") > 0L).map(_.getAs[Long]("v"))
+      val doneOut = tagged("r").map(_.getLong(1)).toSet
+      val doneIn = tagged("i").map(_.getLong(1)).toSet
+      val cap = censusIdCap
+      // still ONE job for the whole window: id sets of the under-cap
+      // retractions not yet ledgered (each bounded by the cap)
+      val smallVs = census.toSeq.collect {
+        case (v, nOut, _) if nOut > 0L && nOut <= cap && !doneOut(v) => Long.box(v)
+      }
       val idSets: Map[Long, Seq[Long]] =
         if (smallVs.isEmpty) Map.empty
-        else feed.filter(retracting && vCol.isin(smallVs.map(Long.box): _*))
+        else feed.filter(retracting && vCol.isin(smallVs: _*))
           .groupBy(vCol.as("v"))
           .agg(collect_set(col(idCol).cast(LongType)).as("outIds"))
           .collect()
-          .map(r => r.getAs[Long]("v") -> r.getSeq[Long](r.fieldIndex("outIds")))
+          .map(r => r.getLong(0) -> r.getSeq[Long](1))
           .toMap
-      val commits = census.sortBy(_.getAs[Long]("v")).toSeq.map { r =>
-        val v = r.getAs[Long]("v")
-        val in =
-          if (r.getAs[Long]("nIn") == 0L) None
-          else Some(feed.filter(col("_commit_version") === v &&
-              ct.isin("insert", "update_postimage"))
-            .select(corpusSchema.fieldNames.toSeq.map(col): _*))
-        ChangeFeedSync.SyncCommit(v, r.getAs[Long]("nOut"),
-          idSets.getOrElse(v, Nil),
-          () => feed.filter(retracting && vCol === v)
-            .select(col(idCol).cast(LongType).as("id")).distinct(), in)
+      val retracts = scala.collection.mutable.ArrayBuffer[(Long, Seq[Long])]()
+      val admits = scala.collection.mutable.ArrayBuffer[(Long, DataFrame)]()
+      def flush(): Unit = if (retracts.nonEmpty || admits.nonEmpty) {
+        applyWindow(retracts.toList, admits.toList)
+        retracts.clear()
+        admits.clear()
       }
-      applyWindow(commits)
+      census.foreach { case (v, nOut, nIn) =>
+        if (nOut > 0L && !doneOut(v)) {
+          if (nOut <= cap) retracts += v -> idSets(v)
+          else {
+            flush()
+            retractChunked(feed.filter(retracting && vCol === v)
+              .select(col(idCol).cast(LongType).as("id")).distinct(), v, doneOut)
+            retracts += v -> Nil
+          }
+        }
+        if (nIn > 0L && !doneIn(v))
+          admits += v -> feed.filter(admitting && vCol === v)
+            .select(corpusSchema.fieldNames.toSeq.map(col): _*)
+      }
+      flush()
       cursorWh.replace(cursorTable, srcWh.spark.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row(head.toLong)), cursorSchema))
       emptyScan = None
@@ -190,23 +218,23 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
 }
 
 object ChangeFeedSync {
-  /** One corpus commit of a sync window: `outIds` holds the retraction id
-    * set ONLY when `nOut ≤ censusIdCap` (the census never materializes an
-    * over-cap commit's ids on the driver — `outFrame` is the distributed
-    * form those route through), `in` the admission rows in corpus schema.
+  /** Ledger sub-id for chunk `i` of version `v`'s giant retraction:
+    * negative, injective for v < 2^42 and i < 2^20 — corpus versions are
+    * positive ints, so the spaces can never collide.
     */
-  final case class SyncCommit(version: Long, nOut: Long, outIds: Seq[Long],
-      outFrame: () => DataFrame, in: Option[DataFrame])
+  private def chunkLedgerId(v: Long, i: Int): Long =
+    -((v << 20) + i + 1)
 }
 
 /** The IVF ANN index as an incrementally-maintained MV of an embeddings
-  * corpus table — [[FtsSync]]'s twin: deletes/update-preimages tombstone
-  * cell assignments ([[graft.operators.PersistedIvf.retractVectorsLedgered]]),
-  * inserts/update-postimages assign-and-admit
-  * ([[graft.operators.PersistedIvf.addVectorsLedgered]] — batch-sized,
-  * against the standing centroids), both ledgered by corpus commit
-  * version. Centroids keep their training history; `drifted`/`retrain`
-  * remain the recalibration path when churn moves the distribution.
+  * corpus table — [[FtsSync]]'s twin: each window run goes through
+  * [[graft.operators.PersistedIvf.applyWindowLedgered]], one atomic commit
+  * per corpus version that tombstones its deletes/update-preimages and
+  * assigns-and-admits its inserts/update-postimages against the standing
+  * centroids, so the per-batch stats rows `drifted` reads stay one per
+  * corpus commit. Centroids keep their training history; `drifted`/
+  * `retrain` remain the recalibration path when churn moves the
+  * distribution.
   */
 class VectorSync(srcWh: AtomicWarehouse, corpusTable: String,
     corpusSchema: StructType, idCol: String, vecCol: String,
@@ -215,39 +243,10 @@ class VectorSync(srcWh: AtomicWarehouse, corpusTable: String,
 
   val cursorTable = s"${ivf.assignTable}/_sync/Cursor"
   protected def cursorWh: graft.sources.Warehouse = ivf.wh
+  protected def retractLedger: String = ivf.retractTable
+  protected def ingestLedger: String = ivf.ingestTable
 
-  protected def retract(ids: Seq[Long], version: Long): Unit =
-    ivf.retractVectorsLedgered(ids, version)
-
-  protected def admit(rows: DataFrame, version: Long): Unit =
-    ivf.addVectorsLedgered(rows, idCol, vecCol, version)
-
-  override protected def applyCommit(outIds: Seq[Long], in: Option[DataFrame],
-      version: Long): Unit =
-    ivf.applyChangeLedgered(outIds, in, idCol, vecCol, version)
-
-  /** Giant-churn retraction in cap-bounded chunks — [[FtsSync]]'s pattern
-    * (chunk sub-ids + completion marker) over cell assignments.
-    */
-  override protected def applyCommitFrame(out: DataFrame, in: Option[DataFrame],
-      version: Long): Unit = {
-    if (!ivf.retracted(version)) {
-      import org.apache.spark.sql.functions.col
-      val it = out.orderBy(col("id")).toLocalIterator()
-      val buf = scala.collection.mutable.ArrayBuffer[Long]()
-      var chunk = 0
-      def flush(): Unit = if (buf.nonEmpty) {
-        ivf.retractVectorsLedgered(buf.toSeq, FtsSync.chunkLedgerId(version, chunk))
-        chunk += 1
-        buf.clear()
-      }
-      while (it.hasNext) {
-        buf += it.next().getLong(0)
-        if (buf.size >= censusIdCap) flush()
-      }
-      flush()
-      ivf.ledgerRetraction(version)
-    }
-    in.foreach(admit(_, version))
-  }
+  protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
+      admits: Seq[(Long, DataFrame)]): Unit =
+    ivf.applyWindowLedgered(retracts, admits, idCol, vecCol)
 }

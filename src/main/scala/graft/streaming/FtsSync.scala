@@ -8,17 +8,14 @@ import org.apache.spark.sql.types.StructType
 /** The inverted index as an INCREMENTALLY-MAINTAINED MATERIALIZED VIEW of a
   * lakehouse corpus table — the retraction IVM idea (`IncrementalAgg` over
   * the change feed) applied to a non-aggregate derived structure, riding
-  * the generic [[ChangeFeedSync]] loop:
-  *
-  *   - `delete` / `update_preimage` rows → [[PersistedPostings.retractDocsLedgered]]
-  *     (merge-on-read tombstones + the negative stats row + the retraction
-  *     ledger row, one commit),
-  *   - `insert` / `update_postimage` rows → [[PersistedPostings.addDocsLedgered]]
-  *     (tokenize ONLY the slice, append postings + stats row, one commit),
-  *
-  * so an UPDATE is retraction-then-admission of the same id and the index
-  * after any DML mix is bit-identical to a from-scratch build over the live
-  * corpus ([[PersistedPostings.retractDocs]]'s equivalence argument, now
+  * the generic [[ChangeFeedSync]] loop. Each window run lands as ONE atomic
+  * index commit ([[PersistedPostings.applyWindowLedgered]]): merge-on-read
+  * tombstones for the pre-window postings of retracted ids, the postings of
+  * the last admitted text of admitted ids (tokenizing only that slice), the
+  * netted stats rows and every version's ledger rows — so an UPDATE is
+  * retraction-then-admission of the same id and the index after any DML mix
+  * is bit-identical to a from-scratch build over the live corpus
+  * ([[PersistedPostings.retractDocs]]'s equivalence argument, now
   * maintained continuously). Exactly-once, refusals, cursor fixpoint, and
   * the churn-not-size cost argument are [[ChangeFeedSync]]'s contract.
   *
@@ -35,74 +32,10 @@ class FtsSync(srcWh: AtomicWarehouse, corpusTable: String,
 
   val cursorTable = s"${fts.postingsTable}/_sync/Cursor"
   protected def cursorWh: graft.sources.Warehouse = fts.wh
+  protected def retractLedger: String = fts.retractTable
+  protected def ingestLedger: String = fts.ingestTable
 
-  protected def retract(ids: Seq[Long], version: Long): Unit =
-    fts.retractDocsLedgered(ids, version)
-
-  protected def admit(rows: DataFrame, version: Long): Unit =
-    fts.addDocsLedgered(rows, idCol, textCol, version)
-
-  override protected def applyCommit(outIds: Seq[Long], in: Option[DataFrame],
-      version: Long): Unit =
-    fts.applyChangeLedgered(outIds, in, idCol, textCol, version)
-
-  /** Multi-commit windows fuse into ONE atomic index commit
-    * ([[PersistedPostings.applyWindowLedgered]] — live postings, stats sums
-    * and ledger rows provably identical to the sequential replay), falling
-    * back to the per-commit default when any commit is over the census cap
-    * (its ids never reached the driver), the combined retraction set would
-    * exceed the cap, or any window version is already (partially) ledgered
-    * — the per-commit ledger probes converge those independently.
-    */
-  override protected def applyWindow(
-      commits: Seq[ChangeFeedSync.SyncCommit]): Unit = {
-    val fusable = commits.size > 1 &&
-      commits.forall(_.nOut <= censusIdCap) &&
-      commits.map(_.nOut).sum <= censusIdCap
-    if (!fusable || !fts.applyWindowLedgered(
-        commits.collect { case c if c.outIds.nonEmpty => c.version -> c.outIds },
-        commits.flatMap(c => c.in.map(c.version -> _)), idCol, textCol))
-      super.applyWindow(commits)
-  }
-
-  /** Giant-churn retraction ([[ChangeFeedSync.censusIdCap]] exceeded): the
-    * id frame streams through the driver in SORTED, cap-bounded chunks
-    * (`toLocalIterator` holds one partition at a time — peak driver memory
-    * is a chunk, never the commit's whole id set). Each chunk retracts
-    * under its own deterministic sub-id (negative, so it can never collide
-    * with a corpus version), making a crashed replay resume at the first
-    * unapplied chunk instead of double-decrementing N; the plain version
-    * id lands as the completion marker, so a fully-applied commit replays
-    * as a single ledger probe.
-    */
-  override protected def applyCommitFrame(out: DataFrame, in: Option[DataFrame],
-      version: Long): Unit = {
-    if (!fts.retracted(version)) {
-      import org.apache.spark.sql.functions.col
-      val it = out.orderBy(col("id")).toLocalIterator()
-      val buf = scala.collection.mutable.ArrayBuffer[Long]()
-      var chunk = 0
-      def flush(): Unit = if (buf.nonEmpty) {
-        fts.retractDocsLedgered(buf.toSeq, FtsSync.chunkLedgerId(version, chunk))
-        chunk += 1
-        buf.clear()
-      }
-      while (it.hasNext) {
-        buf += it.next().getLong(0)
-        if (buf.size >= censusIdCap) flush()
-      }
-      flush()
-      fts.ledgerRetraction(version)
-    }
-    in.foreach(admit(_, version))
-  }
-}
-
-object FtsSync {
-  /** Ledger sub-id for chunk `i` of version `v`'s giant retraction:
-    * negative, injective for v < 2^42 and i < 2^20 — corpus versions are
-    * positive ints, so the spaces can never collide.
-    */
-  private[streaming] def chunkLedgerId(v: Long, i: Int): Long =
-    -((v << 20) + i + 1)
+  protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
+      admits: Seq[(Long, DataFrame)]): Unit =
+    fts.applyWindowLedgered(retracts, admits, idCol, textCol)
 }

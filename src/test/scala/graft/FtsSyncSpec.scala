@@ -12,8 +12,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 /** The inverted index maintained as a materialized view of a corpus table's
   * change feed. Contract under test: after ANY row-level DML mix (append,
   * update, merge, DV delete) one sync makes BM25 over the index bit-exact
-  * to a from-scratch build over the live corpus; replays (wound-back
-  * cursor, repeated sync) no-op through the per-commit ledgers instead of
+  * to a from-scratch build over the live corpus, applying the window as ONE
+  * index commit (split only at over-cap commits, whose retraction chunks);
+  * replays (wound-back cursor, repeated sync, a half-applied legacy commit)
+  * drop every half the per-version ledgers already hold instead of
   * corrupting N; un-reconstructible windows refuse.
   */
 class FtsSyncSpec extends SparkSpec {
@@ -88,9 +90,13 @@ class FtsSyncSpec extends SparkSpec {
     val want = bm25(fts)
     val nWant = fts.corpusStats().agg(sum(col("n"))).head().getLong(0)
     // restored-from-backup maintenance driver: cursor back to genesis,
-    // replay EVERYTHING — every commit no-ops through its ledger entry
+    // replay EVERYTHING — every half of every version is ledgered, so the
+    // index hook never runs and only the cursor commits
     fts.wh.replace(mv.cursorTable, Seq(0L).toDF("version"))
+    val before = wh.versions().last
     mv.sync()
+    assert(wh.versions().last == before + 1,
+      s"expected only the cursor commit; head moved ${wh.versions().last - before}")
     assert(bm25(fts) == want, "replay corrupted the index")
     assert(fts.corpusStats().agg(sum(col("n"))).head().getLong(0) == nWant,
       "replay corrupted N through a re-applied stats row")
@@ -147,7 +153,7 @@ class FtsSyncSpec extends SparkSpec {
     // the intermediate text never reached the index (live or dead rows)
     assert(fts.postings().filter(col("t") === "mid").isEmpty,
       "fused window wrote an intermediate update's postings")
-    // replay converges: wind the cursor back, everything no-ops per-commit
+    // replay converges: wind the cursor back, every ledgered half is dropped
     val want = bm25(fts)
     fts.wh.replace(mv.cursorTable, Seq(0L).toDF("version"))
     mv.sync()
@@ -160,58 +166,75 @@ class FtsSyncSpec extends SparkSpec {
     wh.setChangeFeed("corpus", on = true)
     wh.append("corpus", (0L until 100L).map(i => (i, s"doc $i"))
       .toDF("doc_id", "text").coalesce(1))
-    val maxDriverIds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val frameCommits = new java.util.concurrent.atomic.AtomicInteger(0)
-    val retractedTable = "sync/Retracted"
+    // every hook call's retraction sets, in call order
+    val calls = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[Seq[(Long, Seq[Long])]]())
     val mv = new graft.streaming.ChangeFeedSync(wh, "corpus", docSchema, "doc_id") {
       protected def cursorWh: graft.sources.Warehouse = wh
       val cursorTable = "sync/Cursor"
+      protected def retractLedger: String = "sync/RetractLedger"
+      protected def ingestLedger: String = "sync/IngestLedger"
       override protected def censusIdCap: Int = 10
-      protected def retract(ids: Seq[Long], version: Long): Unit =
-        maxDriverIds.updateAndGet(m => math.max(m, ids.size))
-      protected def admit(rows: DataFrame, version: Long): Unit = ()
-      override protected def applyCommitFrame(out: DataFrame,
-          in: Option[DataFrame], version: Long): Unit = {
-        // distributed end-to-end: the ids land in a table without ever
-        // materializing on the driver
-        frameCommits.incrementAndGet()
-        wh.append(retractedTable, out)
-        in.foreach(admit(_, version))
-      }
+      protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
+          admits: Seq[(Long, DataFrame)]): Unit = calls.add(retracts)
     }
     // one small delete (under the cap) and one giant delete (over it)
     wh.deleteWhere("corpus", docSchema, Seq(ColIn("doc_id", Seq(1L, 2L, 3L))))
+    val small = wh.versions().last.toLong
     wh.deleteWhere("corpus", docSchema,
       Seq(ColIn("doc_id", (10L until 60L))))
+    val giant = wh.versions().last.toLong
     mv.sync()
-    assert(frameCommits.get() == 1, "exactly the over-cap commit takes the frame path")
-    assert(maxDriverIds.get() <= 10,
-      s"no driver-side id set may exceed the cap (saw ${maxDriverIds.get()})")
-    val spilled = wh.read(retractedTable, StructType(Seq(
-      StructField("id", LongType, nullable = true)))).collect().map(_.getLong(0)).toSet
-    assert(spilled == (10L until 60L).toSet, "the giant commit's ids must converge exactly")
+    import scala.jdk.CollectionConverters._
+    val sets = calls.asScala.toSeq.flatten
+    // chunks carry negative sub-ids; corpus versions are positive
+    val (chunks, plain) = sets.partition(_._1 < 0L)
+    assert(plain.map { case (v, ids) => (v, ids.toSet) } ==
+      Seq((small, Set(1L, 2L, 3L)), (giant, Set.empty[Long])),
+      "exactly the over-cap commit takes the chunked path (its version " +
+        s"arrives as an id-less completion marker): $plain")
+    assert(sets.map(_._2.size).max <= 10,
+      s"no driver-side id set may exceed the cap (saw ${sets.map(_._2.size).max})")
+    assert(chunks.flatMap(_._2).sorted == (10L until 60L),
+      "the giant commit's ids must converge exactly, each in one chunk")
     // idempotent: the cursor advanced, nothing replays
+    val n = calls.size
     val c = mv.sync()
-    assert(mv.sync() == c && frameCommits.get() == 1)
+    assert(mv.sync() == c && calls.size == n)
   }
 
   test("FtsSync giant-churn retraction applies in bounded chunks, stays bit-exact, replays convergent") {
     val (wh, fts, _) = fixture()
     wh.append("corpus", (0L until 60L).map(i => (i, s"alpha doc$i beta gamma"))
       .toDF("doc_id", "text").coalesce(1))
+    // the first attempt crashes after one chunk landed
+    var chunksBeforeCrash = 1
     val mv = new FtsSync(wh, "corpus", docSchema, "doc_id", "text", fts) {
       override protected def censusIdCap: Int = 7
+      override protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
+          admits: Seq[(Long, DataFrame)]): Unit = {
+        if (retracts.exists(_._1 < 0L)) { // a chunk (negative sub-id)
+          if (chunksBeforeCrash == 0) {
+            chunksBeforeCrash = -1
+            throw new IllegalStateException("crash between chunks")
+          }
+          chunksBeforeCrash -= 1
+        }
+        super.applyWindow(retracts, admits)
+      }
     }
     mv.sync()
-    // 40 retraction ids >> the cap → the frame path, 6 chunks of ≤7
+    // 40 retraction ids >> the cap → 6 chunks of ≤7
     wh.deleteWhere("corpus", docSchema, Seq(ColLt("doc_id", 40L)))
+    intercept[IllegalStateException](mv.sync())
+    // the retry skips the ledgered chunk instead of decrementing N twice
     mv.sync()
     assert(bm25(fts) == bm25(freshOver(wh.read("corpus", docSchema))),
       "chunked giant retraction diverged from a fresh build")
     assert(fts.corpusStats().agg(sum(col("n"))).head().getLong(0) == 20L,
       "N must telescope to the live count through the chunked stats rows")
-    // a wound-back cursor replays: chunk ledgers + the completion marker
-    // make the giant commit a no-op probe, never a double decrement
+    // a wound-back cursor replays: the completion marker drops the giant
+    // commit's retraction, never a double decrement
     fts.wh.replace(mv.cursorTable, Seq(0L).toDF("version"))
     mv.sync()
     assert(bm25(fts) == bm25(freshOver(wh.read("corpus", docSchema))),
@@ -326,8 +349,8 @@ class FtsSyncSpec extends SparkSpec {
     wh.updateWhere("corpus", docSchema, Seq(ColEq("doc_id", 1L)),
       Seq("text" -> lit("alpha zulu")))
     mv.sync()
-    // corpus UPDATE (+1), fused retract+admit apply (+1), cursor (+1) —
-    // the split path would cost 4 (separate retract and admit commits)
+    // corpus UPDATE (+1), the window's one retract+admit index commit (+1),
+    // cursor (+1) — separate retract and admit commits would cost 4
     assert(wh.versions().last == before + 3,
       s"expected 3 commits (update, fused apply, cursor); head moved " +
         s"${wh.versions().last - before}")
@@ -351,6 +374,30 @@ class FtsSyncSpec extends SparkSpec {
     mv.sync() // must skip the done retraction, land only the admission
     assert(bm25(fts) == bm25(freshOver(wh.read("corpus", docSchema))),
       "recovery from a half-applied commit diverged")
+    assert(fts.corpusStats().agg(sum(col("n"))).head().getLong(0)
+      == wh.read("corpus", docSchema).count())
+  }
+
+  test("a window mixing a legacy half-applied commit with fresh ones lands as ONE index commit") {
+    val (wh, fts, mv) = fixture()
+    wh.append("corpus", Seq((1L, "alpha beta"), (2L, "beta gamma"),
+      (3L, "gamma delta")).toDF("doc_id", "text").coalesce(1))
+    mv.sync()
+    wh.updateWhere("corpus", docSchema, Seq(ColEq("doc_id", 1L)),
+      Seq("text" -> lit("alpha delta")))
+    // the OLD two-commit driver crashed between its halves of this commit
+    fts.retractDocsLedgered(Seq(1L), wh.versions().last.toLong)
+    // fresh churn behind it, including the half-applied doc again
+    wh.updateWhere("corpus", docSchema, Seq(ColEq("doc_id", 1L)),
+      Seq("text" -> lit("alpha zulu")))
+    wh.deleteWhereDv("corpus", docSchema, Seq(ColEq("doc_id", 2L)))
+    wh.append("corpus", Seq((4L, "epsilon zulu")).toDF("doc_id", "text").coalesce(1))
+    val before = wh.versions().last
+    mv.sync()
+    assert(wh.versions().last == before + 2,
+      s"expected one index commit plus the cursor; head moved ${wh.versions().last - before}")
+    assert(bm25(fts) == bm25(freshOver(wh.read("corpus", docSchema))),
+      "mixed legacy/fresh window diverged from a fresh build")
     assert(fts.corpusStats().agg(sum(col("n"))).head().getLong(0)
       == wh.read("corpus", docSchema).count())
   }
