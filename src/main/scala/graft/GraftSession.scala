@@ -93,6 +93,14 @@ object GraftSession {
       // generations write TIMESTAMP(MICROS) — SparkEntry.eventsTable
       // normalizes either shape to the same nanos long.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // generated-class cache (LRU, default 100 entries). One fresh price
+      // list through Pipeline compiles ~147 distinct classes and its replay
+      // ~22 more, so at 100 every entry is evicted before its next use and
+      // each file re-pays ~145 Janino compiles (2.5-3.6 s on 4 cores); at
+      // 1000 a steady-state file compiles 8-12 (its per-file literals) and
+      // a replay none. STATIC conf: the first session in the JVM fixes it,
+      // a later builder's value is ignored
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
   def get(master: String = "local[32]"): SparkSession = {

@@ -43,7 +43,9 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
     // rows read back — the three read-back count() jobs were pure overhead),
     // and the three independent appends run concurrently so their job
     // latencies collapse into one stage wave (guide §1.5/§2.6): a processCsv
-    // run paid 6 serial driver jobs here, now 1 wave.
+    // run paid 6 serial driver jobs here, now 1 wave. They stage as ONE
+    // transaction (one manifest commit on an AtomicWarehouse; pass-through,
+    // same concurrency, on the base warehouse).
     val stagingDir = s"staging/$batchGuid"
     import org.apache.spark.sql.{functions => F, Observation}
     val staged = Seq(
@@ -52,13 +54,16 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
       val obs = Observation(s"staging-$batchGuid-$t")
       (t, df.observe(obs, F.count(F.lit(1)).as("n")), obs)
     }
-    Warehouse.settleAll(staged.map { case (t, df, _) =>
-      () => wh.append(s"$stagingDir/$t", df) })
+    wh.atomically { w =>
+      Warehouse.settleAll(wh.spark, staged.map { case (t, df, _) =>
+        () => w.append(s"$stagingDir/$t", df) })
+    }
     def observedCount(obs: Observation): Long =
       obs.get("n") match { case n: Number => n.longValue(); case _ => 0L }
-    val sp = wh.spark.read.parquet(wh.path(s"$stagingDir/Provider"))
-    val spr = wh.spark.read.parquet(wh.path(s"$stagingDir/Product"))
-    val spp = wh.spark.read.parquet(wh.path(s"$stagingDir/Provider_Product"))
+    // read back with the staged schemas: an inferring read runs one
+    // footer-schema driver job per table
+    val Seq(sp, spr, spp) = staged.map { case (t, df, _) =>
+      wh.spark.read.schema(df.schema).parquet(wh.path(s"$stagingDir/$t")) }
     val summary = StagingSummary(observedCount(staged(0)._3),
       observedCount(staged(1)._3), observedCount(staged(2)._3))
 
@@ -72,7 +77,7 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
     // its own staged writes. Each merged frame is consumed exactly once
     // (replace stages BEFORE swapping/publishing, so the plan's reads of
     // the old dim stay valid during the write) — no cache/materialize
-    // step; each merge is one job. Staging-table writes stay OUTSIDE the
+    // step; each merge is one job. Staging-table writes stay OUTSIDE this
     // transaction: they are batch-scoped scratch, deleted at commit and
     // orphaned (not corrupted) by a crash.
     wh.atomically { w =>

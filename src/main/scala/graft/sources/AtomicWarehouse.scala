@@ -1088,7 +1088,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       * invisible until the commit, so independent thunks only share the
       * (synchronized) stage bookkeeping.
       */
-    override def stageAll(writes: Seq[() => Unit]): Unit = Warehouse.settleAll(writes)
+    override def stageAll(writes: Seq[() => Unit]): Unit = Warehouse.settleAll(spark, writes)
   }
 
   // ---- public transactional surface ---------------------------------------

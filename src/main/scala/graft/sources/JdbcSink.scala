@@ -30,27 +30,11 @@ class JdbcSink(val spark: SparkSession, url: String,
   }
 
   def read(table: String): DataFrame =
-    withRetry()(spark.read.jdbc(url, table, props))
+    Warehouse.withRetry()(spark.read.jdbc(url, table, props))
 
   def append(table: String, df: DataFrame): Unit =
-    withRetry()(df.write.mode(SaveMode.Append).jdbc(url, table, props))
+    Warehouse.withRetry()(df.write.mode(SaveMode.Append).jdbc(url, table, props))
 
   def overwrite(table: String, df: DataFrame): Unit =
-    withRetry()(df.write.mode(SaveMode.Overwrite).jdbc(url, table, props))
-
-  def withRetry[T](attempts: Int = 3, firstBackoffMs: Long = 1000)(f: => T): T = {
-    var backoff = firstBackoffMs
-    var remaining = attempts
-    while (true) {
-      try return f
-      catch {
-        case e: Exception =>
-          remaining -= 1
-          if (remaining <= 0) throw e
-          Thread.sleep(backoff)
-          backoff *= 2
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+    Warehouse.withRetry()(df.write.mode(SaveMode.Overwrite).jdbc(url, table, props))
 }

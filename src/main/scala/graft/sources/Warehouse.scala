@@ -186,8 +186,27 @@ class Warehouse(val spark: SparkSession, val root: String) {
     */
   def atomically(fn: Warehouse => Unit): Unit = fn(this)
 
+  /** Connection "awakening" retry — see [[Warehouse.withRetry]]. */
+  def withRetry[T](attempts: Int = 3, firstBackoffMs: Long = 1000)(f: => T): T =
+    Warehouse.withRetry(attempts, firstBackoffMs)(f)
+}
+
+object Warehouse {
+  /** Graft's own staging threads: daemon, grown on demand (a thunk may
+    * itself settle nested writes, which a bounded pool could deadlock on).
+    */
+  private lazy val stagingPool: java.util.concurrent.ExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"graft-stage-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
   /** Connection "awakening" retry: ≤3 attempts, exponential backoff 1s, 2s —
-    * mirrors core/database.py:38-50 as a sink-connector concern.
+    * mirrors core/database.py:38-50 as a sink-connector concern. A
+    * cancelled Spark job is not retried: the cancel is the caller's intent.
     */
   def withRetry[T](attempts: Int = 3, firstBackoffMs: Long = 1000)(f: => T): T = {
     var backoff = firstBackoffMs
@@ -197,28 +216,35 @@ class Warehouse(val spark: SparkSession, val root: String) {
       catch {
         case e: Exception =>
           remaining -= 1
-          if (remaining <= 0) throw e
+          if (remaining <= 0 || cancelled(e)) throw e
           Thread.sleep(backoff)
           backoff *= 2
       }
     }
     throw new IllegalStateException("unreachable")
   }
-}
 
-object Warehouse {
+  /** Whether `e` (or a cause) is a Spark job cancellation. */
+  private def cancelled(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case s: org.apache.spark.SparkException => s.getCondition == "SPARK_JOB_CANCELLED"
+      case _ => false
+    }
+
   /** Run independent thunks concurrently and wait for EVERY one to settle
     * before the first failure (if any) propagates — no sibling is left
-    * mid-write. The wait is unbounded: each future is failure-transformed,
-    * so it cannot hang on an error, and a large write must not abort at a
-    * timeout while its siblings keep running.
+    * mid-write. Each thunk runs under the caller's Spark local properties,
+    * so its jobs carry the caller's description and job group (a
+    * `cancelJobGroup` reaches them). The wait is unbounded: a large write
+    * must not abort at a timeout while its siblings keep running.
     */
-  def settleAll(thunks: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val settled = Await.result(
-      Future.sequence(thunks.map(f => Future(f()).transform(scala.util.Success(_)))),
-      scala.concurrent.duration.Duration.Inf)
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
+  def settleAll(spark: SparkSession, thunks: Seq[() => Unit]): Unit = {
+    val pending = thunks.map(f =>
+      org.apache.spark.sql.graft.shims.withCallerContext(spark, stagingPool)(f()))
+    val failures = pending.flatMap { p =>
+      try { p.get(); None }
+      catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach(e => throw e)
   }
 }

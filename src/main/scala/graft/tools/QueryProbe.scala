@@ -1,7 +1,9 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-query driver-job breakdown: runs each named SparkEntry query once
   * (after one sf0.001 warmup) under a listener that records every driver
@@ -11,8 +13,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * commit overhead), so the job count and the per-job histogram — not stage
   * CPU — are the cost model that says what to cut (guide §1: measure first;
   * the job list maps 1:1 to collect()s, writes, and commits in the
-  * operator). Usage: runMain graft.tools.QueryProbe <query> [<query>...]
-  * [--sf <dir>]
+  * operator). Each line also carries the query's Janino compile count and
+  * summed compile time: generated classes missing from Spark's codegen
+  * cache, i.e. a cache sized below the working set shows up as compiles
+  * that do not fall after the warmup. Usage: runMain graft.tools.QueryProbe
+  * <query> [<query>...] [--sf <dir>]
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
@@ -52,15 +57,20 @@ object QueryProbe {
       catch { case e: Throwable => System.err.println(s"[probe] warmup $name: ${e.getMessage}") }
       GraftSession.stopAllStreams(spark)
       jobs.clear(); starts.clear()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       recording = true
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wallS = (System.nanoTime() - t0) / 1e9
       recording = false
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
       import scala.jdk.CollectionConverters._
       val js = jobs.asScala.toVector
       val totalJobS = js.map(_.ms).sum / 1e3
-      println(f"[probe] $name: wall=$wallS%.2fs jobs=${js.size} job_covered=$totalJobS%.2fs")
+      println(f"[probe] $name: wall=$wallS%.2fs jobs=${js.size} job_covered=$totalJobS%.2fs" +
+        f" compiles=$compiles compile=$compileS%.2fs")
       // histogram: group identical call sites, show count + summed ms
       js.groupBy(_.site).toVector.map { case (s, g) => (s, g.size, g.map(_.ms).sum) }
         .sortBy(-_._3).take(30).foreach { case (s, n, ms) =>

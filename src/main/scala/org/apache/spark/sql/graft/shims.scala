@@ -23,6 +23,19 @@ object shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Run `body` on `exec` under the CALLER's Spark context: a clone of its
+    * local properties (job group, job description, SQL execution id,
+    * scheduler pool) and its active session. This is
+    * `SQLExecution.withThreadLocalCaptured`, which takes the `classic`
+    * session. A pool thread otherwise keeps the local properties it
+    * inherited from whichever thread created it.
+    */
+  def withCallerContext[T](spark: org.apache.spark.sql.SparkSession,
+      exec: java.util.concurrent.ExecutorService)(body: => T)
+      : java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], exec)(body)
+
   /** Catalyst expression → V2 filter Predicate (`DataSourceV2Strategy` is
     * `private[sql]`) — the SQL catalog's DELETE rewrite uses it to decide
     * whether a condition reaches the engine's delete surface.

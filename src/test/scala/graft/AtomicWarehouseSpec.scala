@@ -680,4 +680,75 @@ class AtomicWarehouseSpec extends SparkSpec {
     assert(at("t", head) == Set((9L, "z"), (10L, "y"), (11L, "w")),
       "the snapshot version itself must remain readable")
   }
+
+  test("concurrent staging runs under the caller's job description and group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-aw-ctx-").toString)
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties.getProperty("spark.job.description")).exists(_.contains(id)))
+          seen.add((j.properties.getProperty("spark.job.description"),
+            j.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    def stageTwo(group: String): Unit = {
+      sc.setJobGroup(group, s"$group $id")
+      try wh.atomically(w => w.stageAll(Seq(
+        () => w.append(s"$group/a", Seq((1L, "a")).toDF("id", "v")),
+        () => w.append(s"$group/b", Seq((2L, "b")).toDF("id", "v")))))
+      finally sc.clearJobGroup()
+    }
+    try {
+      // the staging threads come into being under the first caller's
+      // properties; the second caller's writes must not inherit them
+      stageTwo(s"first-$id")
+      stageTwo(s"second-$id")
+      import scala.jdk.CollectionConverters._
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def second = seen.asScala.toSeq.filter(_._2 == s"second-$id")
+      // listener events arrive asynchronously
+      while (second.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      val all = seen.asScala.toSeq
+      assert(second.size >= 2, s"second caller's writes ran as: $all")
+      assert(all.forall { case (desc, group) => desc == s"$group $id" },
+        s"a staged job ran under another caller's description: $all")
+    } finally sc.removeSparkListener(listener)
+    assert(rows(wh, s"second-$id/a") == Set((1L, "a")))
+    assert(rows(wh, s"second-$id/b") == Set((2L, "b")))
+  }
+
+  test("a caller's cancelJobGroup cancels its concurrently staged writes") {
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-aw-cancel-").toString)
+    val sc = spark.sparkContext
+    val group = s"cancel-${java.util.UUID.randomUUID()}"
+    // the slow write's tasks touch this file once they run; the caller's
+    // side then cancels its own job group
+    val marker = Files.createTempDirectory("graft-aw-cancel-mark-").resolve("running").toString
+    val canceller = new Thread(() => {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!new java.io.File(marker).exists && System.nanoTime() < deadline) Thread.sleep(20)
+      sc.cancelJobGroup(group)
+    })
+    canceller.setDaemon(true)
+    // 2 tasks × 200 rows × 100 ms: an uncancelled write takes ~20 s
+    val nap = udf { (i: Long) => new java.io.File(marker).createNewFile(); Thread.sleep(100); i }
+    val slow = spark.range(0, 400, 1, 2).toDF("id")
+      .select(nap(col("id")).as("id"), lit("x").as("v"))
+    val t0 = System.nanoTime()
+    try {
+      canceller.start()
+      sc.setJobGroup(group, "slow staged write", interruptOnCancel = true)
+      val e = intercept[Exception](wh.atomically(w => w.stageAll(Seq(
+        () => w.append("slow", slow),
+        () => w.append("quick", Seq((1L, "q")).toDF("id", "v"))))))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.toLowerCase.contains("cancel")), e.toString)
+    } finally sc.clearJobGroup()
+    assert((System.nanoTime() - t0) / 1e9 < 15, "the write ran to completion")
+    assert(rows(wh, "slow").isEmpty)
+    assert(rows(wh, "quick").isEmpty, "an aborted transaction published a sibling")
+  }
 }

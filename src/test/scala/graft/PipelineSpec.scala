@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.model.Schemas
 import graft.operators.Canonicalize
-import graft.sources.{CsvSource, InvoiceExtractor, Warehouse}
+import graft.sources.{AtomicWarehouse, CsvSource, InvoiceExtractor, Warehouse}
 import org.apache.spark.sql.functions._
 
 /** Component/integration tier (reference tier-2, SURVEY.md §5): full EP1-EP4
@@ -83,6 +83,35 @@ class PipelineSpec extends SparkSpec {
     assert(p.wh.read("dims/Provider", Schemas.provider).count() == 4)
     assert(p.wh.read("dims/Product", Schemas.product).count() == 4)
     assert(p.wh.read("dims/Provider_Product", Schemas.providerProduct).count() == 4)
+  }
+
+  test("generated classes survive across files: a replay compiles none, a later file few") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val p = new Pipeline(spark,
+      new AtomicWarehouse(spark, Files.createTempDirectory("graft-wh-cg-").toString))
+    // Janino compiles run by `step` (one histogram sample per compile)
+    def compiles(step: => Unit): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      step
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    def ingest(name: String, csv: String): Long = compiles {
+      val res = p.processCsv(CsvSource.readString(spark, csv), "products", name)
+      assert(res.status, res.message)
+    }
+    def file(k: Int) = sampleCsv
+      .replace("Vicente,1.347", s"Vicente,1.3$k")
+      .replace("Kitty,350", s"Kitty $k,35$k") +
+      s"Galleta $k 200g,0$k/04/2025,Proveedor $k,9${k}0,,,,\n"
+    val steps = Seq("fresh A" -> ingest("a.csv", file(1)), "replay A" -> ingest("a.csv", file(1)),
+      "fresh B" -> ingest("b.csv", file(2)), "replay B" -> ingest("b.csv", file(2)),
+      "fresh C" -> ingest("c.csv", file(3)))
+    info(steps.mkString("compiles: ", ", ", ""))
+    val n = steps.toMap
+    // at Spark's default cap (100 classes) a file's ~150 classes evict each
+    // other between files: ~22 compiles per replay and ~145 per fresh file
+    assert(n("replay B") == 0, steps.mkString(", "))
+    assert(n("fresh C") < 30, steps.mkString(", "))
   }
 
   test("EP1 update semantics: price/date change flows into Provider_Product") {
