@@ -44,8 +44,7 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
     // and the three independent appends run concurrently so their job
     // latencies collapse into one stage wave (guide §1.5/§2.6): a processCsv
     // run paid 6 serial driver jobs here, now 1 wave. They stage as ONE
-    // transaction (one manifest commit on an AtomicWarehouse; pass-through,
-    // same concurrency, on the base warehouse).
+    // transaction (one manifest commit).
     val stagingDir = s"staging/$batchGuid"
     import org.apache.spark.sql.{functions => F, Observation}
     val staged = Seq(
@@ -69,14 +68,13 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
 
     // merge staging → dims (J1-J5), in dependency order, as ONE declared
     // transaction — the boundary the reference gets from SQL Server
-    // (etl_orchestrator.py:168-189). On the base warehouse `atomically` is
-    // pass-through (the documented re-run-converges contract applies,
-    // CrashConsistencySpec); on an AtomicWarehouse a crash mid-merge leaves
-    // every dim at its pre-batch snapshot. Later merges read dims the
+    // (etl_orchestrator.py:168-189): a crash mid-merge leaves every dim at
+    // its pre-batch snapshot and a plain re-run converges
+    // (CrashConsistencySpec). Later merges read dims the
     // earlier replaces wrote, so the transactional view's reads must see
     // its own staged writes. Each merged frame is consumed exactly once
-    // (replace stages BEFORE swapping/publishing, so the plan's reads of
-    // the old dim stay valid during the write) — no cache/materialize
+    // (replace stages BEFORE publishing, so the plan's reads of the old
+    // dim stay valid during the write) — no cache/materialize
     // step; each merge is one job. Staging-table writes stay OUTSIDE this
     // transaction: they are batch-scoped scratch, deleted at commit and
     // orphaned (not corrupted) by a crash.

@@ -800,7 +800,7 @@ object SparkEntry {
     // (core/etl_orchestrator.py:280-350 status machine).
     q("etl_ledger") = (s, dir) => {
       import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-ledger-").toString)
       val p = new Pipeline(s, wh)
       val good = graft.sources.CsvSource.readString(s, ledgerCsv)
@@ -850,7 +850,7 @@ object SparkEntry {
     // reference's result envelope (count / status / artifact name —
     // core/etl_orchestrator.py:369-415). Oracle = literal expected rows
     q("etl_invoice_persist") = (s, dir) => {
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-invpersist-").toString)
       val p = new Pipeline(s, wh)
       val res = p.processInvoice(Array[Byte](1), "invoice.jpg",
@@ -871,7 +871,7 @@ object SparkEntry {
     // store). Oracle = literal expected rows
     q("etl_validate") = (s, dir) => {
       import s.implicits._
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-validate-").toString)
       val p = new Pipeline(s, wh)
       val cases = Seq(
@@ -891,7 +891,7 @@ object SparkEntry {
     // (core/etl_orchestrator.py:327-336). Oracle = literal expected counts
     q("etl_staging_counts") = (s, dir) => {
       import s.implicits._
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-staging-").toString)
       val sum = new Pipeline(s, wh)
         .runBatch(graft.sources.CsvSource.readString(s, ledgerCsv))
@@ -918,7 +918,7 @@ object SparkEntry {
     // Oracle = literal expected lifecycle flags
     q("etl_warehouse_props") = (s, dir) => {
       import s.implicits._
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-wprops-").toString)
       val before = wh.exists("t")
       wh.append("t", Seq((1L, "a")).toDF("id", "v"))
@@ -3242,7 +3242,7 @@ object SparkEntry {
           case r if r.isNullAt(0) => 0L
           case r => r.getLong(0) / 3
         }
-        val wh = new graft.sources.Warehouse(s,
+        val wh = new graft.sources.AtomicWarehouse(s,
           java.nio.file.Files.createTempDirectory("graft-cc-").toString)
         val cc = new graft.operators.PersistedComponents(wh)
         cc.build(pairs.filter(col("id_b") <= cut))
@@ -3288,7 +3288,7 @@ object SparkEntry {
       }
       val pairSch = STT(Seq(SF("id_a", LongType, nullable = false),
         SF("id_b", LongType, nullable = false), SF("jaccard", DT, nullable = true)))
-      val cc = new graft.operators.PersistedComponents(new graft.sources.Warehouse(s,
+      val cc = new graft.operators.PersistedComponents(new graft.sources.AtomicWarehouse(s,
         Files.createTempDirectory("graft-dsc-cc-").toString))
       cc.build(awh.spark.createDataFrame(
         awh.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pairSch))
@@ -3315,7 +3315,7 @@ object SparkEntry {
           case r if r.isNullAt(0) => 0L
           case r => r.getLong(0) / 2
         }
-        val wh = new graft.sources.Warehouse(s,
+        val wh = new graft.sources.AtomicWarehouse(s,
           java.nio.file.Files.createTempDirectory("graft-ccs-").toString)
         val cc = new graft.operators.PersistedComponents(wh)
         cc.build(pairs.filter(col("id_b") <= cut))
@@ -3517,7 +3517,7 @@ object SparkEntry {
         (1L, "merge join order sort"),
         (2L, "vector window stream"),
         (3L, "customer data value zzz")).toDF("q_id", "qtext")
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-fts-").toString)
       val fts = new PersistedPostings(wh)
       val split = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
@@ -3576,7 +3576,7 @@ object SparkEntry {
         (1L, "merge join"),
         (2L, "table scan"),
         (3L, "value table part")).toDF("q_id", "qtext")
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-phrase-").toString)
       val fts = new PersistedPostings(wh)
       fts.build(t(s, dir, "documents"), "doc_id", "text")
@@ -3759,7 +3759,7 @@ object SparkEntry {
     // incremental-append ≡ full-assign
     q("sim_ivf_persisted") = (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-ivfp-").toString)
       val ivf = new PersistedIvf(wh)
       ivf.buildWith(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
@@ -3792,7 +3792,7 @@ object SparkEntry {
     // vec column, the 4× candidate-I/O saving with no second table
     q("sim_ivf_sq8") = (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-ivfsq-").toString)
       val ivf = new PersistedIvf(wh)
       ivf.buildWith(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
@@ -3813,7 +3813,7 @@ object SparkEntry {
     // path encodes only the fresh batch
     q("sim_ivf_pq") = (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-ivfpq-").toString)
       val ivf = new PersistedIvf(wh)
       ivf.buildWith(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
@@ -3837,7 +3837,7 @@ object SparkEntry {
     // the oracle replays ADC → rank ≤ 20 → exact cosine → re-rank in SQL
     q("sim_rerank") = (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-rerank-").toString)
       val ivf = new PersistedIvf(wh)
       ivf.buildWith(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
@@ -3861,7 +3861,7 @@ object SparkEntry {
     // assigned cells (the seed convention applied to residuals)
     q("sim_ivf_pq_residual") = (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-ivfpqr-").toString)
       val ivf = new PersistedIvf(wh)
       ivf.buildWith(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
@@ -4065,7 +4065,7 @@ object SparkEntry {
       val feats = Multimodal.extractFeatures(s, media, "doc_id",
           Multimodal.MediaDecoder.DeterministicStub)
         .select(col("doc_id"), col("feature"))
-      val wh = new graft.sources.Warehouse(s,
+      val wh = new graft.sources.AtomicWarehouse(s,
         java.nio.file.Files.createTempDirectory("graft-mmann-").toString)
       val ivf = new PersistedIvf(wh)
       ivf.buildWith(feats, "doc_id", "feature",

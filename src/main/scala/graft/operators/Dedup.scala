@@ -339,7 +339,7 @@ object Dedup {
       minSigMatches)
     prefilterAndVerify(cand0, sigs, df, id, text, k, numHashes, minSigMatches,
       minJaccard, releaseAfterCandidates = Some(() => sigs.unpersist(false)),
-      prefiltered = true)
+      prefiltered = true)._1
   }
 
   /** Stages 2+3 of the LSH pipeline, shared by the full-corpus and
@@ -374,11 +374,16 @@ object Dedup {
     * and skip the barrier entirely — it would buy nothing. (The 14-23 s
     * figures earlier single-shot benches attributed to this query were
     * CPU-contention noise, resolved by the median-of-N bench.)
+    *
+    * Returns the pairs plus a hook that releases the materialized candidate
+    * set; call it once the pairs have been consumed (a caller looping over
+    * batches otherwise keeps one cached RDD per call until GC).
     */
   private def prefilterAndVerify(cand0In: DataFrame, sigs: DataFrame, docs: DataFrame,
       id: String, text: String, k: Int, numHashes: Int, minSigMatches: Int,
       minJaccard: Double, releaseAfterCandidates: Option[() => Unit],
-      pointLookupMaxIds: Int = 0, prefiltered: Boolean = false): DataFrame = {
+      pointLookupMaxIds: Int = 0,
+      prefiltered: Boolean = false): (DataFrame, () => Unit) = {
     // Point-lookup mode (incremental/streaming paths, where sigs and docs are
     // FILE-BACKED index tables): materialize the band-collision candidate set
     // — small by construction, near-dups plus the banding false-positive tail
@@ -456,7 +461,7 @@ object Dedup {
       .select(col(id), distinctShingles(col(text), k).as("sh"))
     val shA = sh.alias("sha")
     val shB = sh.alias("shb")
-    cand.join(shA, col("id_a") === col(s"sha.$id"))
+    (cand.join(shA, col("id_a") === col(s"sha.$id"))
       .join(shB, col("id_b") === col(s"shb.$id"))
       // IntersectCountExpr ≡ size(array_intersect(...)) without building
       // the intersection array per pair — the count is all jaccard needs,
@@ -471,7 +476,8 @@ object Dedup {
       .withColumn("jaccard", col("inter").cast("double")
         / (size(col("sha.sh")) + size(col("shb.sh")) - col("inter")))
       .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .select(col("id_a"), col("id_b"), col("jaccard")),
+      () => { cand.unpersist(false); () })
   }
 
   /** Incremental near-dup detection: a NEW batch against an already-deduped
@@ -512,7 +518,23 @@ object Dedup {
       probeKeyLimit: Int = 0,
       pointLookupMaxIds: Int = 0,
       bandBloom: Option[org.apache.spark.util.sketch.BloomFilter] = None,
-      corpusBandsCarrySigs: Boolean = false): DataFrame = {
+      corpusBandsCarrySigs: Boolean = false): DataFrame =
+    incrementalLshPairsReleasable(corpus, corpusSigs, fresh, id, text, k, numHashes,
+      rowsPerBand, minJaccard, minSigMatchesOverride, freshSigsPre, persistCorpusSigs,
+      corpusBandsPre, probeKeyLimit, pointLookupMaxIds, bandBloom, corpusBandsCarrySigs)._1
+
+  /** [[incrementalLshVerifiedPairs]] plus the hook releasing its cached
+    * candidate set — for per-batch callers ([[graft.streaming.DedupStream]])
+    * that run it once per micro-batch and release after the commit.
+    */
+  private[graft] def incrementalLshPairsReleasable(corpus: DataFrame,
+      corpusSigs: DataFrame, fresh: DataFrame, id: String, text: String, k: Int,
+      numHashes: Int, rowsPerBand: Int, minJaccard: Double,
+      minSigMatchesOverride: Int, freshSigsPre: Option[DataFrame],
+      persistCorpusSigs: Boolean, corpusBandsPre: Option[DataFrame],
+      probeKeyLimit: Int, pointLookupMaxIds: Int,
+      bandBloom: Option[org.apache.spark.util.sketch.BloomFilter],
+      corpusBandsCarrySigs: Boolean): (DataFrame, () => Unit) = {
     val minSigMatches =
       if (minSigMatchesOverride >= 0) minSigMatchesOverride
       else math.max(1, math.floor(numHashes * minJaccard).toInt - 1)

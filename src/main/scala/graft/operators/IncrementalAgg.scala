@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.AtomicWarehouse
+import graft.sources.{AtomicWarehouse, Warehouse}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -143,11 +143,10 @@ class IncrementalAgg(wh: AtomicWarehouse, name: String,
       case _ => aggOf(wh.readAt(srcTable, srcSchema, head))
     }
     wh.atomically { w =>
-      // state and cursor are independent staged writes — concurrent on a
-      // transactional view ([[graft.sources.Warehouse.stageAll]]: the
-      // cursor write is a one-row local relation, so this collapses one
-      // full write wave per refresh), sequential on the base warehouse
-      w.stageAll(Seq(
+      // state and cursor are independent staged writes, run concurrently
+      // (the cursor write is a one-row local relation, so this collapses
+      // one full write wave per refresh)
+      Warehouse.settleAll(wh.spark, Seq(
         () => w.replace(stateTable, newState),
         () => w.replace(cursorTable, wh.spark.createDataFrame(
           java.util.Arrays.asList(org.apache.spark.sql.Row(head.toLong)), cursorSchema))))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Transforms
-import graft.sources.Warehouse
+import graft.sources.{AtomicWarehouse, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
@@ -42,7 +42,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType
   * `probeCellLimit` distinct cells the filter is dropped (a full scan beats
   * a 10k-literal predicate).
   */
-class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000) {
+class PersistedIvf(private[graft] val wh: AtomicWarehouse, probeCellLimit: Int = 1000) {
 
   val centroidsTable = "ann/Centroids"
   val assignTable = "ann/CellAssignments"
@@ -251,9 +251,8 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
       val (n, meanCos) = meanCosOf(assigned)
       wh.atomically { w =>
         w.replace(centroidsTable, cents)
-        // a fresh codebook replaces; a reused one is NOT rewritten (its
-        // encode plan reads the very files a replace would overwrite on the
-        // base warehouse)
+        // a fresh codebook replaces; a reused one is unchanged and is not
+        // rewritten
         cbNew.foreach { cb =>
           w.replace(pqCodebookTable, cb)
           w.replace(pqMetaTable, wh.spark.createDataFrame(
@@ -292,10 +291,8 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
     * atomic section — the streaming-replay guard ([[graft.streaming.IvfStream]]):
     * a checkpoint retry of an already-committed micro-batch sees its id in the
     * ledger and no-ops instead of double-appending assignment rows (which would
-    * duplicate candidates into every later probe). Exactly-once therefore needs
-    * the admit to be transactional — run streams on an
-    * [[graft.sources.AtomicWarehouse]]; on the base warehouse a crash between
-    * the sequential appends downgrades this to at-least-once.
+    * duplicate candidates into every later probe); a crash mid-admit commits
+    * none of it (exactly-once).
     */
   def addVectorsLedgered(fresh: DataFrame, idCol: String, vecCol: String,
       batchId: Long): Unit =
@@ -397,7 +394,7 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
         () => w.append(table, wh.spark.createDataFrame(
           java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
       }
-      def rest(w: Warehouse): Unit = w.stageAll(Seq(
+      def rest(w: Warehouse): Unit = Warehouse.settleAll(wh.spark, Seq(
         assigned.map(a => () => w.append(assignTable,
           withCode(withPq(a.drop("cos6"), currentCb(), pqResidual(), centroids()))
             .sortWithinPartitions("cell"))),
@@ -407,12 +404,7 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
       ).flatten)
       val deleted =
         if (ids.isEmpty) 0L
-        else (wh match {
-          case a: graft.sources.AtomicWarehouse => a
-          case _ => throw new IllegalStateException(
-            "retractVectors needs an AtomicWarehouse — merge-on-read " +
-              "retraction rides deletion vectors")
-        }).deleteWhereDv(assignTable, assignSchema,
+        else wh.deleteWhereDv(assignTable, assignSchema,
           Seq(graft.sources.ColIn("id", ids)), alsoInTx = rest).deleted
       // ids that match no live assignment tombstone nothing (deleteWhereDv
       // no-ops WITHOUT committing), but the stats, the admission and the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Warehouse
+import graft.sources.{AtomicWarehouse, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * probe and the IVF probed-cell slice. Above the cap the filter degrades to
   * a broadcast semi-join over a full scan (exact either way).
   */
-class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 1000) {
+class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: Int = 1000) {
 
   val postingsTable = "fts/Postings"
   val statsTable = "fts/CorpusStats"
@@ -149,11 +149,8 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
 
   /** [[addDocs]] plus a `(batch_id)` ingest-ledger row written in the SAME
     * atomic section: a checkpoint retry of an already-committed micro-batch
-    * sees its id and no-ops instead of double-counting every document.
-    * Exactly-once therefore needs the admit to be transactional — run
-    * streams on an [[graft.sources.AtomicWarehouse]]; on the base warehouse
-    * a crash between the sequential appends downgrades this to
-    * at-least-once.
+    * sees its id and no-ops instead of double-counting every document;
+    * a crash mid-admit commits none of it (exactly-once).
     */
   def addDocsLedgered(fresh: DataFrame, idCol: String, textCol: String,
       batchId: Long): Unit =
@@ -199,9 +196,7 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
             () => w.append(ingestTable, wh.spark.createDataFrame(
               java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
           }.toSeq
-        // concurrent on a transactional view, sequential on the base
-        // warehouse (see [[graft.sources.Warehouse.stageAll]])
-        w.stageAll(writes)
+        Warehouse.settleAll(wh.spark, writes)
       }
     } finally toks.unpersist(false)
   }
@@ -299,8 +294,8 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
     * and over-retracting corrupts N exactly as re-admitting double-counts.
     * `ids` is driver-resident and becomes an IN-literal row filter — sized
     * for erasure-request batches (≤ ~100k); larger purges should arrive in
-    * batches, each its own atomic retraction. Requires an
-    * [[graft.sources.AtomicWarehouse]]; [[compact]] folds the tombstones
+    * batches, each its own atomic retraction (deletion vectors,
+    * [[graft.sources.AtomicWarehouse.deleteWhereDv]]); [[compact]] folds the tombstones
     * into clean files when the dead fraction warrants it.
     */
   def retractDocs(ids: Seq[Long]): Long = retract(ids, batchId = None)
@@ -435,7 +430,7 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
       def ledgerDf(vs: Seq[Long]): DataFrame = wh.spark.createDataFrame(
         java.util.Arrays.asList(vs.sorted.map(v =>
           org.apache.spark.sql.Row(Long.box(v))): _*), ingestSchema)
-      def rest(w: Warehouse): Unit = w.stageAll(Seq(
+      def rest(w: Warehouse): Unit = Warehouse.settleAll(wh.spark, Seq(
         statsRows.map(s => () => w.append(statsTable, s)),
         toks.map(t =>
           () => w.append(postingsTable, postingsOfToks(t).sortWithinPartitions("t"))),
@@ -449,16 +444,10 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
       // corrections, admissions and ledger rows must still land, atomically
       val deleted =
         if (R.isEmpty) 0L
-        else atomicWh("applyWindowLedgered").deleteWhereDv(postingsTable, postingsSchema,
+        else wh.deleteWhereDv(postingsTable, postingsSchema,
           Seq(graft.sources.ColIn("id", R)), alsoInTx = rest).deleted
       if (deleted == 0L) wh.atomically(rest)
     } finally toks.foreach(_.unpersist(false))
-  }
-
-  private def atomicWh(op: String): graft.sources.AtomicWarehouse = wh match {
-    case a: graft.sources.AtomicWarehouse => a
-    case _ => throw new IllegalStateException(
-      s"$op needs an AtomicWarehouse — merge-on-read retraction rides deletion vectors")
   }
 
   /** Σ dl over the distinct retractee ids, as a one-row aggregate frame —
@@ -471,7 +460,6 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
 
   private def retract(ids: Seq[Long], batchId: Option[Long]): Long = {
     require(ids.nonEmpty, "retractDocs with no ids")
-    val awh = atomicWh("retractDocs")
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
     val distinct = ids.distinct
     // ONE fused driver job: Σdl of the retractees + next sequence number
@@ -483,7 +471,7 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
       w.append(retractTable, wh.spark.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
     }
-    val r = awh.deleteWhereDv(postingsTable, postingsSchema,
+    val r = wh.deleteWhereDv(postingsTable, postingsSchema,
       Seq(graft.sources.ColIn("id", distinct)),
       alsoInTx = w => { w.append(statsTable, neg); ledgerRow(w) })
     // a purge of only token-less docs tombstones nothing — the stats

@@ -198,8 +198,8 @@ object Scd {
   * keep only the latest state; this keeps every state beside it with no
   * second commit to lose). [[upsertIn]] is the composable form: call it
   * inside a caller's `atomically` section and the history replace
-  * publishes with the caller's dim writes in ONE manifest commit on an
-  * [[graft.sources.AtomicWarehouse]] — a crash mid-batch leaves BOTH the
+  * publishes with the caller's dim writes in ONE manifest commit — a
+  * crash mid-batch leaves BOTH the
   * dim and its history at the prior snapshot (ScdSpec pins it), where a
   * separate history store could drift one batch ahead of or behind the
   * dimension it describes.

@@ -8,12 +8,12 @@ import org.apache.spark.sql.functions.{array, coalesce, col, collect_set, count,
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Transactional warehouse: all-or-nothing visibility for any group of table
-  * writes — the capability the reference gets from SQL Server transactions
-  * around its staging→merge→ledger batch (`core/etl_orchestrator.py:168-189`)
-  * and the base [[Warehouse]] explicitly scopes out as a connector concern.
-  * This is the connector built: a minimal manifest-commit table format
-  * (the Delta/Iceberg "pointer commit" idea) over plain parquet files.
+/** Transactional warehouse — the one storage implementation of
+  * [[Warehouse]]: all-or-nothing visibility for any group of table writes,
+  * the capability the reference gets from SQL Server transactions around
+  * its staging→merge→ledger batch (`core/etl_orchestrator.py:168-189`).
+  * A minimal manifest-commit table format (the Delta/Iceberg "pointer
+  * commit" idea) over plain parquet files.
   *
   * Mechanics:
   *   - Every write in a transaction is STAGED: data files land under
@@ -27,22 +27,23 @@ import org.apache.spark.util.sketch.BloomFilter
   *     anywhere before the rename leaves every table at its prior
   *     snapshot, across ALL tables in the transaction.
   *   - `truncate` entries apply by table prefix, so `delete("staging/x")`
-  *     hides `staging/x/Provider` exactly like the base warehouse's
-  *     directory delete.
+  *     hides `staging/x/Provider` like a directory delete would.
   *   - Reads inside a transaction see the transaction's own staged writes
   *     (read-your-own-writes) — EP1's merge chain requires it (each merge
   *     reads the dim the previous merge replaced). Unsupported only for
   *     staged PARTITIONED appends (no caller needs it; loud error).
   *   - Tables never written through a manifest (raw `df.write` into
-  *     `wh.path(...)`, e.g. CSV artifacts or ScaleProbe's hand-laid
-  *     indexes) fall back to the base directory read — manifest history
-  *     takes over the first time a table is written through this class.
+  *     `wh.path(...)`, e.g. CSV artifacts, ScaleProbe's hand-laid indexes,
+  *     or a root laid down by plain directory writes) fall back to reading
+  *     the directory's data files — manifest history takes over the first
+  *     time a table is written through this class, adopting those files.
   *
   * Non-goals, documented honestly: single-writer (concurrent committers
   * are detected by the losing rename and retried, but writer isolation is
-  * not serializable-snapshot); `exists` stays PHYSICAL (raw-path callers
-  * check CSV artifact dirs, so a truncated table with not-yet-vacuumed
-  * files still "exists" — `read` is the manifest-true surface); orphan
+  * not serializable-snapshot); `exists` answers from the manifest for a
+  * table with manifest history (a committed `delete` makes it absent even
+  * before its files are vacuumed) and stays PHYSICAL only for raw paths
+  * such as CSV artifact directories; orphan
   * data files from a crashed transaction are invisible garbage until
   * [[vacuum]] removes them; every commit adds one small manifest file —
   * the log auto-folds into one snapshot manifest once it exceeds
@@ -73,6 +74,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     val vacuumGraceMs: Long = 3600000L,
     val recordStats: Boolean = true)
     extends Warehouse(spark0, root0) {
+
+  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val logDir = new Path(s"$root/_txlog")
   // NOT dot- or underscore-prefixed: read-your-own-writes reads staged
@@ -262,6 +265,10 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
             addSets = addSets.map { case (k, v) =>
               (k, if (k == t || k.startsWith(t + "/")) Set.empty[String] else v)
             }
+            // a truncate ends the table's recorded shape too: replace
+            // re-records it in the same commit, a bare delete leaves the
+            // table absent ([[exists]])
+            schemas = schemas.filterNot { case (k, _) => k == t || k.startsWith(t + "/") }
             stats = stats.filterNot { case ((k, _), _) => k == t || k.startsWith(t + "/") }
             dvs = dvs.filterNot { case ((k, _), _) => k == t || k.startsWith(t + "/") }
             blooms = blooms.filterNot { case ((k, _), _) => k == t || k.startsWith(t + "/") }
@@ -371,7 +378,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     visibleFiles(table).map(_.size).getOrElse(-1)
 
   /** Returns None when the table has no manifest history at all (legacy/raw
-    * directory — caller falls back to the base behavior), Some(files)
+    * directory — caller falls back to the directory listing), Some(files)
     * otherwise (possibly empty after a truncate).
     */
   private def visibleFiles(table: String): Option[Seq[String]] = {
@@ -601,9 +608,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       case l if l.startsWith("add\t") || l.startsWith("truncate\t") ||
         l.startsWith("remove\t") => l.split('\t')(1)
     }.distinct
-    // last schema line per table survives the fold: a snapshot subsumes the
-    // manifests before it, and dropping the lines would amnesia every
-    // table's recorded shape (schemaAt/readAt-without-schema break)
+    // last schema line per live table survives the fold: a snapshot
+    // subsumes the manifests before it, and dropping the lines would amnesia
+    // every table's recorded shape (schemaAt/readAt-without-schema break)
     var schemaMap = Map.empty[String, String]
     // last stats line per (table, file) likewise — dropping them would turn
     // every vacuum/auto-fold into a silent skipping-regression for old files
@@ -622,6 +629,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     parsed.foreach { l =>
       if (l.startsWith("schema\t")) {
         val f = l.split("\t", 3); schemaMap += (f(1) -> f(2))
+      } else if (l.startsWith("truncate\t")) {
+        val t = l.split('\t')(1) // the fold's rule: a truncate ends the shape
+        schemaMap = schemaMap.filterNot { case (k, _) => k == t || k.startsWith(t + "/") }
       } else if (l.startsWith("stats\t")) {
         val f = l.split("\t", 4); statsMap += ((f(1), f(2)) -> f(3))
       } else if (l.startsWith("dv\t")) {
@@ -735,19 +745,19 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   private def stagedDataFiles(dir: Path): Seq[String] = {
     if (!fs.exists(dir)) return Nil
-    // listFiles returns fully-qualified URIs (file:/...); qualify the base
-    // the same way or the prefix strip silently yields absolute paths
-    val base = fs.makeQualified(dir).toString + "/"
-    val it = fs.listFiles(dir, true)
+    // listStatus, not listFiles: the located statuses listFiles builds load
+    // file permissions, which the local FS cannot do for a path under
+    // another scheme (GraftBlobFileSystem's graftblob:)
     val b = ArrayBuffer[String]()
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toString.stripPrefix(base)
+    def walk(d: Path, rel: String): Unit = fs.listStatus(d).foreach { st =>
+      val name = st.getPath.getName
       // Spark writes _SUCCESS and dot-CRCs alongside data; only data files
       // enter the manifest
-      if (!rel.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
-        b += rel
+      if (!name.startsWith("_") && !name.startsWith(".")) {
+        if (st.isDirectory) walk(st.getPath, s"$rel$name/") else b += rel + name
+      }
     }
+    walk(dir, "")
     b.toSeq
   }
 
@@ -779,7 +789,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
         frozen: Seq[FreezePin] = Nil): Unit = {
       val dirOpt = write.map { w =>
         val d = tx.synchronized(tx.nextStageDir())
-        withRetry()(w(d))
+        Warehouse.withRetry()(w(d))
         d
       }
       // the written schema rides the manifest (one compact-JSON line) so
@@ -988,9 +998,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
 
     // staged source files are never disturbed by the staged write, so
-    // replace needs none of the base class's tmp-and-swap choreography.
-    // Every staged write goes out under PHYSICAL column names (column
-    // mapping); the recorded schema line stays logical.
+    // replace reading its own table needs no tmp-and-swap. Every staged
+    // write goes out under PHYSICAL column names (column mapping); the
+    // recorded schema line stays logical.
     override def replace(table: String, df: DataFrame): Unit = {
       enforceConstraints(table, df)
       // child pins snapshot BEFORE the refusal probe (pin-then-probe): a
@@ -1066,12 +1076,19 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       tx.synchronized(tx.entries.exists(e => e.table == table && !e.truncate)) ||
         AtomicWarehouse.this.exists(table)
 
+    // committed state, like the outer warehouse: staged writes have no
+    // manifest entry (and hence no size or recorded schema) before commit
+    override def sizeBytes(table: String): Long = AtomicWarehouse.this.sizeBytes(table)
+
+    override def inferSchema(table: String): Option[StructType] =
+      AtomicWarehouse.this.inferSchema(table)
+
     /** Layout rewrites inside an ambient transaction carry the SAME
       * optimistic check as the top-level override: the expected file set
       * rides the ambient commit's precondition. The inherited
       * read-then-replace would otherwise silently truncate away a commit
       * landing before the ambient transaction publishes — the lost-update
-      * hole replaceExpecting closes. (Covers `compact` too: the base class
+      * hole replaceExpecting closes. (Covers `compact` too: [[Warehouse]]
       * routes it through here.)
       */
     override def compactWith(table: String, schema: StructType,
@@ -1083,12 +1100,6 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
 
     override def atomically(fn: Warehouse => Unit): Unit = fn(this)
-
-    /** Concurrent staging — see [[Warehouse.stageAll]]: staged writes are
-      * invisible until the commit, so independent thunks only share the
-      * (synchronized) stage bookkeeping.
-      */
-    override def stageAll(writes: Seq[() => Unit]): Unit = Warehouse.settleAll(spark, writes)
   }
 
   // ---- public transactional surface ---------------------------------------
@@ -1341,6 +1352,17 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   override def delete(table: String): Unit =
     retryPinAborts(atomically(_.delete(table)))
+
+  /** Manifest-true for a table with manifest history — visible files, or a
+    * recorded schema (a committed-empty table); a committed `delete` leaves
+    * neither. Physical only for raw paths (CSV artifact directories,
+    * directory-laid tables not yet adopted).
+    */
+  override def exists(table: String): Boolean =
+    visibleFiles(table) match {
+      case None => fs.exists(new Path(path(table)))
+      case Some(files) => files.nonEmpty || foldedState().schemas.contains(table)
+    }
 
   override def read(table: String, schema: StructType): DataFrame =
     visibleFiles(table) match {
@@ -4362,7 +4384,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
             // stages thread-safely). All futures settle before an error
             // propagates, so an abort never leaves a sibling mid-stage.
             val ctc = changeTypeCol
-            tv.stageAll(
+            Warehouse.settleAll(spark,
               Seq(() => tv.rewriteExcluding(table, cands, out, dvSnap)) ++
               obs.map(o => () => tv.append(changesTable(table),
                 changeSlice.observe(o,
@@ -4514,9 +4536,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   /** Conflict-safe layout rewrite (compaction, Z-order) for ACTIVE tables —
     * what out-of-band maintenance (`tools/Maintain`) against a live stream
-    * requires; `compact` routes through here via the base class. The base
-    * class's rewrite is read-then-replace: a batch append committing between
-    * the read and the replace's truncate would be silently truncated away
+    * requires; `compact` routes through here via [[Warehouse]]. A plain
+    * read-then-replace rewrite would let a batch append committing between
+    * the read and the replace's truncate be silently truncated away
     * (lost update — the writer-isolation hole the class scaladoc disclaims
     * for generic transactions). Here the rewrite pins the exact file set it
     * read and commits through [[TxView.replaceExpecting]]'s optimistic
@@ -4555,14 +4577,17 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   /** Schema from MANIFEST-VISIBLE files only: the raw directory also holds
     * superseded files inside their vacuum grace window, so after a
-    * schema-changing replace the base class's directory inference would hand
+    * schema-changing replace a directory-wide inference would hand
     * maintenance tooling a merged/stale schema (and `Maintain.compact` would
     * then rewrite the table under it); a truncated-but-unvacuumed table must
-    * report None, not resurrect its dead files' schema.
+    * report None, not resurrect its dead files' schema. A raw directory
+    * (no manifest history) infers from its parquet footers.
     */
   override def inferSchema(table: String): Option[StructType] =
     visibleFiles(table) match {
-      case None        => super.inferSchema(table)
+      case None        =>
+        if (fs.exists(new Path(path(table)))) Some(spark.read.parquet(path(table)).schema)
+        else None
       case Some(Nil)   => None
       case Some(files) =>
         val phys = spark.read.parquet(files.map(f => s"${path(table)}/$f"): _*).schema
@@ -4576,7 +4601,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   override def sizeBytes(table: String): Long =
     visibleFiles(table) match {
-      case None        => super.sizeBytes(table)
+      case None        =>
+        val dir = new Path(path(table))
+        if (fs.exists(dir)) fs.getContentSummary(dir).getLength else 0L
       case Some(files) => fileBytes(table, files)
     }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.PersistedIvf
-import graft.sources.Warehouse
+import graft.sources.AtomicWarehouse
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
@@ -23,9 +23,9 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, 
   * assignment append. A checkpoint retry of a committed batch no-ops —
   * without the ledger, replays would duplicate assignment rows, and
   * duplicated candidates surface as duplicated ranks in every later
-  * [[PersistedIvf.topK]]. Run on an [[graft.sources.AtomicWarehouse]] for
-  * the exactly-once contract (the dedup streams' arrangement); IvfStreamSpec
-  * proves replay-noop and stream-ingest ≡ batch-ingest bit-identically.
+  * [[PersistedIvf.topK]]. The section commits as one manifest, so admission
+  * is exactly-once; IvfStreamSpec proves replay-noop and stream-ingest ≡
+  * batch-ingest bit-identically.
   *
   * ==Drift-triggered retrain==
   * With `retrainNumCells > 0`, after each admit the stream consults the
@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, 
   * next batch whose drift check fires (the statistic is monotone in the
   * same stale-centroid condition, not a one-shot edge).
   */
-class IvfStream(wh: Warehouse, idCol: String = "vec_id",
+class IvfStream(wh: AtomicWarehouse, idCol: String = "vec_id",
     vecCol: String = "embedding", retrainNumCells: Int = 0,
     retrainIterations: Int = 3, driftMargin: Double = 0.05) {
 

@@ -46,7 +46,7 @@ object Smoke {
     cleaned.explain("formatted")
 
     // 6. full ETL pipeline drive: CSV string → staged → merged dims in a temp warehouse
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-smoke-wh-").toString)
     val pipe = new graft.Pipeline(spark, wh)
     val csv = "Producto,Fecha 1,Provedor,Precio,,,,\n" +

@@ -7,7 +7,6 @@ import graft.model.Schemas.FileStatus
 import graft.operators.Dedup
 import graft.sources.{AtomicWarehouse, CsvSource, Warehouse}
 import graft.streaming.DedupStream
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -82,7 +81,7 @@ class AtomicWarehouseSpec extends SparkSpec {
     assert(rows(wh, "t") == Set((1L, "raw"), (2L, "tx")), "adoption must keep raw rows")
   }
 
-  test("EP1 on AtomicWarehouse: same end state as base; crash mid-merge leaves the pre-batch snapshot") {
+  test("EP1 on AtomicWarehouse: crash mid-merge leaves the pre-batch snapshot; re-run converges") {
     val sampleCsv =
       """Producto,Fecha 1,Provedor,Precio,,,,
         |Aceite Capullo 500ml *,07/03/2025,Vicente,1.347,,,,
@@ -93,66 +92,38 @@ class AtomicWarehouseSpec extends SparkSpec {
       wh.read("dims/Product", Schemas.product).collect().map(_.getString(2)).sorted.toSeq,
       wh.read("dims/Provider_Product", Schemas.providerProduct).count())
 
-    // seam proof: identical dims through the transactional warehouse
-    val base = new Warehouse(spark, Files.createTempDirectory("graft-aw-ep1b-").toString)
-    assert(new Pipeline(spark, base)
-      .processCsv(CsvSource.readString(spark, sampleCsv), "products", "l.csv").status)
-    val aw = new AtomicWarehouse(spark, Files.createTempDirectory("graft-aw-ep1a-").toString)
-    val p = new Pipeline(spark, aw)
-    assert(p.processCsv(CsvSource.readString(spark, sampleCsv), "products", "l.csv").status)
-    assert(dimState(aw) == dimState(base))
-    val want = dimState(aw)
-
-    // crash mid-merge (3rd of 4 dim replaces dies): with the base warehouse
-    // this leaves partially-merged dims (CrashConsistencySpec); with the
-    // atomic warehouse EVERY dim stays at its pre-batch snapshot
-    class CrashingAw(dir: String) extends AtomicWarehouse(spark, dir) {
-      @volatile var armed = false
-      override def atomically(fn: Warehouse => Unit): Unit =
-        super.atomically { w =>
-          fn(new Warehouse(spark, root) {
-            override def read(t: String, s: StructType): DataFrame = w.read(t, s)
-            override def append(t: String, df: DataFrame): Unit = w.append(t, df)
-            override def replace(t: String, df: DataFrame): Unit = {
-              if (armed && t == "dims/Product")
-                throw new java.io.IOException("injected crash")
-              w.replace(t, df)
-            }
-            override def delete(t: String): Unit = w.delete(t)
-            override def exists(t: String): Boolean = w.exists(t)
-          })
-        }
-    }
-    val failing = new CrashingAw(Files.createTempDirectory("graft-aw-ep1c-").toString)
+    // crash mid-merge (3rd of 4 dim replaces dies): EVERY dim stays at its
+    // pre-batch snapshot
+    val failing = new FailingWarehouse(spark, Files.createTempDirectory("graft-aw-ep1c-").toString)
     val p2 = new Pipeline(spark, failing)
     assert(p2.processCsv(CsvSource.readString(spark, sampleCsv), "products", "l.csv").status)
-    failing.armed = true
+    val want = dimState(failing)
+    failing.failOn = Some("dims/Product")
     val secondCsv = sampleCsv + "Queso Tierno 400g,1/07/2025,Serrano ,1.800,,,,\n"
     val crashed = p2.processCsv(CsvSource.readString(spark, secondCsv), "products", "l2.csv")
     assert(!crashed.status && crashed.message.contains("injected crash"))
     assert(p2.ledger.statusOf("products", "l2.csv") == FileStatus.Failed)
     // NO partial merge: all dims exactly as after the first batch
     assert(dimState(failing) == want)
-    // recovery: plain re-run converges, same as the base contract
-    failing.armed = false
+    // recovery: plain re-run converges
+    failing.failOn = None
     assert(p2.processCsv(CsvSource.readString(spark, secondCsv), "products", "l2.csv").status)
     // the merge layer preserves the reference's trailing-space provider text
     assert(dimState(failing)._1.exists(_.trim == "Serrano"))
   }
 
-  test("DedupStream batches on AtomicWarehouse equal the base-warehouse run") {
+  test("DedupStream batches on AtomicWarehouse equal the from-scratch batch run") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id".cast("long").as("doc_id"), $"text")
       .orderBy("doc_id").limit(90).as[(Long, String)].collect()
 
-    def drive(wh: Warehouse): Set[(Long, Long, Double)] = {
-      val ds = new DedupStream(wh, minJaccard = 0.35, minSigMatchesOverride = 4)
-      docs.grouped(30).foreach(c => ds.processBatch(c.toSeq.toDF("doc_id", "text")))
-      ds.pairs().collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    }
-    val basePairs = drive(new Warehouse(spark, Files.createTempDirectory("graft-aw-dsb-").toString))
-    val awPairs = drive(new AtomicWarehouse(spark, Files.createTempDirectory("graft-aw-dsa-").toString))
-    assert(awPairs == basePairs && awPairs.nonEmpty)
+    val ds = new DedupStream(new AtomicWarehouse(spark,
+      Files.createTempDirectory("graft-aw-dsa-").toString),
+      minJaccard = 0.35, minSigMatchesOverride = 4)
+    docs.grouped(30).foreach(c => ds.processBatch(c.toSeq.toDF("doc_id", "text")))
+    val awPairs = ds.pairs().collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(awPairs.nonEmpty)
     assert(awPairs == Dedup.lshVerifiedPairs(docs.toSeq.toDF("doc_id", "text"), "doc_id", "text",
         minJaccard = 0.35, minSigMatchesOverride = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
@@ -696,7 +667,7 @@ class AtomicWarehouseSpec extends SparkSpec {
     sc.addSparkListener(listener)
     def stageTwo(group: String): Unit = {
       sc.setJobGroup(group, s"$group $id")
-      try wh.atomically(w => w.stageAll(Seq(
+      try wh.atomically(w => Warehouse.settleAll(spark, Seq(
         () => w.append(s"$group/a", Seq((1L, "a")).toDF("id", "v")),
         () => w.append(s"$group/b", Seq((2L, "b")).toDF("id", "v")))))
       finally sc.clearJobGroup()
@@ -741,7 +712,7 @@ class AtomicWarehouseSpec extends SparkSpec {
     try {
       canceller.start()
       sc.setJobGroup(group, "slow staged write", interruptOnCancel = true)
-      val e = intercept[Exception](wh.atomically(w => w.stageAll(Seq(
+      val e = intercept[Exception](wh.atomically(w => Warehouse.settleAll(spark, Seq(
         () => w.append("slow", slow),
         () => w.append("quick", Seq((1L, "q")).toDF("id", "v"))))))
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)

@@ -5,44 +5,30 @@ import java.nio.file.Files
 import graft.model.Schemas
 import graft.model.Schemas.FileStatus
 import graft.operators.Dedup
-import graft.sources.{CsvSource, Warehouse}
+import graft.sources.{AtomicWarehouse, CsvSource, Warehouse}
 import graft.streaming.DedupStream
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Adversarial proof of the documented crash-recovery contracts. The BASE
-  * warehouse is non-transactional (multi-table batches are not atomic —
-  * Warehouse/Ledger/DedupStream scaladoc; AtomicWarehouseSpec proves the
-  * stronger no-partial-state contract of the transactional impl), so the
-  * base contract is NOT "no partial state"; it is:
+/** Adversarial proof of the crash-recovery contract: every batch is one
+  * manifest commit, so a crash anywhere inside it leaves NO partial state,
+  * and the replay lands the batch exactly once:
   *
-  *   - EP1/ledger: a crash mid-merge leaves some dims merged and an attempt
-  *     stuck non-Success — and a plain RE-RUN converges the dims to exactly
-  *     the clean-run end-state (every merge is an idempotent upsert), with
-  *     the failed attempt preserved in ledger history.
-  *   - DedupStream: admission is AT-LEAST-ONCE — replaying a partially
-  *     admitted batch may duplicate rows, but the SET of pairs/docs equals
-  *     the from-scratch batch run (all consumers are set-level).
+  *   - EP1/ledger: a crash mid-merge leaves every dim at its pre-batch
+  *     snapshot and the attempt non-Success; a plain RE-RUN converges the
+  *     dims to exactly the clean-run end-state, with the failed attempt
+  *     preserved in ledger history.
+  *   - Streams: a checkpoint replay of a crashed batch admits it once — no
+  *     duplicate rows in any table, nothing lost.
   *
-  * Crashes are injected at the warehouse boundary (the only place writes
-  * happen), at the worst points: after some-but-not-all dim replaces, and
-  * after 3 of a stream batch's 4 table appends.
+  * Crashes are injected at the warehouse boundary ([[FailingWarehouse]]),
+  * at the worst points: after some-but-not-all dim replaces, and after the
+  * other writes of a stream batch have staged.
   */
 class CrashConsistencySpec extends SparkSpec {
   import spark.implicits._
 
-  private class FailingWarehouse(root: String) extends Warehouse(spark, root) {
-    @volatile var failOn: Option[String] = None
-    private def maybeFail(table: String): Unit =
-      if (failOn.contains(table))
-        throw new java.io.IOException(s"injected crash writing $table")
-    override def append(table: String, df: DataFrame): Unit = {
-      maybeFail(table); super.append(table, df)
-    }
-    override def replace(table: String, df: DataFrame): Unit = {
-      maybeFail(table); super.replace(table, df)
-    }
-  }
+  private def failing(prefix: String) =
+    new FailingWarehouse(spark, Files.createTempDirectory(prefix).toString)
 
   private val sampleCsv =
     """Producto,Fecha 1,Provedor,Precio,,,,
@@ -60,20 +46,21 @@ class CrashConsistencySpec extends SparkSpec {
 
   test("EP1 crash mid-merge: re-run converges dims to the clean end-state") {
     // clean reference run
-    val cleanWh = new Warehouse(spark, Files.createTempDirectory("graft-crash-clean-").toString)
+    val cleanWh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-crash-clean-").toString)
     assert(new Pipeline(spark, cleanWh)
       .processCsv(CsvSource.readString(spark, sampleCsv), "products", "lista.csv").status)
     val want = dimState(cleanWh)
 
     // crashed run: UoM and Provider merge, then the Product replace dies —
-    // partial dims + an orphan staging dir + a non-Success attempt
-    val wh = new FailingWarehouse(Files.createTempDirectory("graft-crash-").toString)
+    // the merge transaction aborts whole, the attempt stays non-Success
+    val wh = failing("graft-crash-")
     val p = new Pipeline(spark, wh)
     wh.failOn = Some("dims/Product")
     val crashed = p.processCsv(CsvSource.readString(spark, sampleCsv), "products", "lista.csv")
     assert(!crashed.status && crashed.message.contains("injected crash"))
     assert(p.ledger.statusOf("products", "lista.csv") == FileStatus.Failed)
-    assert(wh.exists("dims/Provider") && !wh.exists("dims/Product"))
+    assert(Seq("dims/UnitOfMeasure", "dims/Provider", "dims/Product", "dims/Provider_Product")
+      .forall(t => !wh.exists(t)), "no dim of the crashed batch may be visible")
 
     // recovery = plain re-run, no cleanup step required
     wh.failOn = None
@@ -90,17 +77,19 @@ class CrashConsistencySpec extends SparkSpec {
       .orderBy("doc_id").limit(150).as[(Long, String)].collect()
     val Seq(b1, b2, b3) = docs.grouped(50).map(_.toSeq.toDF("doc_id", "text")).toSeq
 
-    val wh = new FailingWarehouse(Files.createTempDirectory("graft-crash-ds-").toString)
+    val wh = failing("graft-crash-ds-")
     val ds = new DedupStream(wh, minJaccard = 0.35, minSigMatchesOverride = 4)
     ds.processBatch(b1)
+    val pairsAfterB1 = ds.pairs().count()
 
-    // crash at the WORST point: pairs, bands and corpus landed, the
-    // signature index did not (the concurrent admits settle before the
-    // failure propagates, so this is exactly the widest partial window)
+    // crash at the WORST point: pairs, bands and corpus staged, the
+    // signature index write died (the concurrent admits settle before the
+    // failure propagates) — none of the batch may be visible
     wh.failOn = Some(ds.indexTable)
     val boom = intercept[java.io.IOException](ds.processBatch(b2))
     assert(boom.getMessage.contains("injected crash"))
-    assert(wh.exists(ds.bandTable) && wh.exists(ds.corpusTable))
+    assert(ds.corpus().count() == 50 && ds.pairs().count() == pairsAfterB1)
+    assert(wh.read(ds.bandTable, ds.bandSchema).select("doc_id").distinct().count() == 50)
 
     // recovery = checkpoint replays the batch; then life goes on with b3
     wh.failOn = None
@@ -114,10 +103,10 @@ class CrashConsistencySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(streamed == scratch, s"streamed ${streamed.size} distinct pairs vs ${scratch.size}")
 
-    // at-least-once admission: rows may duplicate, the doc SET may not
-    val corpusIds = ds.corpus().select("doc_id").distinct().count()
-    assert(corpusIds == 150)
-    assert(ds.corpus().count() >= 150) // duplicates tolerated, never lost
+    // exactly-once admission: no table holds a duplicate row
+    assert(ds.pairs().count() == scratch.size)
+    assert(ds.corpus().count() == 150 && ds.corpus().select("doc_id").distinct().count() == 150)
+    assert(wh.read(ds.indexTable, ds.sigSchema).count() == 150)
   }
 
   test("SemanticDedupStream crash mid-admit: replay survivor SET crash-free-exact") {
@@ -133,25 +122,24 @@ class CrashConsistencySpec extends SparkSpec {
 
     // crash-free reference run
     val cleanSd = new graft.streaming.SemanticDedupStream(
-      new Warehouse(spark, Files.createTempDirectory("graft-crash-sem-clean-").toString),
+      new AtomicWarehouse(spark, Files.createTempDirectory("graft-crash-sem-clean-").toString),
       minCosine = 0.45)
     cleanSd.init(seeds)
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) => cleanSd.processBatch(b, i.toLong) }
     val want = cleanSd.survivors().select("id").collect().map(_.getLong(0)).toSet
 
-    // crashed run: WORST window — the index append lands (the batch's own
-    // ghost rows are now visible), survivors/ledger do not. Without the
-    // same-id probe exclusion the replay would drop all of b2 against its
-    // own ghosts
-    val wh = new FailingWarehouse(Files.createTempDirectory("graft-crash-sem-").toString)
+    // crashed run: the index append staged (the batch's own rows would be
+    // ghosts its replay probes against), the survivors write died — the
+    // whole admit aborts
+    val wh = failing("graft-crash-sem-")
     val sd = new graft.streaming.SemanticDedupStream(wh, minCosine = 0.45)
     sd.init(seeds)
     sd.processBatch(b1, 0L)
     wh.failOn = Some(sd.survivorsTable)
     assert(intercept[java.io.IOException](sd.processBatch(b2, 1L))
       .getMessage.contains("injected crash"))
-    assert(wh.exists(sd.indexTable), "the crash window needs the index landed")
-    assert(!wh.exists(sd.ledgerTable) || sd.ledger().filter($"batch_id" === 1L).isEmpty,
+    assert(sd.index().count() == 150, "no index row of the crashed batch may be visible")
+    assert(sd.ledger().filter($"batch_id" === 1L).isEmpty,
       "batch 1 must not be ledgered after the crash")
     wh.failOn = None
     sd.processBatch(b2, 1L) // checkpoint replay
@@ -159,13 +147,13 @@ class CrashConsistencySpec extends SparkSpec {
 
     assert(sd.survivors().select("id").collect().map(_.getLong(0)).toSet == want,
       "replay changed the survivor set")
-    // at-least-once: index rows may duplicate (b2's ghosts), ids may not be lost
-    assert(sd.index().select("id").distinct().count() == 500)
-    assert(sd.index().count() >= 500)
+    // exactly-once: every arrived id indexed once, every survivor once
+    assert(sd.index().count() == 500 && sd.index().select("id").distinct().count() == 500)
+    assert(sd.survivors().count() == want.size)
 
-    // second window: survivors landed, the ledger append crashed — replay
-    // re-admits; survivor ROWS duplicate, the SET does not
-    val wh2 = new FailingWarehouse(Files.createTempDirectory("graft-crash-sem2-").toString)
+    // second window: survivors staged, the ledger append crashed — the
+    // replay admits the batch once
+    val wh2 = failing("graft-crash-sem2-")
     val sd2 = new graft.streaming.SemanticDedupStream(wh2, minCosine = 0.45)
     sd2.init(seeds)
     sd2.processBatch(b1, 0L)
@@ -176,31 +164,31 @@ class CrashConsistencySpec extends SparkSpec {
     sd2.processBatch(b2, 1L)
     sd2.processBatch(b3, 2L)
     assert(sd2.survivors().select("id").collect().map(_.getLong(0)).toSet == want)
-    assert(sd2.survivors().count() >= want.size) // duplicates tolerated, never lost
+    assert(sd2.survivors().count() == want.size)
   }
 
   test("IvfStream crash between appends: replay keeps the assignment ID set intact") {
     def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id".cast("long").as("vec_id"),
         $"embedding".cast("array<float>").as("embedding"))
-    val wh = new FailingWarehouse(Files.createTempDirectory("graft-crash-ivf-").toString)
+    val wh = failing("graft-crash-ivf-")
     val st = new graft.streaming.IvfStream(wh)
     st.ivf.buildWith(emb.filter($"vec_id" < 300), "vec_id", "embedding",
       emb.filter($"vec_id" < 8).select($"vec_id".as("cell"), $"embedding".as("centroid")))
 
-    // assignment append lands, the stats/ledger appends crash
+    // assignment append staged, the stats write crashed: nothing lands
     wh.failOn = Some(st.ivf.statsTable)
     assert(intercept[java.io.IOException](
       st.processBatch(emb.filter($"vec_id" >= 300), 0L))
       .getMessage.contains("injected crash"))
+    assert(st.ivf.assignments().count() == 300)
     wh.failOn = None
     st.processBatch(emb.filter($"vec_id" >= 300), 0L) // checkpoint replay
 
-    // base-warehouse contract (the reason the streams run on AtomicWarehouse):
-    // rows duplicate, ids are never lost, the ledger converges
+    // exactly-once: every id assigned once, the batch ledgered once
     val ids = st.ivf.assignments().select("id").distinct().count()
     assert(ids == 500, s"assignment id set $ids != 500")
-    assert(st.ivf.assignments().count() >= 500)
-    assert(st.ivf.ingestLedger().collect().map(_.getLong(0)).toSet == Set(0L))
+    assert(st.ivf.assignments().count() == 500)
+    assert(st.ivf.ingestLedger().collect().map(_.getLong(0)).toSeq == Seq(0L))
   }
 }

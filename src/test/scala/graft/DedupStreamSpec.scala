@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.operators.Dedup
-import graft.sources.Warehouse
+import graft.sources.AtomicWarehouse
 import graft.streaming.DedupStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -33,7 +33,7 @@ class DedupStreamSpec extends SparkSpec {
       Files.move(part, Paths.get(inDir, f"chunk_$i%02d.parquet"), StandardCopyOption.ATOMIC_MOVE)
     }
 
-    val ds = new DedupStream(new Warehouse(spark, whDir),
+    val ds = new DedupStream(new AtomicWarehouse(spark, whDir),
       minJaccard = 0.35, minSigMatchesOverride = 4)
     val q = ds.start(inDir, ckpt, Trigger.AvailableNow())
     assert(q.awaitTermination(300000), "stream failed to drain within 300 s")
@@ -54,8 +54,8 @@ class DedupStreamSpec extends SparkSpec {
       .select($"doc_id".cast("long").as("doc_id"), $"text")
       .orderBy("doc_id").limit(120).as[(Long, String)].collect()
 
-    def drive(bloomMin: Long): (Set[(Long, Long, Double)], DedupStream, Warehouse) = {
-      val wh = new Warehouse(spark, Files.createTempDirectory("graft-dstream-bloom-").toString)
+    def drive(bloomMin: Long): (Set[(Long, Long, Double)], DedupStream, AtomicWarehouse) = {
+      val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-dstream-bloom-").toString)
       val ds = new DedupStream(wh,
         minJaccard = 0.35, minSigMatchesOverride = 4, bloomMinIndexBytes = bloomMin)
       docs.grouped(30).foreach(c => ds.processBatch(c.toSeq.toDF("doc_id", "text")))
@@ -85,7 +85,7 @@ class DedupStreamSpec extends SparkSpec {
     // threshold of 1 byte: batch 1 sees an EMPTY band table (0 bytes < 1) →
     // no bootstrap; batch 2 sees batch 1's files → bootstraps; batch 3
     // maintains through the in-memory cached state
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft-dstream-flip-").toString)
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-dstream-flip-").toString)
     val ds = new DedupStream(wh, minJaccard = 0.35, minSigMatchesOverride = 4,
       bloomMinIndexBytes = 1)
     ds.processBatch(batches(0).toSeq.toDF("doc_id", "text"))
@@ -107,7 +107,7 @@ class DedupStreamSpec extends SparkSpec {
 
     // the DEFAULT 64 MB gate never trips at this scale: no state table, no
     // bloom jobs — small streams pay nothing for the feature
-    val wh2 = new Warehouse(spark, Files.createTempDirectory("graft-dstream-defgate-").toString)
+    val wh2 = new AtomicWarehouse(spark, Files.createTempDirectory("graft-dstream-defgate-").toString)
     val ds2 = new DedupStream(wh2, minJaccard = 0.35, minSigMatchesOverride = 4)
     batches.foreach(c => ds2.processBatch(c.toSeq.toDF("doc_id", "text")))
     assert(ds2.readBloomState().isEmpty, "default gate bootstrapped at test scale")
@@ -124,8 +124,9 @@ class DedupStreamSpec extends SparkSpec {
       .select($"doc_id".cast("long").as("doc_id"), $"text")
       .orderBy("doc_id").limit(100).as[(Long, String)].collect()
 
-    // 50 two-doc batches through the exact code path foreachBatch drives
-    val ds = new DedupStream(new Warehouse(spark, whDir),
+    // 50 two-doc batches through the exact code path foreachBatch drives;
+    // no vacuum grace, so each pass's vacuum collects the compacted-away files
+    val ds = new DedupStream(new AtomicWarehouse(spark, whDir, vacuumGraceMs = 0L),
       minJaccard = 0.35, minSigMatchesOverride = 4, compactEvery = 5)
     docs.grouped(2).foreach(chunk => ds.processBatch(chunk.toSeq.toDF("doc_id", "text")))
 
@@ -152,7 +153,7 @@ class DedupStreamSpec extends SparkSpec {
 
   test("probe gate: full scan below the size threshold, point-probe above") {
     val whDir = Files.createTempDirectory("graft-dstream-gate-").toString
-    val wh = new Warehouse(spark, whDir)
+    val wh = new AtomicWarehouse(spark, whDir)
     val ds = new DedupStream(wh, probeKeyLimit = 1000, pointLookupMaxIds = 500,
       probeMinIndexBytes = 1024)
     assert(ds.effectiveProbeLimits(0L) == (0, 0))
@@ -167,5 +168,24 @@ class DedupStreamSpec extends SparkSpec {
     assert(s1 > 0L)
     wh.append("t", Seq((3L, "c")).toDF("doc_id", "text"))
     assert(wh.sizeBytes("t") > s1)
+  }
+
+  test("processBatch releases every RDD it caches, full-scan and point-lookup modes") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select($"doc_id".cast("long").as("doc_id"), $"text")
+      .orderBy("doc_id").limit(60).as[(Long, String)].collect()
+    // default gate = full-scan candidates; gate 0 = point-lookup from batch 1
+    Seq(256L << 20, 0L).foreach { gate =>
+      val ds = new DedupStream(new AtomicWarehouse(spark,
+        Files.createTempDirectory("graft-dstream-leak-").toString),
+        minJaccard = 0.35, minSigMatchesOverride = 4, probeMinIndexBytes = gate)
+      docs.grouped(20).foreach { c =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        ds.processBatch(c.toSeq.toDF("doc_id", "text"))
+        // ids, not sizes: the ContextCleaner may drop older tests' caches
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"gate $gate: processBatch left cached RDDs $leaked")
+      }
+    }
   }
 }

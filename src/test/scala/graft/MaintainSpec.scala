@@ -222,13 +222,20 @@ class MaintainSpec extends SparkSpec {
       s"discovery maintenance flattened a declared-cluster table (kept=${kept.size})")
   }
 
-  test("maintain on a base warehouse: discovery path compacts everything") {
-    val dir = Files.createTempDirectory("graft-maint-base-").toString
-    val wh = new Warehouse(spark, dir)
-    (1 to 5).foreach(i => wh.append("t", Seq((i.toLong, s"v$i")).toDF("id", "v")))
-    val before = rows(wh, "t")
-    Maintain.run(spark, dir, Nil) // no table specs: discover
-    assert(rows(wh, "t") == before)
-    assert(parquetFiles(s"$dir/t").size == 1)
+  test("maintain on a raw-laid root: discovery compacts, keeps every row, adopts the root") {
+    // plain parquet directories, no manifest log: the layout a directory
+    // writer leaves behind
+    val dir = Files.createTempDirectory("graft-maint-raw-").toString
+    (1 to 5).foreach(i => Seq((i.toLong, s"v$i")).toDF("id", "v")
+      .write.mode("append").parquet(s"$dir/t"))
+    assert(parquetFiles(s"$dir/t").size == 5)
+    val wh = new AtomicWarehouse(spark, dir)
+    assert(rows(wh, "t") == (1 to 5).map(i => (i.toLong, s"v$i")).toSet)
+    Thread.sleep(50) // mtimes are ms-granular; age the raw files past the cutoff
+    Maintain.run(spark, dir, Nil, graceMs = 1) // no table specs: discover
+    assert(rows(wh, "t") == (1 to 5).map(i => (i.toLong, s"v$i")).toSet)
+    assert(wh.visibleFileCount("t") == 1)
+    assert(parquetFiles(s"$dir/t").size == 1, "vacuum collects the superseded raw files")
+    assert(Files.isDirectory(java.nio.file.Paths.get(dir, "_txlog")))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.{Dedup, PersistedComponents}
-import graft.sources.Warehouse
+import graft.sources.AtomicWarehouse
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
 class PersistedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fresh(): (Warehouse, PersistedComponents) = {
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft-pcc-").toString)
+  private def fresh(): (AtomicWarehouse, PersistedComponents) = {
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-pcc-").toString)
     (wh, new PersistedComponents(wh))
   }
 

@@ -16,7 +16,7 @@ class PipelineSpec extends SparkSpec {
 
   private def freshPipeline(): Pipeline = {
     val dir = Files.createTempDirectory("graft-wh-").toString
-    new Pipeline(spark, new Warehouse(spark, dir))
+    new Pipeline(spark, new AtomicWarehouse(spark, dir))
   }
 
   private val sampleCsv =
@@ -83,6 +83,57 @@ class PipelineSpec extends SparkSpec {
     assert(p.wh.read("dims/Provider", Schemas.provider).count() == 4)
     assert(p.wh.read("dims/Product", Schemas.product).count() == 4)
     assert(p.wh.read("dims/Provider_Product", Schemas.providerProduct).count() == 4)
+  }
+
+  test("EP1 resumes over a directory-laid root: replay skips, a new file merges like a fresh run") {
+    // a price list that re-prices one product and adds a provider
+    val secondCsv =
+      """Producto,Fecha 1,Provedor,Precio,,,,
+        |Aceite Capullo 500ml *,09/03/2025,Vicente,1.400,,,,
+        |Leche Entera 1L,09/03/2025,Dos Pinos,0.950,,,,
+        |Galleta Maria 200g,09/03/2025,Pozuelo,0.700,,,,
+        |""".stripMargin
+    def seeded(): AtomicWarehouse = {
+      val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-resume-").toString)
+      wh.append("lookup/ProviderSynonym", spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(1, "DosPinos", 1)), Schemas.providerSynonym))
+      wh.append("lookup/UnitOfMeasureAcronym", spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(1, "ml", 1)), Schemas.unitOfMeasureAcronym))
+      wh
+    }
+    def dimState(wh: Warehouse) = (
+      wh.read("dims/Provider", Schemas.provider).collect().map(_.getString(1)).sorted.toSeq,
+      wh.read("dims/Product", Schemas.product).collect().map(_.getString(2)).sorted.toSeq,
+      wh.read("dims/Provider_Product", Schemas.providerProduct).collect()
+        .map(r => (r.getInt(1), r.getInt(2), r.getDecimal(7))).sorted.toSeq,
+      wh.read("dims/UnitOfMeasure", Schemas.unitOfMeasure).collect().map(_.getString(1)).sorted.toSeq)
+
+    // reference: both files on a fresh warehouse
+    val fresh = seeded()
+    val pf = new Pipeline(spark, fresh)
+    assert(pf.processCsv(CsvSource.readString(spark, sampleCsv), "products", "a.csv").status)
+    assert(pf.processCsv(CsvSource.readString(spark, secondCsv), "products", "b.csv").status)
+    val want = dimState(fresh)
+
+    // the old root: after file A, every table as a plain parquet directory
+    // (no manifest log), the layout a directory-swap writer leaves behind
+    val src = seeded()
+    assert(new Pipeline(spark, src)
+      .processCsv(CsvSource.readString(spark, sampleCsv), "products", "a.csv").status)
+    val legacyRoot = Files.createTempDirectory("graft-resume-legacy-").toString
+    Seq("dims/Provider", "dims/Product", "dims/Provider_Product", "dims/UnitOfMeasure",
+      "lookup/ProviderSynonym", "lookup/UnitOfMeasureAcronym", "ledger/ProcessFile").foreach { t =>
+      src.read(t, src.inferSchema(t).get).write.parquet(s"$legacyRoot/$t")
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(legacyRoot, "_txlog")))
+
+    val legacy = new AtomicWarehouse(spark, legacyRoot)
+    val p = new Pipeline(spark, legacy)
+    val replay = p.processCsv(CsvSource.readString(spark, sampleCsv), "products", "a.csv")
+    assert(replay.status && replay.message.contains("already processed"), replay.message)
+    assert(p.processCsv(CsvSource.readString(spark, secondCsv), "products", "b.csv").status)
+    assert(dimState(legacy) == want)
+    assert(p.ledger.statusOf("products", "b.csv") == Schemas.FileStatus.Success)
   }
 
   test("generated classes survive across files: a replay compiles none, a later file few") {

@@ -130,7 +130,7 @@ class RetrievalSpec extends SparkSpec {
       (2L, "a a a"),           // "a a" occurs at 1 and 2
       (3L, "x a b y"),         // "a b" once; "a b a" never
       (4L, "b a b a b")).toDF("doc_id", "text")
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-phr-").toString)
     val fts = new PersistedPostings(wh)
     fts.build(corpus, "doc_id", "text")
@@ -149,7 +149,7 @@ class RetrievalSpec extends SparkSpec {
     // an index built WITHOUT positions is refused, not silently empty:
     // rewrite BOTH tables to the pre-positions on-disk shape (postings
     // lacking pos, stats lacking haspos — parquet null-fills on read)
-    val legacyWh = new graft.sources.Warehouse(spark,
+    val legacyWh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-phr-legacy-").toString)
     val legacy = new PersistedPostings(legacyWh)
     legacy.build(corpus, "doc_id", "text")
@@ -181,7 +181,7 @@ class RetrievalSpec extends SparkSpec {
     def inlineOn(ds: org.apache.spark.sql.DataFrame) =
       rows(Retrieval.bm25(ds, "doc_id", "text", queries, "q_id", "qtext", 10))
 
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-fts-").toString)
     val fts = new PersistedPostings(wh)
     // query-before-build refuses

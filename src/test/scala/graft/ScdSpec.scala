@@ -92,7 +92,7 @@ class ScdSpec extends SparkSpec {
       b2, Seq("k"), Seq("a"), 2L)
 
     Seq(
-      new Warehouse(spark, Files.createTempDirectory("graft-scddim-b-").toString),
+      new AtomicWarehouse(spark, Files.createTempDirectory("graft-scddim-b-").toString),
       new AtomicWarehouse(spark, Files.createTempDirectory("graft-scddim-a-").toString)
     ).foreach { wh =>
       val dim = new ScdDimension(wh, "d", Seq("k"), Seq("a"), baseSchema)

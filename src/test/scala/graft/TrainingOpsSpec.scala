@@ -348,7 +348,7 @@ class TrainingOpsSpec extends SparkSpec {
       .select($"vec_id".cast("long").as("vec_id"), $"embedding")
     val cents = embL.filter($"vec_id" < 8)
       .select($"vec_id".cast("int").as("cell"), $"embedding".as("centroid"))
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-pivf-").toString)
     val ivf = new PersistedIvf(wh)
 
@@ -393,7 +393,7 @@ class TrainingOpsSpec extends SparkSpec {
     import graft.operators.PersistedIvf
     val embL = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id".cast("long").as("vec_id"), $"embedding")
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-pivf-push-").toString)
     val ivf = new PersistedIvf(wh)
     ivf.buildWith(embL, "vec_id", "embedding",
@@ -433,7 +433,7 @@ class TrainingOpsSpec extends SparkSpec {
     import graft.operators.PersistedIvf
     val embL = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id".cast("long").as("vec_id"), $"embedding")
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-pivf-drift-").toString)
     val ivf = new PersistedIvf(wh)
     // trained-centroid build path (deterministic seeds)
@@ -805,7 +805,7 @@ class TrainingOpsSpec extends SparkSpec {
     // quantized twin of the float-path anchor
     val seeds8 = embL.filter($"vec_id" < 8)
       .select($"vec_id".cast("int").as("cell"), $"embedding".as("centroid"))
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-ivfsq-spec-").toString)
     val ivf = new PersistedIvf(wh)
     ivf.buildWith(embL, "vec_id", "embedding", seeds8)
@@ -833,7 +833,7 @@ class TrainingOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
 
     // an index built WITHOUT a PqSpec must refuse PQ scoring, not guess
-    val whNoPq = new graft.sources.Warehouse(spark,
+    val whNoPq = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-ivfpq-no-").toString)
     val noPq = new PersistedIvf(whNoPq)
     noPq.buildWith(embL.filter($"vec_id" < 64), "vec_id", "embedding", cents)
@@ -843,13 +843,13 @@ class TrainingOpsSpec extends SparkSpec {
     // build WITH pq on the first half, add the rest incrementally —
     // encoding is a pure per-row function of (vector, codebook), so the
     // accumulated codes must equal a from-scratch build's
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-ivfpq-inc-").toString)
     val ivf = new PersistedIvf(wh)
     ivf.buildWith(embL.filter($"vec_id" < 250), "vec_id", "embedding", cents,
       pq = Some(PersistedIvf.PqSpec(seeds, "vec_id", "embedding")))
     ivf.addVectors(embL.filter($"vec_id" >= 250), "vec_id", "embedding")
-    val whFull = new graft.sources.Warehouse(spark,
+    val whFull = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-ivfpq-full-").toString)
     val ivfFull = new PersistedIvf(whFull)
     ivfFull.buildWith(embL, "vec_id", "embedding", cents,
@@ -888,7 +888,7 @@ class TrainingOpsSpec extends SparkSpec {
     // codeword → x̂ = c + (x − c) = x → every-cell residual ADC ≡ the
     // float-exact probe at 4dp
     val slice = embL.filter($"vec_id" < 64)
-    val whL = new graft.sources.Warehouse(spark,
+    val whL = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-ivfres-anchor-").toString)
     val ivfL = new PersistedIvf(whL)
     ivfL.buildWith(slice, "vec_id", "embedding", cents,
@@ -902,7 +902,7 @@ class TrainingOpsSpec extends SparkSpec {
     // so accumulated codes ≡ a from-scratch build's
     val seeds = embL.filter($"vec_id" < 16)
     def residIvf(corpus: org.apache.spark.sql.DataFrame) = {
-      val wh = new graft.sources.Warehouse(spark,
+      val wh = new graft.sources.AtomicWarehouse(spark,
         java.nio.file.Files.createTempDirectory("graft-ivfres-").toString)
       val ivf = new PersistedIvf(wh)
       ivf.buildWith(corpus, "vec_id", "embedding", cents,
@@ -946,7 +946,7 @@ class TrainingOpsSpec extends SparkSpec {
     val trainedCents = Similarity.trainCentroids(plN, "id", "vec", 8, iterations = 3)
       .select($"cell_id".as("cell"), $"centroid")
     def trainedIvf(residual: Boolean) = {
-      val wh = new graft.sources.Warehouse(spark,
+      val wh = new graft.sources.AtomicWarehouse(spark,
         java.nio.file.Files.createTempDirectory(
           s"graft-ivftr-$residual-").toString)
       val ivf = new PersistedIvf(wh)
@@ -980,7 +980,7 @@ class TrainingOpsSpec extends SparkSpec {
       .select($"vec_id".cast("int").as("cell"), $"embedding".as("centroid"))
     val seeds = embL.filter($"vec_id" < 16)
     val queries = embL.filter($"vec_id" >= 8 && $"vec_id" < 18)
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-rerank-spec-").toString)
     val ivf = new PersistedIvf(wh)
     ivf.buildWith(embL, "vec_id", "embedding", cents,
@@ -1019,7 +1019,7 @@ class TrainingOpsSpec extends SparkSpec {
       .select($"vec_id".cast("int").as("cell"), $"embedding".as("centroid"))
     // a PqSpec with ZERO seed rows would persist an empty codebook and NPE
     // later in topKPq/admit — refuse at build with a diagnosable message
-    val whE = new graft.sources.Warehouse(spark,
+    val whE = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-pq-empty-").toString)
     val e = intercept[IllegalArgumentException](
       new PersistedIvf(whE).buildWith(embL.filter($"vec_id" < 64), "vec_id", "embedding",
@@ -1028,7 +1028,7 @@ class TrainingOpsSpec extends SparkSpec {
     assert(e.getMessage.contains("PqCodebook"), s"undiagnosable: ${e.getMessage}")
     // a seed id above Int.MaxValue would silently WRAP in the stored
     // array<int> codes (LUT joins then miss the wrapped subspace) — refuse
-    val whW = new graft.sources.Warehouse(spark,
+    val whW = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-pq-wide-").toString)
     val wide = embL.filter($"vec_id" < 16)
       .withColumn("vec_id", $"vec_id" + lit(Int.MaxValue.toLong + 7L))
@@ -1051,7 +1051,7 @@ class TrainingOpsSpec extends SparkSpec {
 
     // the scale path: the SAME drop rule over a PersistedIvf's assignment
     // table (its (id, cell, vec) shape is the operator's input contract)
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-semivf-").toString)
     val ivf = new PersistedIvf(wh)
     ivf.buildWith(embL, "vec_id", "embedding", seeds)

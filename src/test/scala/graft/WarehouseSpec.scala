@@ -3,22 +3,19 @@ package graft
 import java.nio.file.Files
 
 import graft.model.Schemas
-import graft.sources.Warehouse
+import graft.sources.{AtomicWarehouse, Warehouse}
 import org.apache.spark.sql.functions._
 
 /** Warehouse semantics: retry/backoff (the reference's DB-awakening contract,
-  * core/database.py:38-50 — ≤3 attempts, 1s then 2s) and atomic replace
+  * core/database.py:38-50 — ≤3 attempts, 1s then 2s) and replace
   * (read-modify-write without clobbering the input mid-plan).
   */
 class WarehouseSpec extends SparkSpec {
 
-  private def freshWh() = new Warehouse(spark, Files.createTempDirectory("graft-whspec-").toString)
-
   test("withRetry: succeeds on third attempt, backoff 1s then 2s") {
-    val wh = freshWh()
     var calls = 0
     val t0 = System.nanoTime()
-    val r = wh.withRetry(attempts = 3, firstBackoffMs = 100) {
+    val r = Warehouse.withRetry(attempts = 3, firstBackoffMs = 100) {
       calls += 1
       if (calls < 3) throw new RuntimeException("db asleep")
       "awake"
@@ -29,17 +26,16 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("withRetry: gives up after the attempt budget") {
-    val wh = freshWh()
     var calls = 0
     val e = intercept[RuntimeException] {
-      wh.withRetry(attempts = 3, firstBackoffMs = 1) { calls += 1; throw new RuntimeException("still asleep") }
+      Warehouse.withRetry(attempts = 3, firstBackoffMs = 1) { calls += 1; throw new RuntimeException("still asleep") }
     }
     assert(e.getMessage == "still asleep" && calls == 3)
   }
 
   test("replace: a table can be rewritten from a plan that reads itself") {
     import spark.implicits._
-    val wh = freshWh()
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-whspec-").toString)
     val t = "dims/Provider"
     wh.append(t, Seq((1, "A", new java.sql.Timestamp(0))).toDF("Id", "Name", "CreateDt"))
     // read-modify-write: bump ids by 10 reading the same table
@@ -47,12 +43,5 @@ class WarehouseSpec extends SparkSpec {
     wh.replace(t, updated)
     val back = wh.read(t, Schemas.provider).collect()
     assert(back.length == 1 && back.head.getInt(0) == 11)
-    // no data residue under .tmp (empty scaffold dirs are fine)
-    val tmp = java.nio.file.Paths.get(s"${wh.root}/.tmp")
-    if (java.nio.file.Files.exists(tmp)) {
-      val leftovers = java.nio.file.Files.walk(tmp).filter(java.nio.file.Files.isRegularFile(_))
-        .toArray
-      assert(leftovers.isEmpty, leftovers.mkString(","))
-    }
   }
 }
