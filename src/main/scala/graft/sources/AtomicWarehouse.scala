@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{array, coalesce, col, collect_set, count, explode, expr, lit, slice, sort_array, struct, sum, when, filter => arrFilter}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -67,6 +67,27 @@ object AtomicWarehouse {
     * URI so `/a/wh` and `file:/a/wh` share one lock.
     */
   private val publishLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Every file under `dir`, depth-first in listing order, as (path
+    * relative to `dir`, status); entries whose name fails `keep` are
+    * skipped, and a skipped directory is never descended into. Walks with
+    * `listStatus`, not `listFiles`: the located statuses `listFiles` builds
+    * load file permissions, which the local FS cannot do for a path under
+    * another scheme (GraftBlobFileSystem's `graftblob:` — "URI scheme is
+    * not file").
+    */
+  private[graft] def listTree(fs: FileSystem, dir: Path,
+      keep: String => Boolean = _ => true): Seq[(String, FileStatus)] = {
+    val b = ArrayBuffer[(String, FileStatus)]()
+    def walk(d: Path, rel: String): Unit = fs.listStatus(d).foreach { st =>
+      val name = st.getPath.getName
+      if (keep(name)) {
+        if (st.isDirectory) walk(st.getPath, s"$rel$name/") else b += ((rel + name, st))
+      }
+    }
+    walk(dir, "")
+    b.toSeq
+  }
 }
 
 class AtomicWarehouse(spark0: SparkSession, root0: String,
@@ -707,34 +728,57 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   // ---- staged transaction state -------------------------------------------
 
+  /** One optimistic-concurrency check, evaluated under the publish lock
+    * right before the commit lands; a failing pin aborts the commit with
+    * `ConcurrentModificationException` (staged files become vacuumable
+    * garbage, never visible). `files` is the table's file set as the
+    * transaction read it and `dvs` their deletion-vector entries then (a
+    * file absent from `dvs` had none).
+    *   - `present`: every pinned file is still visible with its DV entry
+    *     unchanged — a rewrite folding those files' rows and tombstones
+    *     must not resurrect rows a racing rewrite or DV delete removed;
+    *     racing APPENDS stay free.
+    *   - `noGrowth`: no visible file beyond the pinned set — a truncating
+    *     rewrite must not erase a racing append (lost update), and a parent
+    *     delete pins its FK children so a racing child insert aborts it.
+    * Both together pin the exact file set. Files of THIS transaction
+    * (`tx-<txid>-` leaves) never count as growth: by precondition time the
+    * staged files have already moved into the table directories, where a
+    * raw (no-manifest-history) table's physical listing sees them.
+    */
+  private case class Pin(table: String, files: Seq[String],
+      dvs: Map[String, String], present: Boolean, noGrowth: Boolean)
+
+  /** Pin `files` as read in `st`: still visible with unchanged DV entries
+    * at publish, and (`noGrowth`) nothing else visible beside them.
+    */
+  private def pinFiles(st: LogState, table: String, files: Seq[String],
+      noGrowth: Boolean = false): Pin =
+    Pin(table, files, files.flatMap(f => st.dvs.get((table, f)).map(f -> _)).toMap,
+      present = true, noGrowth)
+
+  /** FK RESTRICT race closer for a parent whose rows may leave: each
+    * referencing child's current file set, pinned against growth, so a
+    * child insert racing the publish aborts the commit instead of
+    * orphaning itself (child deletes stay free). Taken BEFORE the refusal
+    * probe (pin-then-probe): a child insert landing in the probe-to-publish
+    * window must abort this commit, not be blessed by a post-race snapshot.
+    */
+  private def childPins(table: String): Seq[Pin] =
+    referencingFks(table).map(_._1).distinct.map(c =>
+      Pin(c, committedOrPhysical(c).sorted, Map.empty, present = false, noGrowth = true))
+
   /** One staged write: `truncate` optionally first (replace/delete), then
     * the staged files to add. `stageDir` is where the data files currently
-    * sit; relative subpaths are preserved on move (partition dirs).
+    * sit; relative subpaths are preserved on move (partition dirs). `pins`
+    * may name OTHER tables (FK freeze pins across parent and child).
     */
-  /** Cross-table commit pin (the FK race closer — the DV-pin pattern
-    * applied across tables). `noGrowth`: the pinned table may not have
-    * gained files since the pin (a parent delete pins its children — a
-    * racing child insert aborts the delete; child deletes stay free).
-    * Otherwise: every pinned file must still be visible AND carry its
-    * pinned deletion-vector state (a child append pins its probed parents —
-    * a racing parent rewrite or DV delete aborts the append; parent
-    * APPENDS, which can only add keys, stay free).
-    */
-  private case class FreezePin(table: String, files: Seq[String],
-      dvs: Map[String, String], noGrowth: Boolean)
-
   private case class Staged(table: String, truncate: Boolean,
       stageDir: Option[Path], partitioned: Boolean,
-      expected: Option[Seq[String]] = None,
       schemaJson: Option[String] = None,
       removes: Seq[String] = Nil,
-      requirePresent: Option[Seq[String]] = None,
-      dvExpected: Seq[(String, Option[String])] = Nil,
       extraLines: Seq[String] = Nil,
-      // cross-table pins: OTHER tables whose state must hold at publish
-      // (see [[FreezePin]]) — a child insert racing a parent delete aborts
-      // one side instead of slipping through the check-then-commit window
-      frozen: Seq[FreezePin] = Nil)
+      pins: Seq[Pin] = Nil)
 
   private class Tx {
     val txid: String = java.util.UUID.randomUUID().toString
@@ -743,23 +787,12 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     def nextStageDir(): Path = { seq += 1; new Path(stageRoot, s"$txid/$seq") }
   }
 
-  private def stagedDataFiles(dir: Path): Seq[String] = {
-    if (!fs.exists(dir)) return Nil
-    // listStatus, not listFiles: the located statuses listFiles builds load
-    // file permissions, which the local FS cannot do for a path under
-    // another scheme (GraftBlobFileSystem's graftblob:)
-    val b = ArrayBuffer[String]()
-    def walk(d: Path, rel: String): Unit = fs.listStatus(d).foreach { st =>
-      val name = st.getPath.getName
-      // Spark writes _SUCCESS and dot-CRCs alongside data; only data files
-      // enter the manifest
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        if (st.isDirectory) walk(st.getPath, s"$rel$name/") else b += rel + name
-      }
-    }
-    walk(dir, "")
-    b.toSeq
-  }
+  // Spark writes _SUCCESS and dot-CRCs alongside data; only data files
+  // enter the manifest
+  private def stagedDataFiles(dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Nil
+    else AtomicWarehouse.listTree(fs, dir, n => !n.startsWith("_") && !n.startsWith("."))
+      .map(_._1)
 
   /** A table's current readable file set: manifest-resolved once the table
     * has history, physical directory contents before (raw/legacy tables —
@@ -781,12 +814,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     */
   private class TxView(tx: Tx) extends Warehouse(spark0, root0) {
     private def stage(table: String, truncate: Boolean, partitioned: Boolean,
-        write: Option[Path => Unit], expected: Option[Seq[String]] = None,
-        schemaOf: Option[StructType] = None, removes: Seq[String] = Nil,
-        requirePresent: Option[Seq[String]] = None,
-        dvExpected: Seq[(String, Option[String])] = Nil,
-        extraLines: Seq[String] = Nil,
-        frozen: Seq[FreezePin] = Nil): Unit = {
+        write: Option[Path => Unit], schemaOf: Option[StructType] = None,
+        removes: Seq[String] = Nil, extraLines: Seq[String] = Nil,
+        pins: Seq[Pin] = Nil): Unit = {
       val dirOpt = write.map { w =>
         val d = tx.synchronized(tx.nextStageDir())
         Warehouse.withRetry()(w(d))
@@ -818,47 +848,40 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       json.foreach(j => require(!j.contains('\t') && !j.contains('\n'),
         s"schema JSON for $table contains TSV control characters"))
       tx.synchronized(tx.entries +=
-        Staged(table, truncate, dirOpt, partitioned, expected, json,
-          removes, requirePresent, dvExpected, extraLines, frozen))
+        Staged(table, truncate, dirOpt, partitioned, json, removes, extraLines, pins))
     }
 
-    /** Stage raw manifest lines (deletion-vector commits) with the same
-      * optimistic checks as a file rewrite: `requirePresent` pins file
-      * visibility, `dvExpected` pins each file's current DV entry.
+    /** Stage raw manifest lines (deletion-vector commits, stream ledger
+      * `txn` lines, `cdfnoop` markers) under the given pins.
       */
     private[sources] def manifestLines(table: String, lines: Seq[String],
-        requirePresent: Seq[String],
-        dvExpected: Seq[(String, Option[String])],
-        frozen: Seq[FreezePin] = Nil): Unit =
+        pins: Seq[Pin] = Nil): Unit =
       stage(table, truncate = false, partitioned = false, None,
-        requirePresent = Some(requirePresent), dvExpected = dvExpected,
-        extraLines = lines, frozen = frozen)
+        extraLines = lines, pins = pins)
 
     /** Conflict-checked replace for read-modify-write maintenance
-      * ([[AtomicWarehouse.compact]]): `expected` is the file set the caller
-      * read; the commit aborts with `ConcurrentModificationException` if the
-      * table's visible set changed — a racing append landing mid-compaction
-      * would otherwise be truncated away by the rewrite (lost update).
+      * ([[AtomicWarehouse.compact]]): `pin` holds the exact file set (and DV
+      * state) the caller read; the commit aborts with
+      * `ConcurrentModificationException` if it changed — a racing append
+      * landing mid-compaction would otherwise be truncated away by the
+      * rewrite (lost update).
       */
-    private[sources] def replaceExpecting(table: String, df: DataFrame,
-        expected: Seq[String], dvExpected: Seq[(String, Option[String])] = Nil): Unit =
+    private[sources] def replaceExpecting(table: String, df: DataFrame, pin: Pin): Unit =
       stage(table, truncate = true, partitioned = false,
         Some(d => toPhysicalDf(table, df).write.mode(SaveMode.Overwrite).parquet(d.toString)),
-        expected = Some(expected), schemaOf = Some(df.schema), dvExpected = dvExpected)
+        schemaOf = Some(df.schema), pins = Seq(pin))
 
-    /** Copy-on-write file rewrite for row-level DML ([[AtomicWarehouse
-      * .deleteWhere]]/[[AtomicWarehouse.updateWhere]]): un-reference exactly
-      * `removedFiles` (single-file `remove` lines, no truncate semantics) and
-      * add `df`'s files in the same commit. The precondition requires every
-      * removed file to still be visible at publish time — a racing compaction
-      * or replace that rewrote them aborts this commit (the rewrite would
-      * resurrect rows it had already folded elsewhere); racing APPENDS are
-      * untouched and unaffected.
+    /** Copy-on-write file rewrite for row-level DML and tail maintenance:
+      * un-reference exactly `removedFiles` (single-file `remove` lines, no
+      * truncate semantics) and add `df`'s files in the same commit. The
+      * removed files are pinned as read in `st` — a racing compaction or
+      * replace that rewrote them, or a DV delete on them, aborts this commit
+      * (the rewrite would resurrect rows already folded elsewhere); racing
+      * APPENDS are untouched and unaffected.
       */
     private[sources] def rewriteExcluding(table: String, removedFiles: Seq[String],
-        df: DataFrame, dvExpected: Seq[(String, Option[String])] = Nil,
-        validate: Boolean = true,
-        frozen: Seq[FreezePin] = Nil): Unit = {
+        df: DataFrame, st: LogState, validate: Boolean = true,
+        pins: Seq[Pin] = Nil): Unit = {
       // DML post-images must satisfy the invariants (an UPDATE can set a
       // violating value); surviving rows re-prove for free within the
       // rewrite-sized batch. Row-preserving maintenance (compaction,
@@ -874,8 +897,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       stage(table, truncate = false, partitioned = false,
         Some(d => toPhysicalDf(table, df).write.mode(SaveMode.Overwrite).parquet(d.toString)),
         schemaOf = Some(df.schema), removes = removedFiles,
-        requirePresent = Some(removedFiles), dvExpected = dvExpected,
-        frozen = frozen ++ parentPins)
+        pins = pinFiles(st, table, removedFiles) +: (pins ++ parentPins))
     }
 
     // a child batch probes its STAGED parent when the same tx wrote it
@@ -888,19 +910,15 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     // post-race state the probe never checked (parent appends — key
     // additions — pass the pin freely either way). Staged parents need no
     // pin: they commit IN this transaction.
-    private def fkCheck(table: String, df: DataFrame): Seq[FreezePin] = {
+    private def fkCheck(table: String, df: DataFrame): Seq[Pin] = {
       val stagedTables = tx.synchronized(tx.entries.map(_.table).toSet)
       def isStaged(p: String): Boolean =
         stagedTables.exists(t => p == t || p.startsWith(t + "/"))
       val st = foldedState()
-      val prePins: Map[String, FreezePin] =
+      val prePins: Map[String, Pin] =
         foreignKeysOf(table).values.map(_._2).toSeq.distinct
-          .filterNot(isStaged).map { p =>
-            val files = committedOrPhysical(p).sorted
-            p -> FreezePin(p, files,
-              files.flatMap(f => st.dvs.get((p, f)).map(f -> _)).toMap,
-              noGrowth = false)
-          }.toMap
+          .filterNot(isStaged)
+          .map(p => p -> pinFiles(st, p, committedOrPhysical(p).sorted)).toMap
       val probedCommitted = scala.collection.mutable.LinkedHashSet[String]()
       enforceForeignKeys(table, df, (p, s) => {
         if (isStaged(p)) Some(read(p, s))
@@ -926,21 +944,13 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
             "first or dropForeignKey")
       }
 
-    // freeze pins for a refusal-checked parent op: the referencing
-    // children's file sets, snapshotted at check time so a child insert
-    // racing the publish aborts the commit instead of orphaning itself
-    private def fkFreezePins(table: String): Seq[FreezePin] =
-      referencingFks(table).map(_._1).distinct
-        .map(c => FreezePin(c, committedOrPhysical(c).sorted,
-          Map.empty, noGrowth = true))
-
     override def append(table: String, df: DataFrame): Unit = {
       enforceConstraints(table, df)
       val parentPins = fkCheck(table, df)
       enforceUniques(table, df, Nil, truncating = false)
       stage(table, truncate = false, partitioned = false,
         Some(d => toPhysicalDf(table, df).write.mode(SaveMode.Overwrite).parquet(d.toString)),
-        schemaOf = Some(df.schema), frozen = parentPins)
+        schemaOf = Some(df.schema), pins = parentPins)
     }
 
     /** Append files ALREADY WRITTEN by streaming-sink tasks (physical
@@ -983,7 +993,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
           }
           loc.set(d)
         },
-        schemaOf = Some(schema), frozen = parentPins)
+        schemaOf = Some(schema), pins = parentPins)
     }
 
     override def appendPartitioned(table: String, df: DataFrame,
@@ -994,7 +1004,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       stage(table, truncate = false, partitioned = true,
         Some(d => toPhysicalDf(table, df).write.mode(SaveMode.Overwrite)
           .partitionBy(partitionCols.map(c => physColOf(table, c)): _*).parquet(d.toString)),
-        schemaOf = Some(df.schema), frozen = parentPins)
+        schemaOf = Some(df.schema), pins = parentPins)
     }
 
     // staged source files are never disturbed by the staged write, so
@@ -1003,24 +1013,19 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     // recorded schema line stays logical.
     override def replace(table: String, df: DataFrame): Unit = {
       enforceConstraints(table, df)
-      // child pins snapshot BEFORE the refusal probe (pin-then-probe): a
-      // child insert landing in the probe-to-publish window must abort
-      // this commit, not be blessed by a post-race snapshot
-      val childPins = fkFreezePins(table)
+      val children = childPins(table) // pin-then-probe
       fkRefuseTruncate(table, "replace")
       val parentPins = fkCheck(table, df)
       enforceUniques(table, df, Nil, truncating = true)
       stage(table, truncate = true, partitioned = false,
         Some(d => toPhysicalDf(table, df).write.mode(SaveMode.Overwrite).parquet(d.toString)),
-        schemaOf = Some(df.schema), frozen = childPins ++ parentPins)
+        schemaOf = Some(df.schema), pins = children ++ parentPins)
     }
 
     override def delete(table: String): Unit = {
-      // pin-then-probe, as in replace
-      val childPins = fkFreezePins(table)
+      val children = childPins(table) // pin-then-probe
       fkRefuseTruncate(table, "delete")
-      stage(table, truncate = true, partitioned = false, None,
-        frozen = childPins)
+      stage(table, truncate = true, partitioned = false, None, pins = children)
     }
 
     override def read(table: String, schema: StructType): DataFrame = {
@@ -1094,9 +1099,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     override def compactWith(table: String, schema: StructType,
         transform: DataFrame => DataFrame): Unit = {
       val expected = committedOrPhysical(table)
-      val stDv = foldedState()
-      val dvSnap = expected.map(f => f -> stDv.dvs.get((table, f)))
-      replaceExpecting(table, transform(read(table, schema)), expected, dvSnap)
+      val pin = pinFiles(foldedState(), table, expected, noGrowth = true)
+      replaceExpecting(table, transform(read(table, schema)), pin)
     }
 
     override def atomically(fn: Warehouse => Unit): Unit = fn(this)
@@ -1104,11 +1108,20 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   // ---- public transactional surface ---------------------------------------
 
-  override def atomically(fn: Warehouse => Unit): Unit = {
+  override def atomically(fn: Warehouse => Unit): Unit = transact(fn)
+
+  /** Run `fn` against a fresh transaction view and commit what it staged —
+    * the typed entry of every conflict-checked operation ([[atomically]] is
+    * this with the view's type hidden). Any failure deletes the staged files
+    * and propagates; a failed [[Pin]] surfaces as
+    * `ConcurrentModificationException`.
+    */
+  private def transact[T](fn: TxView => T): T = {
     val tx = new Tx()
     try {
-      fn(new TxView(tx))
+      val out = fn(new TxView(tx))
       commit(tx)
+      out
     } catch {
       case e: Throwable =>
         fs.delete(new Path(stageRoot, tx.txid), true) // staged files only
@@ -1251,59 +1264,20 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
         }
       }
     }
-    // optimistic-concurrency checks from conflict-guarded entries
-    // (replaceExpecting): abort — staged/moved files become vacuumable
-    // garbage, never visible — rather than truncate a racing commit away.
-    // The comparison excludes THIS transaction's own tx-<txid>- files: by
-    // precondition time the staged files above have already MOVED into the
-    // table directories, so on a raw (no-manifest-history) table the
-    // physical-listing fallback would see them and fail forever — each of
-    // compact's retries leaving another visible duplicate rewrite behind.
+    // every entry's pins, checked in one pass under the publish lock (see
+    // [[Pin]]); this transaction's own moved files never count as growth
     val ownTx = "tx-" + tx.txid + "-"
-    val checks = tx.entries.collect {
-      case e if e.expected.isDefined => (e.table, e.expected.get.sorted)
-    }.toSeq
-    // subset checks from rewriteExcluding: every file this commit REMOVES
-    // must still be visible — a racing truncate/compaction that already
-    // folded those rows elsewhere makes this rewrite resurrect them
-    val presentChecks = tx.entries.collect {
-      case e if e.requirePresent.isDefined => (e.table, e.requirePresent.get)
-    }.toSeq
-    // DV pins from conflict-guarded rewrites: a racing deleteWhereDv on a
-    // file this commit rewrites/replaces would be silently FOLDED AWAY
-    // (the rewrite was computed against the older, smaller tombstone set —
-    // deleted rows resurrect), so the commit aborts when any pinned file's
-    // dv entry changed since the rewrite read it
-    val dvChecks = tx.entries.collect {
-      case e if e.dvExpected.nonEmpty => (e.table, e.dvExpected)
-    }.toSeq
-    // cross-table freeze pins (FK RESTRICT race closer): the pinned OTHER
-    // table's visible file set must be exactly what the staging-time probe
-    // saw — a child insert racing a parent delete aborts one side
-    val frozenChecks = tx.entries.flatMap(_.frozen).toSeq
-    if (lines.nonEmpty) publish(lines.toSeq,
-      precondition = () => checks.forall { case (t, exp) =>
-        committedOrPhysical(t)
-          .filterNot(_.split('/').last.startsWith(ownTx)).sorted == exp
-      } && presentChecks.forall { case (t, req) =>
-        val vis = committedOrPhysical(t).toSet
-        req.forall(vis.contains)
-      } && dvChecks.forall { case (t, exp) =>
-        val now = foldedState()
-        exp.forall { case (f, j) => now.dvs.get((t, f)) == j }
-      } && frozenChecks.forall { pin =>
-        val now = committedOrPhysical(pin.table)
-          .filterNot(_.split('/').last.startsWith(ownTx))
-        if (pin.noGrowth) {
-          val pinned = pin.files.toSet
-          now.forall(pinned.contains)
-        } else {
-          val vis = now.toSet
-          val st = foldedState()
-          pin.files.forall(vis.contains) &&
-            pin.files.forall(f => st.dvs.get((pin.table, f)) == pin.dvs.get(f))
-        }
-      })
+    val pins = tx.entries.flatMap(_.pins).toSeq
+    if (lines.nonEmpty) publish(lines.toSeq, precondition = () => {
+      lazy val st = foldedState()
+      pins.forall { p =>
+        val now = committedOrPhysical(p.table)
+          .filterNot(_.split('/').last.startsWith(ownTx)).toSet
+        (!p.present || p.files.forall(f =>
+          now.contains(f) && st.dvs.get((p.table, f)) == p.dvs.get(f))) &&
+          (!p.noGrowth || now.subsetOf(p.files.toSet))
+      }
+    })
     fs.delete(new Path(stageRoot, tx.txid), true)
     // physical delete AFTER the commit is visible: a crash before this point
     // leaves the files as unreferenced garbage (vacuum), never as a
@@ -1320,38 +1294,44 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
   }
 
-  /** Single-op writes retry pin aborts: an append whose FK parent pin lost
-    * a race to a parent rewrite (or a parent delete whose child pin lost to
-    * a child insert) re-runs its checks against the NEW state — converging
-    * to a clean landing or the proper refusal. Multi-op transactions keep
-    * surfacing the ConcurrentModificationException (the caller owns the
-    * retry boundary there).
+  /** The one optimistic-concurrency retry loop: `attempt` re-reads its
+    * snapshot, re-stages and re-pins from scratch, and re-runs each time its
+    * commit loses a race (`ConcurrentModificationException`: a pin failed,
+    * nothing was published). After 8 lost races it gives up loudly, naming
+    * `op`. Single-op writes retry too: an append whose FK parent pin lost to
+    * a parent rewrite (or a parent delete whose child pin lost to a child
+    * insert) re-runs its checks against the NEW state, converging to a
+    * clean landing or the proper refusal. Multi-op transactions
+    * ([[atomically]]) keep surfacing the exception — the caller owns the
+    * retry boundary there.
     */
-  private def retryPinAborts[T](op: => T): T = {
+  private def retryConflicts[T](op: => String)(attempt: => T): T = {
+    var lost: java.util.ConcurrentModificationException = null
     var attempts = 0
-    while (true) {
-      try return op
+    while (attempts < 8) {
+      try return attempt
       catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts >= 8) throw e
+        case e: java.util.ConcurrentModificationException => lost = e; attempts += 1
       }
     }
-    sys.error("unreachable")
+    throw new java.util.ConcurrentModificationException(
+      s"$op lost $attempts straight races to concurrent commits; tables are " +
+        "intact — retry when the writers are quieter", lost)
   }
 
   override def append(table: String, df: DataFrame): Unit =
-    retryPinAborts(atomically(_.append(table, df)))
+    retryConflicts(s"append to $table")(atomically(_.append(table, df)))
 
   override def appendPartitioned(table: String, df: DataFrame,
       partitionCols: Seq[String]): Unit =
-    retryPinAborts(atomically(_.appendPartitioned(table, df, partitionCols)))
+    retryConflicts(s"append to $table")(
+      atomically(_.appendPartitioned(table, df, partitionCols)))
 
   override def replace(table: String, df: DataFrame): Unit =
-    retryPinAborts(atomically(_.replace(table, df)))
+    retryConflicts(s"replace of $table")(atomically(_.replace(table, df)))
 
   override def delete(table: String): Unit =
-    retryPinAborts(atomically(_.delete(table)))
+    retryConflicts(s"delete of $table")(atomically(_.delete(table)))
 
   /** Manifest-true for a table with manifest history — visible files, or a
     * recorded schema (a committed-empty table); a committed `delete` leaves
@@ -1661,20 +1641,21 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * (a re-created table must not skip a new stream's early batches).
     */
   def appendOnce(table: String, appId: String, batchId: Long,
-      df: DataFrame): Boolean = {
+      df: DataFrame): Boolean =
+    txnLine(table, appId, batchId).exists { line =>
+      transact { tv => tv.append(table, df); tv.manifestLines(table, Seq(line)) }
+      true
+    }
+
+  /** The stream ledger line committing (appId, batchId) for `table`, or
+    * None when the high-water already covers `batchId` (a replay).
+    */
+  private def txnLine(table: String, appId: String, batchId: Long): Option[String] = {
     require(appId.nonEmpty && !appId.exists(c => c == '\t' || c == '\n'),
       s"appId '$appId' is empty or contains TSV control characters")
     require(batchId >= 0L, s"batchId must be non-negative, got $batchId")
-    if (foldedState().txns.get((table, appId)).exists(_ >= batchId)) return false
-    atomically {
-      case tv: TxView =>
-        tv.append(table, df)
-        tv.manifestLines(table, Seq(s"txn\t$table\t$appId\t$batchId"),
-          requirePresent = Nil, dvExpected = Nil)
-      case w => throw new IllegalStateException( // unreachable: atomically hands a TxView
-        s"AtomicWarehouse.atomically produced a ${w.getClass.getName}")
-    }
-    true
+    if (foldedState().txns.get((table, appId)).exists(_ >= batchId)) None
+    else Some(s"txn\t$table\t$appId\t$batchId")
   }
 
   /** [[appendOnce]] for files ALREADY WRITTEN by streaming-sink tasks (the
@@ -1689,29 +1670,20 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     */
   def appendOnceStaged(table: String, appId: String, batchId: Long,
       srcDir: String, leaves: Seq[String], schema: StructType): Boolean = {
-    require(appId.nonEmpty && !appId.exists(c => c == '\t' || c == '\n'),
-      s"appId '$appId' is empty or contains TSV control characters")
-    require(batchId >= 0L, s"batchId must be non-negative, got $batchId")
+    val line = txnLine(table, appId, batchId)
     require(leaves.forall(l => !l.contains("/") && !l.startsWith(".")),
       "staged stream leaves must be flat, non-hidden file names")
     val src = new Path(srcDir)
-    def cleanup(): Unit =
+    try line.exists { l =>
+      transact { tv =>
+        if (leaves.nonEmpty) tv.appendStagedParquetDir(table, src, leaves, schema)
+        tv.manifestLines(table, Seq(l))
+      }
+      true
+    } finally { // success: uncommitted-attempt orphans; replay or failure: the dir
       try { if (fs.exists(src)) fs.delete(src, true) }
       catch { case _: java.io.IOException => () }
-    if (foldedState().txns.get((table, appId)).exists(_ >= batchId)) {
-      cleanup(); return false
     }
-    try {
-      atomically {
-        case tv: TxView =>
-          if (leaves.nonEmpty) tv.appendStagedParquetDir(table, src, leaves, schema)
-          tv.manifestLines(table, Seq(s"txn\t$table\t$appId\t$batchId"),
-            requirePresent = Nil, dvExpected = Nil)
-        case w => throw new IllegalStateException( // unreachable: atomically hands a TxView
-          s"AtomicWarehouse.atomically produced a ${w.getClass.getName}")
-      }
-    } finally cleanup() // success: uncommitted-attempt orphans; failure: the batch replays
-    true
   }
 
   /** The last batch id [[appendOnce]] committed for (table, appId) — what
@@ -2156,7 +2128,6 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     foldedState().schemas.get(table).map(j =>
       org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
 
-  private[graft] def columnMap(table: String): Map[String, String] = colMapOf(table)
 
   private[graft] def visibleDataFiles(table: String): Seq[String] =
     committedOrPhysical(table)
@@ -2619,7 +2590,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * the logical label in the manifest (the Delta column-mapping idea in its
     * smallest form), so it is metadata-only at any table size.
     */
-  private def colMapOf(table: String): Map[String, String] =
+  private[graft] def colMapOf(table: String): Map[String, String] =
     parseColMap(foldedState().colmap.get(table))
 
   private def parseColMap(json: Option[String]): Map[String, String] =
@@ -3171,8 +3142,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     clusterCols.foreach(c => require(schema.fieldNames.contains(c),
       s"cluster column '$c' is not in the schema"))
     val physHead = physColOf(table, clusterCols.head)
-    var attempts = 0
-    while (attempts < 8) {
+    retryConflicts(s"reclusterIncremental on $table") {
       val st = foldedState()
       val files = committedOrPhysical(table)
       require(files.forall(!_.contains("/")),
@@ -3198,33 +3168,34 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       // the latter block driver pruning until they carry stats
       val statless = parsed.collect { case (f, None) => f }
       val tail = (eroded ++ statless).distinct
-      if (tail.isEmpty) return ReclusterResult(0, files.size, 0L)
-      val bytes = fileBytes(table, tail)
-      val dvSnap = tail.map(f => f -> st.dvs.get((table, f)))
-      val src = readFiles(table, schema, tail, dvOpt = Some(rawDvs(st, table)))
-      val n = if (outFiles > 0) outFiles else tail.size
-      val out = src.repartitionByRange(math.max(n, 1), clusterCols.map(col): _*)
-        .sortWithinPartitions(clusterCols.map(col): _*)
-      try {
-        atomically {
-          case tv: TxView =>
-            tv.rewriteExcluding(table, tail, out, dvSnap, validate = false)
-            // row-preserving maintenance: the change feed skips this
-            // version instead of refusing the window
-            if (changeFeedEnabled(table))
-              tv.manifestLines(table, Seq(s"cdfnoop\t$table"), Nil, Nil)
-          case w => throw new IllegalStateException(
-            s"AtomicWarehouse.atomically produced a ${w.getClass.getName}")
-        }
+      if (tail.isEmpty) ReclusterResult(0, files.size, 0L)
+      else {
+        val n = if (outFiles > 0) outFiles else tail.size
+        val r = rewriteTail(table, schema, st, files, tail, fileBytes(table, tail))(
+          _.repartitionByRange(math.max(n, 1), clusterCols.map(col): _*)
+            .sortWithinPartitions(clusterCols.map(col): _*))
         setClusterBy(table, clusterCols)
-        return ReclusterResult(tail.size, files.size - tail.size, bytes)
-      } catch {
-        case _: java.util.ConcurrentModificationException => attempts += 1
+        r
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"reclusterIncremental on $table lost $attempts straight races to " +
-        "concurrent commits; table is intact — retry when the writer is quieter")
+  }
+
+  /** The row-preserving tail rewrite shared by [[reclusterIncremental]],
+    * [[compactSmall]] and [[compactDv]]: read `tail` as of `st` with its
+    * deletion vectors folded, lay it out, and commit a remove+add rewrite
+    * pinned on the tail's visibility and DV state (racing appends never
+    * lost, a racing DV delete or rewrite aborts). Row-preserving, so the
+    * change feed skips the version (`cdfnoop`) instead of refusing it.
+    */
+  private def rewriteTail(table: String, schema: StructType, st: LogState,
+      files: Seq[String], tail: Seq[String], bytes: Long)(
+      layout: DataFrame => DataFrame): ReclusterResult = {
+    val src = readFiles(table, schema, tail, dvOpt = Some(rawDvs(st, table)))
+    transact { tv =>
+      tv.rewriteExcluding(table, tail, layout(src), st, validate = false)
+      if (changeFeedEnabled(table)) tv.manifestLines(table, Seq(s"cdfnoop\t$table"))
+    }
+    ReclusterResult(tail.size, files.size - tail.size, bytes)
   }
 
   /** Range-cluster a DML rewrite's output on the table's declared cluster
@@ -3390,9 +3361,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * windows crossing the delete (file diff != row diff there).
     */
   def deleteWhere(table: String, schema: StructType, preds: Seq[FilePred]): Long =
-    rewriteWhere(table, schema, preds, { case (df, hit) => df.filter(hit === false) },
-      { case (df, hit) =>
-        df.filter(hit).withColumn(changeTypeCol, lit("delete")) })
+    deleteWhereExpr(table, schema, FilePred.toColumn(preds, schema), preds)
 
   /** `UPDATE table SET ... WHERE <conjunction>`, copy-on-write on the
     * candidate files only. Assignment expressions may reference the row's
@@ -3401,22 +3370,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * Same conflict/time-travel contract as [[deleteWhere]].
     */
   def updateWhere(table: String, schema: StructType, preds: Seq[FilePred],
-      sets: Seq[(String, Column)]): Long = {
-    require(sets.nonEmpty, "updateWhere with no assignments")
-    sets.foreach { case (c, _) =>
-      require(schema.fieldNames.contains(c), s"unknown column '$c' in updateWhere SET") }
-    val setMap = sets.toMap
-    def applySets(df: DataFrame, hit: Column): DataFrame =
-      df.select(schema.fields.toSeq.map { f =>
-        setMap.get(f.name) match {
-          case Some(expr) => when(hit, expr.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    rewriteWhere(table, schema, preds,
-      { case (df, hit) => applySets(df, hit) },
-      { case (df, hit) => updateChangeRows(schema, setMap, df, hit) })
-  }
+      sets: Seq[(String, Column)]): Long =
+    updateWhereExpr(table, schema, FilePred.toColumn(preds, schema), sets, preds)
 
   /** UPDATE change slice in ONE pass: pre- and post-image per touched row as
     * an exploded 2-struct array — the 2-branch union scanned the candidate
@@ -3504,9 +3459,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     */
   val changeTypeCol = "_change_type"
 
-  private def changesTable(table: String): String = s"$table/_changes"
+  private[graft] def changesTable(table: String): String = s"$table/_changes"
 
-  private def cdfSchema(schema: StructType): StructType =
+  private[graft] def cdfSchema(schema: StructType): StructType =
     StructType(schema.fields.toSeq :+
       StructField(changeTypeCol, org.apache.spark.sql.types.StringType, nullable = false))
 
@@ -3711,11 +3666,6 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     (Map.empty[String, String] +: eras).distinct
   }
 
-  /** Tables and paths the CDF streaming source needs (package seams). */
-  private[graft] def changesTableOf(table: String): String = changesTable(table)
-  private[graft] def cdfSchemaOf(schema: StructType): StructType = cdfSchema(schema)
-  private[graft] def changeFeedOn(table: String): Boolean = changeFeedEnabled(table)
-
   /** The earliest commit version whose recorded changes remain replayable
     * (0 until a purge raises it); the minimum usable `fromVersion` is one
     * less.
@@ -3798,8 +3748,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     deleteWhereDvAll(Seq((table, schema, preds)), maxDvPerFile, alsoInTx).head
 
   /** One DV delete's fully-planned commit payload (or the no-op result). */
-  private case class DvPlan(table: String, lines: Seq[String],
-      touched: Seq[String], pins: Seq[(String, Option[String])],
+  private case class DvPlan(table: String, lines: Seq[String], pin: Pin,
       changeSlice: Option[DataFrame], result: DvDeleteResult)
 
   private def planDvDelete(table: String, schema: StructType,
@@ -3866,8 +3815,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       else Some(sel(readTagged(table, schema, cands, m, existingJson), schema, m)
         .filter(coalesce(cond, lit(false)))
         .withColumn(changeTypeCol, lit("delete")))
-    Right(DvPlan(table, lines, newOrds.keys.toSeq,
-      dvBefore.toSeq.filter { case (f, _) => newOrds.contains(f) },
+    Right(DvPlan(table, lines, pinFiles(st, table, newOrds.keys.toSeq),
       changeSlice, DvDeleteResult(deleted, newOrds.size, 0, skipped.size)))
   }
 
@@ -3896,16 +3844,13 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     // file sets are pinned BEFORE the probe and ride the commit
     // precondition — a child insert racing between probe and publish
     // aborts this commit (cross-table freeze, the DV-pin pattern).
-    var attempts = 0
-    while (attempts < 8) {
+    retryConflicts(s"deleteWhereDvAll on ${targets.map(_._1).mkString(", ")}") {
       // probe + pin per attempt: a retry caused by a racing child commit
       // must re-probe against the child's NEW state, not re-pin the old one
-      val childPins: Seq[FreezePin] = targets.flatMap {
+      val children: Seq[Pin] = targets.flatMap {
         case (tbl, schema, preds) =>
           if (referencingFks(tbl).nonEmpty && exists(tbl)) {
-            val pins = referencingFks(tbl).map(_._1).distinct
-              .map(c => FreezePin(c, committedOrPhysical(c).sorted,
-                Map.empty, noGrowth = true))
+            val pins = childPins(tbl)
             val cond = FilePred.toColumn(preds, schema)
             enforceFkRestrict(tbl, pCols =>
               scanWhere(tbl, schema, preds).filter(coalesce(cond, lit(false)))
@@ -3917,40 +3862,22 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       val planned = targets.map { case (table, schema, preds) =>
         planDvDelete(table, schema, preds, maxDvPerFile)
       }
-      if (planned.forall(_.isLeft))
-        return planned.map(_.left.getOrElse(sys.error("unreachable")))
-      try {
+      val plans = planned.collect { case Right(p) => p }
+      if (plans.nonEmpty) {
         // one transaction across all targets: dv lines + change-feed
         // slices + caller rows publish atomically; pins abort on any
         // racing DV delete (last-line-wins would drop its ordinals) or
         // rewrite (our ordinals would tombstone NEW rows)
-        atomically {
-          case tv: TxView =>
-            var first = true
-            planned.foreach {
-              case Right(p) =>
-                tv.manifestLines(p.table, p.lines, p.touched, p.pins,
-                  frozen = if (first) childPins else Nil)
-                first = false
-                p.changeSlice.foreach(cs => tv.append(changesTable(p.table), cs))
-              case Left(_) =>
-            }
-            alsoInTx(tv) // caller rows (derived-index stats, ledgers) ride along
-          case w => throw new IllegalStateException(
-            s"AtomicWarehouse.atomically produced a ${w.getClass.getName}")
+        transact { tv =>
+          plans.zipWithIndex.foreach { case (p, i) =>
+            tv.manifestLines(p.table, p.lines, p.pin +: (if (i == 0) children else Nil))
+            p.changeSlice.foreach(cs => tv.append(changesTable(p.table), cs))
+          }
+          alsoInTx(tv) // caller rows (derived-index stats, ledgers) ride along
         }
-        return planned.map {
-          case Right(p) => p.result
-          case Left(r) => r
-        }
-      } catch {
-        case _: java.util.ConcurrentModificationException => attempts += 1
       }
+      planned.map(_.fold(identity, _.result))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"deleteWhereDvAll on ${targets.map(_._1).mkString(", ")} lost $attempts " +
-        "straight races to concurrent commits; tables are intact — retry " +
-        "when the writers are quieter")
   }
 
   /** Bin-pack SMALL files — OPTIMIZE's other half beside
@@ -3968,8 +3895,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       targetBytes: Long = 128L << 20): ReclusterResult = {
     require(minBytes > 0 && targetBytes >= minBytes,
       s"need 0 < minBytes <= targetBytes, got $minBytes/$targetBytes")
-    var attempts = 0
-    while (attempts < 8) {
+    retryConflicts(s"compactSmall on $table") {
       val st = foldedState()
       val files = committedOrPhysical(table)
       require(files.forall(!_.contains("/")),
@@ -3979,35 +3905,19 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       val sized = files.map(f => f -> recordedSz.getOrElse(f,
         fs.getFileStatus(new Path(s"${path(table)}/$f")).getLen))
       val small = sized.filter(_._2 < minBytes)
-      if (small.size <= 1) return ReclusterResult(0, files.size, 0L)
-      val smallBytes = small.map(_._2).sum
-      val outFiles = math.max(1, ((smallBytes + targetBytes - 1) / targetBytes).toInt)
-      val tail = small.map(_._1)
-      val dvSnap = tail.map(f => f -> st.dvs.get((table, f)))
-      val src = readFiles(table, schema, tail, dvOpt = Some(rawDvs(st, table)))
-      val cols = clusterBy(table).filter(_.forall(schema.fieldNames.contains))
-      val out = cols match {
-        case Some(cs) => src.repartitionByRange(outFiles, cs.map(col): _*)
-          .sortWithinPartitions(cs.map(col): _*)
-        case None => src.coalesce(outFiles)
-      }
-      try {
-        atomically {
-          case tv: TxView =>
-            tv.rewriteExcluding(table, tail, out, dvSnap, validate = false)
-            if (changeFeedEnabled(table))
-              tv.manifestLines(table, Seq(s"cdfnoop\t$table"), Nil, Nil)
-          case w => throw new IllegalStateException(
-            s"AtomicWarehouse.atomically produced a ${w.getClass.getName}")
-        }
-        return ReclusterResult(tail.size, files.size - tail.size, smallBytes)
-      } catch {
-        case _: java.util.ConcurrentModificationException => attempts += 1
+      if (small.size <= 1) ReclusterResult(0, files.size, 0L)
+      else {
+        val smallBytes = small.map(_._2).sum
+        val outFiles = math.max(1, ((smallBytes + targetBytes - 1) / targetBytes).toInt)
+        val cols = clusterBy(table).filter(_.forall(schema.fieldNames.contains))
+        rewriteTail(table, schema, st, files, small.map(_._1), smallBytes)(src =>
+          cols match {
+            case Some(cs) => src.repartitionByRange(outFiles, cs.map(col): _*)
+              .sortWithinPartitions(cs.map(col): _*)
+            case None => src.coalesce(outFiles)
+          })
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"compactSmall on $table lost $attempts straight races to concurrent " +
-        "commits; table is intact — retry when the writer is quieter")
   }
 
   /** Fold DENSE deletion vectors back into data files — the maintenance
@@ -4025,8 +3935,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       minDeadFraction: Double = 0.1): ReclusterResult = {
     require(minDeadFraction > 0 && minDeadFraction <= 1,
       s"minDeadFraction must be in (0,1], got $minDeadFraction")
-    var attempts = 0
-    while (attempts < 8) {
+    retryConflicts(s"compactDv on $table") {
       val st = foldedState()
       val files = committedOrPhysical(table)
       val dense = files.filter { f =>
@@ -4038,28 +3947,10 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
           }
         }
       }
-      if (dense.isEmpty) return ReclusterResult(0, files.size, 0L)
-      val bytes = fileBytes(table, dense)
-      val dvSnap = dense.map(f => f -> st.dvs.get((table, f)))
-      val src = readFiles(table, schema, dense, dvOpt = Some(rawDvs(st, table)))
-      val out = clusteredRewrite(table, schema, src, dense.size, Nil)
-      try {
-        atomically {
-          case tv: TxView =>
-            tv.rewriteExcluding(table, dense, out, dvSnap, validate = false)
-            if (changeFeedEnabled(table))
-              tv.manifestLines(table, Seq(s"cdfnoop\t$table"), Nil, Nil)
-          case w => throw new IllegalStateException(
-            s"AtomicWarehouse.atomically produced a ${w.getClass.getName}")
-        }
-        return ReclusterResult(dense.size, files.size - dense.size, bytes)
-      } catch {
-        case _: java.util.ConcurrentModificationException => attempts += 1
-      }
+      if (dense.isEmpty) ReclusterResult(0, files.size, 0L)
+      else rewriteTail(table, schema, st, files, dense, fileBytes(table, dense))(
+        clusteredRewrite(table, schema, _, dense.size, Nil))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"compactDv on $table lost $attempts straight races to concurrent " +
-        "commits; table is intact — retry when the writer is quieter")
   }
 
   /** Project a tagged read back to LOGICAL names, keeping `keep` tag cols. */
@@ -4250,8 +4141,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
           else Nil
         }
       }
-    var attempts = 0
-    while (attempts < 8) {
+    retryConflicts(s"mergeInto on $table") {
       // candidate files: (files a source key could match) ∪ (files a NMBS
       // clause could hit). prunePreds empty means NO source row can match
       // (all-null key column / empty source) — without NMBS that is zero
@@ -4268,10 +4158,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       require(cands.forall(!_.contains("/")),
         s"mergeInto on partition-dir layouts is not supported (table $table); " +
           "migrate once via recluster — see deleteWhere's contract")
-      // same DV pin as rewriteWhere: the rewrite folds candidate DVs
-      val stDv = foldedState()
-      val dvSnap = cands.map(f => f -> stDv.dvs.get((table, f)))
-      val candDf = readFiles(table, schema, cands, dvOpt = Some(rawDvs(stDv, table)))
+      // same DV pin as rewriteWhereCond: the rewrite folds candidate DVs
+      val st = foldedState()
+      val candDf = readFiles(table, schema, cands, dvOpt = Some(rawDvs(st, table)))
       val t = candDf.withColumn("__t", lit(1)).alias("t")
       val s = src.withColumn("__s", lit(1)).alias("s")
       val j = t.join(s,
@@ -4371,45 +4260,35 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
         j.select(explode(images).as("__c"))
           .select((schema.fieldNames.toSeq :+ ctc).map(n => col(s"__c.$n").as(n)): _*)
       }
-      try {
-        // fresh Observation per retry attempt — an aborted commit's metrics
-        // must not satisfy the next attempt's get
-        val obs = if (feedOn) Some(new org.apache.spark.sql.Observation) else None
-        atomically {
-          case tv: TxView =>
-            // the rewrite and the change slice are independent staged writes
-            // over the SAME immutable candidate snapshot — run them (and any
-            // alsoInTx rows) concurrently, collapsing the commit's serial
-            // write waves into one (the DedupStream admit pattern; TxView
-            // stages thread-safely). All futures settle before an error
-            // propagates, so an abort never leaves a sibling mid-stage.
-            val ctc = changeTypeCol
-            Warehouse.settleAll(spark,
-              Seq(() => tv.rewriteExcluding(table, cands, out, dvSnap)) ++
-              obs.map(o => () => tv.append(changesTable(table),
-                changeSlice.observe(o,
-                  sum(when(col(ctc) === "update_preimage", 1L).otherwise(0L)).as("u"),
-                  sum(when(col(ctc) === "delete", 1L).otherwise(0L)).as("d"),
-                  sum(when(col(ctc) === "insert", 1L).otherwise(0L)).as("i")))).toSeq ++
-              Seq(() => alsoInTx(tv))) // e.g. a stream's ingest-ledger row
-          case w => throw new IllegalStateException(
-            s"AtomicWarehouse.atomically produced a ${w.getClass.getName}")
-        }
-        val (u, d, i) = eagerCounts.getOrElse {
-          val m = obs.get.get
-          def n(k: String): Long = m(k) match {
-            case null => 0L; case v: Number => v.longValue()
-          }
-          (n("u"), n("d"), n("i"))
-        }
-        return MergeIntoResult(u, d, i, cands.size, untouched0.size)
-      } catch {
-        case _: java.util.ConcurrentModificationException => attempts += 1
+      // fresh Observation per retry attempt — an aborted commit's metrics
+      // must not satisfy the next attempt's get
+      val obs = if (feedOn) Some(new org.apache.spark.sql.Observation) else None
+      transact { tv =>
+        // the rewrite and the change slice are independent staged writes
+        // over the SAME immutable candidate snapshot — run them (and any
+        // alsoInTx rows) concurrently, collapsing the commit's serial
+        // write waves into one (the DedupStream admit pattern; TxView
+        // stages thread-safely). All futures settle before an error
+        // propagates, so an abort never leaves a sibling mid-stage.
+        val ctc = changeTypeCol
+        Warehouse.settleAll(spark,
+          Seq(() => tv.rewriteExcluding(table, cands, out, st)) ++
+          obs.map(o => () => tv.append(changesTable(table),
+            changeSlice.observe(o,
+              sum(when(col(ctc) === "update_preimage", 1L).otherwise(0L)).as("u"),
+              sum(when(col(ctc) === "delete", 1L).otherwise(0L)).as("d"),
+              sum(when(col(ctc) === "insert", 1L).otherwise(0L)).as("i")))).toSeq ++
+          Seq(() => alsoInTx(tv))) // e.g. a stream's ingest-ledger row
       }
+      val (u, d, i) = eagerCounts.getOrElse {
+        val m = obs.get.get
+        def n(k: String): Long = m(k) match {
+          case null => 0L; case v: Number => v.longValue()
+        }
+        (n("u"), n("d"), n("i"))
+      }
+      MergeIntoResult(u, d, i, cands.size, untouched0.size)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"mergeInto on $table lost $attempts straight races to concurrent " +
-        "commits; table is intact — retry when the writer is quieter")
   }
 
   /** Shared copy-on-write core: candidates → matched count → rewrite →
@@ -4418,85 +4297,56 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * with assignments applied where `hit`). Candidate files are immutable,
     * so the matched count and the rewrite read the same bytes; the commit
     * precondition aborts if a racing commit un-referenced a candidate.
-    */
-  private def rewriteWhere(table: String, schema: StructType, preds: Seq[FilePred],
-      rewrite: ((DataFrame, Column)) => DataFrame,
-      changeRows: ((DataFrame, Column)) => DataFrame): Long =
-    rewriteWhereCond(table, schema, preds, FilePred.toColumn(preds, schema),
-      rewrite, changeRows)
-
-  /** [[rewriteWhere]] with the ROW condition decoupled from the PRUNING
-    * predicates — the fallback seam for conditions outside the [[FilePred]]
-    * algebra ([[deleteWhereExpr]]/[[updateWhereExpr]]): `preds` may be any
-    * sound under-approximation (including Nil = all files candidate), the
-    * exact `cond` decides the rows. Soundness requires every `cond`-true
-    * row to be in a `preds`-kept file; passing the translatable conjuncts
-    * of a conjunction satisfies that by construction.
+    * The ROW condition `cond` is decoupled from the PRUNING predicates
+    * `preds`, which may be any sound under-approximation (including Nil =
+    * all files candidate): soundness requires every `cond`-true row to be in
+    * a `preds`-kept file, which the translatable conjuncts of a conjunction
+    * (or the [[FilePred]]s `cond` was built from) satisfy by construction.
     */
   private def rewriteWhereCond(table: String, schema: StructType,
       preds: Seq[FilePred], cond: Column,
       rewrite: ((DataFrame, Column)) => DataFrame,
-      changeRows: ((DataFrame, Column)) => DataFrame): Long = {
-    var attempts = 0
-    while (attempts < 8) {
+      changeRows: ((DataFrame, Column)) => DataFrame): Long =
+    retryConflicts(s"row-level DML on $table") {
       val (cands, _) = planFiles(table, preds)
       require(cands.forall(!_.contains("/")),
         s"row-level DML on partition-dir layouts is not supported (table $table); " +
           "migrate once via recluster(table, schema, clusterCols, n) — a " +
           "conflict-checked rewrite into flat band files (partition values " +
           "become ordinary columns) — then DML prunes on the band stats")
-      if (cands.isEmpty) return 0L
-      // pin the candidates' DV state: the rewrite folds these tombstones
-      // into the new files, and a DV racing in after this snapshot must
-      // abort the commit (precondition), not silently resurrect its rows
-      val stDv = foldedState()
-      val dvSnap = cands.map(f => f -> stDv.dvs.get((table, f)))
-      val df = readFiles(table, schema, cands, dvOpt = Some(rawDvs(stDv, table)))
-      val hit = coalesce(cond, lit(false))
-      val matched = df.filter(hit).count()
-      if (matched == 0L) return 0L
-      // declared-cluster tables keep their layout through deletes/updates;
-      // undeclared tables keep the scan's natural per-file partitioning
-      val out = clusteredRewrite(table, schema, rewrite((df, hit)), cands.size, Nil)
-      // ON DELETE RESTRICT: keys that leave this rewrite (pre-image minus
-      // retained — exact under the unique-parent-key contract) must not be
-      // child-referenced. The child file sets are PINNED (snapshot taken
-      // BEFORE the probe) and ride the commit precondition, so a child
-      // insert racing between probe and publish aborts this commit instead
-      // of slipping an orphan through the check-then-commit window — the
-      // DV-pin pattern applied cross-table.
-      val childPins: Seq[FreezePin] =
-        if (referencingFks(table).isEmpty) Nil
-        else {
-          val pins = referencingFks(table).map(_._1).distinct
-            .map(c => FreezePin(c, committedOrPhysical(c).sorted,
-              Map.empty, noGrowth = true))
-          enforceFkRestrict(table, pCols =>
-            df.filter(hit).select(fkKeyCols(pCols): _*)
-              .filter(fkAllNotNull(pCols.size)).distinct()
-              .join(out.select(fkKeyCols(pCols): _*).distinct(),
-                fkKeyNames(pCols.size), "left_anti"))
-          pins
-        }
-      val feedOn = changeFeedEnabled(table)
-      try {
-        atomically {
-          case tv: TxView =>
-            tv.rewriteExcluding(table, cands, out, dvSnap, frozen = childPins)
+      if (cands.isEmpty) 0L
+      else {
+        // the rewrite folds the candidates' tombstones into the new files, so
+        // their DV state is pinned as read: a DV racing in after this
+        // snapshot aborts the commit, not silently resurrects its rows
+        val st = foldedState()
+        val df = readFiles(table, schema, cands, dvOpt = Some(rawDvs(st, table)))
+        val hit = coalesce(cond, lit(false))
+        val matched = df.filter(hit).count()
+        if (matched > 0L) {
+          // declared-cluster tables keep their layout through deletes and
+          // updates; undeclared ones keep the scan's per-file partitioning
+          val out = clusteredRewrite(table, schema, rewrite((df, hit)), cands.size, Nil)
+          // ON DELETE RESTRICT: keys that leave this rewrite (pre-image minus
+          // retained — exact under the unique-parent-key contract) must not
+          // be child-referenced; the children are pinned before the probe
+          val children = childPins(table)
+          if (children.nonEmpty)
+            enforceFkRestrict(table, pCols =>
+              df.filter(hit).select(fkKeyCols(pCols): _*)
+                .filter(fkAllNotNull(pCols.size)).distinct()
+                .join(out.select(fkKeyCols(pCols): _*).distinct(),
+                  fkKeyNames(pCols.size), "left_anti"))
+          val feedOn = changeFeedEnabled(table)
+          transact { tv =>
+            tv.rewriteExcluding(table, cands, out, st, pins = children)
             // the change slice rides the SAME manifest commit as the rewrite
             if (feedOn) tv.append(changesTable(table), changeRows((df, hit)))
-          case w => throw new IllegalStateException( // unreachable: atomically always hands a TxView
-            s"AtomicWarehouse.atomically produced a ${w.getClass.getName}")
+          }
         }
-        return matched
-      } catch {
-        case _: java.util.ConcurrentModificationException => attempts += 1
+        matched
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"row-level DML on $table lost $attempts straight races to concurrent " +
-        "commits; table is intact — retry when the writer is quieter")
-  }
 
   /** Fold the log as of `version`: manifests ≤ `version`, starting at the
     * latest snapshot within that prefix. Correct only when the retained
@@ -4549,31 +4399,15 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * caller just didn't get smaller files this pass.
     */
   override def compactWith(table: String, schema: StructType,
-      transform: DataFrame => DataFrame): Unit = {
-    var attempts = 0
-    while (attempts < 8) {
+      transform: DataFrame => DataFrame): Unit =
+    retryConflicts(s"compaction of $table") {
       val expected = committedOrPhysical(table)
       // pin DV state like the file set: the rewrite folds the tombstones
-      val stDv = foldedState()
-      val dvSnap = expected.map(f => f -> stDv.dvs.get((table, f)))
-      val src = readFiles(table, schema, expected, dvOpt = Some(rawDvs(stDv, table)))
+      val st = foldedState()
+      val src = readFiles(table, schema, expected, dvOpt = Some(rawDvs(st, table)))
       val out = transform(src)
-      try {
-        atomically {
-          case tv: TxView => tv.replaceExpecting(table, out, expected, dvSnap)
-          case w => throw new IllegalStateException( // unreachable: atomically always hands a TxView
-            s"AtomicWarehouse.atomically produced a ${w.getClass.getName}; " +
-              "conflict-checked compaction requires its TxView")
-        }
-        return
-      } catch {
-        case _: java.util.ConcurrentModificationException => attempts += 1
-      }
+      transact(_.replaceExpecting(table, out, pinFiles(st, table, expected, noGrowth = true)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"compaction of $table lost ${attempts} straight races to concurrent commits; " +
-        "table is intact — retry when the writer is quieter")
-  }
 
   /** Schema from MANIFEST-VISIBLE files only: the raw directory also holds
     * superseded files inside their vacuum grace window, so after a
@@ -4649,15 +4483,12 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }.toSet
     managed.foreach { t =>
       val tdir = new Path(path(t))
-      if (fs.exists(tdir)) {
-        val it = fs.listFiles(tdir, true)
-        while (it.hasNext) {
-          val st = it.next()
+      if (fs.exists(tdir))
+        AtomicWarehouse.listTree(fs, tdir).foreach { case (_, st) =>
           if (!live.contains(fs.makeQualified(st.getPath).toString) &&
               st.getModificationTime < cutoff)
             fs.delete(st.getPath, false)
         }
-      }
     }
     // 3. crashed-transaction staging leftovers
     if (fs.exists(stageRoot))

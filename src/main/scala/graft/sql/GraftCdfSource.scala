@@ -75,7 +75,7 @@ class GraftCdfSource extends TableProvider with DataSourceRegister {
     val base = wh.catalogSchema(table).orElse(wh.inferSchema(table))
       .getOrElse(throw new IllegalArgumentException(
         s"graft-cdf: table $table has no schema (never written?)"))
-    StructType(wh.cdfSchemaOf(base).fields.toSeq :+
+    StructType(wh.cdfSchema(base).fields.toSeq :+
       StructField("_commit_version", IntegerType, nullable = false))
   }
 
@@ -164,7 +164,7 @@ class GraftCdfMicroBatchStream(wh: AtomicWarehouse, table: String,
     val sizes: Map[(Boolean, String), Long] =
       if (maxBytes.isEmpty) Map.empty
       else {
-        val chT = wh.changesTableOf(table)
+        val chT = wh.changesTable(table)
         Seq(false, true).flatMap { slice =>
           wh.streamFileSizes(if (slice) chT else table,
               windows.filter(_._3 == slice).flatMap(_._2).distinct, h)
@@ -206,7 +206,7 @@ class GraftCdfMicroBatchStream(wh: AtomicWarehouse, table: String,
       end.asInstanceOf[GraftStreamOffset].version)
     wh.cdfWindowGuards(table, from, to)
     val windows = wh.cdfWindowFiles(table, from, to)
-    val chT = wh.changesTableOf(table)
+    val chT = wh.changesTable(table)
     def sizesFor(slice: Boolean): Map[String, Long] = wh.streamFileSizes(
       if (slice) chT else table,
       windows.filter(_._3 == slice).flatMap(_._2).distinct, to)
@@ -246,7 +246,7 @@ class GraftCdfMicroBatchStream(wh: AtomicWarehouse, table: String,
     if (cachedFactory == null || eras.size != cachedEraCount) {
       // data files carry PHYSICAL names — stable across renames, one
       // reader serves every era; positions match the logical schema
-      val m = wh.columnMap(table)
+      val m = wh.colMapOf(table)
       val physData = StructType(dataSchema.fields.map(f =>
         f.copy(name = m.getOrElse(f.name, f.name))))
       // one slice reader per column-mapping ERA the table has had (tiny

@@ -427,7 +427,7 @@ object GraftRelationResolution {
           // operations already refuse this layout)
           wh.read(table, schema)
         else {
-          val m = wh.columnMap(table) // logical -> physical
+          val m = wh.colMapOf(table) // logical -> physical
           val physSchema = StructType(schema.fields.map(f =>
             f.copy(name = m.getOrElse(f.name, f.name))))
           val index = new GraftFileIndex(wh, table,

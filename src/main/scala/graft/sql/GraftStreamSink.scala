@@ -45,7 +45,7 @@ class GraftStreamingWrite(wh: AtomicWarehouse, table: String,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val m = wh.columnMap(table)
+    val m = wh.colMapOf(table)
     val phys = StructType(logicalSchema.fields.map(f =>
       f.copy(name = m.getOrElse(f.name, f.name))))
     GraftStreamWriterFactory(shims.parquetWriteConf(wh.spark, phys), epochBase)

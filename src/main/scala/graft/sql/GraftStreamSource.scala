@@ -274,7 +274,7 @@ class GraftMicroBatchStream(wh: AtomicWarehouse, table: String,
     require(wh.physicalReadSchema(table).isDefined,
       s"streaming $table needs a manifest-recorded schema — write through " +
         "the manifest first")
-    val m = wh.columnMap(table)
+    val m = wh.colMapOf(table)
     val phys = StructType(logicalSchema.fields.map(f =>
       f.copy(name = m.getOrElse(f.name, f.name))))
     GraftStreamReaderFactory(shims.parquetRowReader(wh.spark, phys))

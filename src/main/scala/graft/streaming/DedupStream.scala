@@ -46,7 +46,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   * always-on stream otherwise accretes thousands of tiny parquet files and
   * scan PLANNING (listing + footer reads) becomes the per-batch floor. 0
   * disables the automatic pass for callers that schedule [[compactAll]] as
-  * out-of-band maintenance instead.
+  * out-of-band maintenance instead. The pass bounds VISIBLE files, not
+  * storage: its vacuum keeps compacted-away files for the warehouse's
+  * `vacuumGraceMs` (1 h by default — the safety margin for readers racing
+  * the rewrite), so an always-on stream also holds one grace window of
+  * superseded files on disk (50 two-doc batches at N = 5 left 291 parquet
+  * files beside ≤ 40 visible ones).
   */
 class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
     rowsPerBand: Int = 2, minJaccard: Double = 0.5, minSigMatchesOverride: Int = -1,

@@ -143,21 +143,17 @@ object Maintain {
     // `_temporary` task dirs under txstage faster than a recursive walk can
     // stat them (observed: listing crashed mid-soak on a vanished task dir).
     // Filtering the RESULTS is not enough; the walk itself must skip them.
+    def visible(n: String): Boolean = !n.startsWith("_") && !n.startsWith(".")
     def walk(): Seq[String] = {
-      val base = fs.makeQualified(new Path(root)).toString + "/"
       val out = scala.collection.mutable.SortedSet[String]()
       fs.listStatus(new Path(root)).foreach { top =>
         val n = top.getPath.getName
-        if (top.isDirectory && !n.startsWith("_") && !n.startsWith(".") && n != "txstage") {
-          val it = fs.listFiles(top.getPath, true)
-          while (it.hasNext) {
-            val st = it.next()
-            val segs = st.getPath.toString.stripPrefix(base).split('/')
-            if (segs.last.endsWith(".parquet") && segs.length > 1 &&
-                !segs.exists(s => s.startsWith("_") || s.startsWith(".") || s.contains("=")))
+        if (top.isDirectory && visible(n) && n != "txstage")
+          AtomicWarehouse.listTree(fs, top.getPath, visible).foreach { case (rel, _) =>
+            val segs = s"$n/$rel".split('/')
+            if (segs.last.endsWith(".parquet") && !segs.exists(_.contains("=")))
               out += segs.init.mkString("/")
           }
-        }
       }
       out.toSeq
     }

@@ -382,6 +382,28 @@ class AtomicWarehouseSpec extends SparkSpec {
       s"compaction must leave one visible file, got ${wh.visibleFileCount("t")}")
   }
 
+  test("a compaction that loses every race gives up after 8 attempts, keeping every row") {
+    val dir = Files.createTempDirectory("graft-aw-exhaust-").toString
+    val wh = new AtomicWarehouse(spark, dir)
+    (1 to 3).foreach(i => wh.append("t", Seq((i.toLong, s"v$i")).toDF("id", "v")))
+    // each attempt's transform lands a racing append after the compaction
+    // pinned the file set, so every commit fails its precondition
+    var attempts = 0
+    val e = intercept[java.util.ConcurrentModificationException](
+      wh.compactWith("t", kv, { df =>
+        attempts += 1
+        wh.append("t", Seq((100L + attempts, s"r$attempts")).toDF("id", "v"))
+        df.coalesce(1)
+      }))
+    assert(attempts == 8, s"ran $attempts attempts")
+    assert(e.getMessage.contains("compaction of t"), e.getMessage)
+    val ids = wh.read("t", kv).collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == (1L to 3L) ++ (101L to 108L), s"rows lost or duplicated: $ids")
+    val stage = java.nio.file.Paths.get(dir, "txstage")
+    assert(!Files.exists(stage) || LocalFs.entriesSorted(stage).isEmpty,
+      "an aborted attempt left staged files behind")
+  }
+
   test("compact inside an ambient transaction stays conflict-checked") {
     val dir = Files.createTempDirectory("graft-aw-nestedcompact-").toString
     val wh = new AtomicWarehouse(spark, dir)

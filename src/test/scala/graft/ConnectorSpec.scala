@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import graft.model.Schemas
 import graft.sources.{AtomicWarehouse, CsvSource, GraftBlobFileSystem, JdbcSink}
+import graft.tools.Maintain
+import org.apache.hadoop.fs.Path
 
 /** Proof-of-seam for SURVEY §7's "storage is a connector detail" stance:
   * the engine runs unchanged against a different storage scheme, and
@@ -33,6 +35,33 @@ class ConnectorSpec extends SparkSpec {
     // and the skip-if-done lifecycle reads back through the same scheme
     assert(p.processCsv(CsvSource.readString(spark, csv), "products", "lista.csv")
       .message.contains("already processed"))
+  }
+
+  test("vacuum and a Maintain discovery pass run over a graftblob: root, keeping every row") {
+    GraftBlobFileSystem.install(spark)
+    val dir = Files.createTempDirectory("graft-blobvac-").toString
+    val root = s"graftblob:$dir"
+    val wh = new AtomicWarehouse(spark, root)
+    val schema = Seq((0L, "")).toDF("id", "text").schema
+    def ids(): Seq[Long] =
+      wh.read("docs", schema).collect().map(_.getLong(0)).sorted.toSeq
+    def physical(): Long = {
+      val files = Files.walk(java.nio.file.Paths.get(dir, "docs"))
+      try files.filter(_.toString.endsWith(".parquet")).count() finally files.close()
+    }
+    (1 to 3).foreach(i =>
+      wh.append("docs", Seq((i.toLong, s"d$i")).toDF("id", "text").coalesce(1)))
+    // the replace un-references the three appended files: vacuum's garbage
+    wh.replace("docs", wh.read("docs", schema).coalesce(1))
+    wh.vacuum(0L)
+    assert(ids() == Seq(1L, 2L, 3L))
+    assert(physical() == 1L, "vacuum left unreferenced files")
+    wh.append("docs", Seq((4L, "d4")).toDF("id", "text").coalesce(1))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(Maintain.discoverTables(fs, root) == Seq("docs"))
+    Maintain.run(spark, root, Nil, graceMs = 0L)
+    assert(ids() == Seq(1L, 2L, 3L, 4L))
+    assert(wh.visibleFileCount("docs") == 1 && physical() == 1L)
   }
 
   test("JDBC sink: dims-shaped frames round-trip through embedded Derby") {
