@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions.{array, coalesce, col, collect_set, count,
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.sources.Manifest._
+
 /** Transactional warehouse — the one storage implementation of
   * [[Warehouse]]: all-or-nothing visibility for any group of table writes,
   * the capability the reference gets from SQL Server transactions around
@@ -179,33 +181,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     lines
   }
 
-  /** The whole committed log, folded: per-table visible files (deduped —
-    * a double-add can only come from an adoption race, see [[commit]], but
-    * duplicated ROWS are bad enough that the fold defends anyway) plus every
-    * prefix ever truncated (so `visibleFiles("t/sub")` knows the table was
-    * touched even when nothing was re-added under it), plus each table's
-    * LATEST recorded schema JSON (`schema` lines — written by every staged
-    * data write since schema evolution landed; absent for legacy history),
-    * plus per-(table, file) column-stats JSON (`stats` lines — footer-derived
-    * min/max/null counts that [[scanWhere]]/[[deleteWhere]] prune with;
-    * absence is always safe, so legacy files simply never skip). `remove`
-    * lines un-reference SINGLE files (row-level DML's copy-on-write commits)
-    * without the prefix semantics of `truncate`.
-    */
-  private case class LogState(adds: Map[String, Vector[String]],
-      truncated: Set[String], schemas: Map[String, String] = Map.empty,
-      stats: Map[(String, String), String] = Map.empty,
-      cluster: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      dvs: Map[(String, String), String] = Map.empty,
-      cdf: Set[String] = Set.empty,
-      blooms: Map[(String, String), String] = Map.empty,
-      bloomcols: Map[String, String] = Map.empty,
-      constraints: Map[(String, String), String] = Map.empty,
-      fks: Map[(String, String), String] = Map.empty,
-      uniques: Map[(String, String), String] = Map.empty,
-      cdffloor: Map[String, Int] = Map.empty,
-      txns: Map[(String, String), Long] = Map.empty)
+  /** One manifest's actions, parsed by the codec from the cached lines. */
+  private def readActions(p: Path): Iterator[Action] =
+    readLines(p).iterator.map(Manifest.parse(_, p.toString))
 
   /** A fold races concurrent folds from OTHER instances: their snapshot
     * publish happens BEFORE they delete the superseded manifests, so when a
@@ -234,7 +212,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * `listStatus` + a map lookup. [[commit]]'s auto-fold bounds the refold
     * cost itself.
     */
-  @volatile private var foldCache: (String, LogState) = ("", LogState(Map.empty, Set.empty))
+  @volatile private var foldCache: (String, LogState) = ("", LogState.empty)
 
   private def foldedState(): LogState = retryOnVanishedManifest {
     val all = commitFiles()
@@ -243,151 +221,15 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     // subsumed (see latestSnapshotIdx) and may linger until vacuumed —
     // reading them would make per-read cost grow with the vacuum backlog
     val cfs = all.drop(latestSnapshotIdx(all).max(0))
-    if (cfs.isEmpty) LogState(Map.empty, Set.empty)
+    if (cfs.isEmpty) LogState.empty
     else if (cached._1 == cfs.last.getName) cached._2
     else foldFrom(cfs)
   }
 
+  /** The log manifests `cfs`, folded in order by the codec ([[Manifest.fold]]). */
   private def foldFrom(cfs: Seq[Path], updateCache: Boolean = true): LogState = {
-    val key = cfs.last.getName
-    var adds = Map.empty[String, Vector[String]]
-    // membership mirror of `adds`: the double-add defense as Vector.contains
-    // is O(n^2) per refold in a table's file count — real money on a large
-    // un-compacted table's snapshot even with the fold cache
-    var addSets = Map.empty[String, Set[String]]
-    var truncated = Set.empty[String]
-    var schemas = Map.empty[String, String]
-    var stats = Map.empty[(String, String), String]
-    var cluster = Map.empty[String, String]
-    var colmap = Map.empty[String, String]
-    var dvs = Map.empty[(String, String), String]
-    var cdf = Set.empty[String]
-    var blooms = Map.empty[(String, String), String]
-    var bloomcols = Map.empty[String, String]
-    var constraints = Map.empty[(String, String), String]
-    var fks = Map.empty[(String, String), String]
-    var uniques = Map.empty[(String, String), String]
-    var cdffloor = Map.empty[String, Int]
-    var txns = Map.empty[(String, String), Long]
-    cfs.foreach { cf =>
-      readLines(cf).foreach { line =>
-        // limit 4: a schema line's third field and a stats line's fourth are
-        // JSON, opaque to the TSV (both are compact-jackson output, which
-        // escapes control characters — the writers additionally require it)
-        val f = line.split("\t", 4)
-        f(0) match {
-          case "snapshot" => // marker only; the truncate+add lines that follow rebuild state
-          case "truncate" =>
-            val t = f(1)
-            truncated += t
-            adds = adds.map { case (k, v) =>
-              (k, if (k == t || k.startsWith(t + "/")) Vector.empty[String] else v)
-            }
-            addSets = addSets.map { case (k, v) =>
-              (k, if (k == t || k.startsWith(t + "/")) Set.empty[String] else v)
-            }
-            // a truncate ends the table's recorded shape too: replace
-            // re-records it in the same commit, a bare delete leaves the
-            // table absent ([[exists]])
-            schemas = schemas.filterNot { case (k, _) => k == t || k.startsWith(t + "/") }
-            stats = stats.filterNot { case ((k, _), _) => k == t || k.startsWith(t + "/") }
-            dvs = dvs.filterNot { case ((k, _), _) => k == t || k.startsWith(t + "/") }
-            blooms = blooms.filterNot { case ((k, _), _) => k == t || k.startsWith(t + "/") }
-          case "add" =>
-            val set = addSets.getOrElse(f(1), Set.empty)
-            if (!set.contains(f(2))) {
-              adds += (f(1) -> (adds.getOrElse(f(1), Vector.empty) :+ f(2)))
-              addSets += (f(1) -> (set + f(2)))
-            }
-          case "remove" =>
-            adds += (f(1) -> adds.getOrElse(f(1), Vector.empty).filterNot(_ == f(2)))
-            addSets += (f(1) -> (addSets.getOrElse(f(1), Set.empty) - f(2)))
-            stats -= ((f(1), f(2)))
-            dvs -= ((f(1), f(2)))
-            blooms -= ((f(1), f(2)))
-          case "dv" =>
-            // deletion vector: the file's COMPLETE tombstone ordinal set
-            // (each line carries the union — last line per file wins)
-            dvs += ((f(1), f(2)) -> f(3))
-          case "changefeed" =>
-            // per-table change-data-feed property (Delta's
-            // delta.enableChangeDataFeed); survives truncates like cluster
-            if (f.length >= 3 && f(2) == "on") cdf += f(1) else cdf -= f(1)
-          case "cdfnoop" =>
-            // per-commit marker: this version's file churn is row-preserving
-            // maintenance (DV compaction, incremental recluster) — only
-            // changesBetween's per-manifest walk reads it; no folded state
-          case "schema" =>
-            schemas += (f(1) -> f(2)) // last line per table wins
-          case "stats" =>
-            stats += ((f(1), f(2)) -> f(3))
-          case "cluster" =>
-            // last line per table wins; like schema, survives truncates (the
-            // table's DECLARED layout, not a property of any file set). An
-            // EMPTY value clears the declaration — written by delete(table)
-            // and by restore() to a pre-declaration era.
-            if (f.length < 3 || f(2).isEmpty) cluster -= f(1)
-            else cluster += (f(1) -> f(2))
-          case "bloom" =>
-            // per-file Bloom index pointer (sidecar leaf + type tag per
-            // indexed column) — last line per file wins, dropped with the
-            // file (the dv rule)
-            blooms += ((f(1), f(2)) -> f(3))
-          case "bloomcols" =>
-            // per-table Bloom index declaration; last wins, survives
-            // truncates like cluster (a DECLARED index, not a file
-            // property); empty clears — written by delete(table)
-            if (f.length < 3 || f(2).isEmpty) bloomcols -= f(1)
-            else bloomcols += (f(1) -> f(2))
-          case "colmap" =>
-            // logical→physical column mapping JSON; last line per table
-            // wins, survives truncates (renames are table metadata). `{}`
-            // (or empty) clears — a dropped-and-recreated table must start
-            // with identity metadata, not inherit tombstones.
-            if (f.length < 3 || f(2).isEmpty || f(2) == "{}") colmap -= f(1)
-            else colmap += (f(1) -> f(2))
-          case "constraint" =>
-            // per-(table, name) CHECK expression; last line wins, survives
-            // truncates like cluster (a DECLARED invariant, not a file
-            // property); empty expr clears — written by dropConstraint and
-            // delete(table)
-            if (f.length < 4 || f(3).isEmpty) constraints -= ((f(1), f(2)))
-            else constraints += ((f(1), f(2)) -> f(3))
-          case "fk" =>
-            // per-(childTable, name) FOREIGN KEY descriptor
-            // `childCol|parentTable|parentCol`; same lifecycle as
-            // `constraint` lines (keyed by the CHILD side)
-            if (f.length < 4 || f(3).isEmpty) fks -= ((f(1), f(2)))
-            else fks += ((f(1), f(2)) -> f(3))
-          case "unique" =>
-            // per-(table, name) UNIQUE column; `constraint` lifecycle
-            if (f.length < 4 || f(3).isEmpty) uniques -= ((f(1), f(2)))
-            else uniques += ((f(1), f(2)) -> f(3))
-          case "cdffloor" =>
-            // change-feed retention floor: changesBetween refuses windows
-            // reaching below it (the slices were purged); last wins,
-            // survives truncates like `changefeed`, empty clears (delete)
-            if (f.length < 3 || f(2).isEmpty) cdffloor -= f(1)
-            else cdffloor += (f(1) -> f(2).toInt)
-          case "ts" =>
-            // commit wall-clock millis, first line of every manifest —
-            // read per manifest by versionAtTimestamp/commitHistory (time
-            // travel that survives a warehouse copy); no folded state
-          case "txn" =>
-            // per-(table, appId) streaming-write high-water batch id
-            // (Delta's txn action — appendOnce's exactly-once ledger);
-            // MAX wins (batch ids ascend; max is replay-robust), empty
-            // clears (delete(table))
-            if (f.length < 4 || f(3).isEmpty) txns -= ((f(1), f(2)))
-            else txns += ((f(1), f(2)) ->
-              math.max(txns.getOrElse((f(1), f(2)), Long.MinValue), f(3).toLong))
-          case other => throw new IllegalStateException(s"unknown txlog action '$other' in $cf")
-        }
-      }
-    }
-    val st = LogState(adds, truncated, schemas, stats, cluster, colmap, dvs, cdf,
-      blooms, bloomcols, constraints, fks, uniques, cdffloor, txns)
-    if (updateCache) foldCache = (key, st)
+    val st = Manifest.fold(cfs.iterator.flatMap(readActions))
+    if (updateCache) foldCache = (cfs.last.getName, st)
     st
   }
 
@@ -438,9 +280,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * the claim and must provide the HDFS-style contract instead: atomic
     * rename that fails (returns false) on an existing destination.
     */
-  private def publishAt(lines: Seq[String], version: Int,
+  private def publishAt(lines: Seq[Action], version: Int,
       snapshot: Boolean = false): Boolean =
-    publishLock.synchronized(publishAtCrossProcess(lines, version, snapshot))
+    publishLock.synchronized(publishAtCrossProcess(lines.map(Manifest.render), version, snapshot))
 
   /** True when ANY manifest occupies the version slot. An exists() is a
     * point stat — reliable even while the directory is being concurrently
@@ -452,17 +294,17 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     fs.exists(new Path(logDir, f"v$version%08d.tsv")) ||
       fs.exists(new Path(logDir, f"v$version%08d.snap.tsv"))
 
-  /** The cross-process publish path WITHOUT the JVM-wide lock — what a second
-    * JVM racing this one actually executes. Production callers go through
-    * [[publishAt]]; specs race this seam directly to prove two "JVMs" can
-    * never both land version N.
-    */
   /** Test seam: runs right after a version claim is created — specs use it to
     * simulate a claimant stalled past the staleness window (claim broken and
     * reclaimed by a new owner mid-publish).
     */
   private[graft] var postClaimHook: () => Unit = () => ()
 
+  /** The cross-process publish path WITHOUT the JVM-wide lock — what a second
+    * JVM racing this one actually executes. Production callers go through
+    * [[publishAt]]; specs race this seam directly to prove two "JVMs" can
+    * never both land version N.
+    */
   private[graft] def publishAtCrossProcess(lines: Seq[String], version: Int,
       snapshot: Boolean = false): Boolean = {
     fs.mkdirs(logDir)
@@ -513,7 +355,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       val out = fs.create(tmp, true)
       // the commit wall-clock rides the manifest itself (first line), so
       // TIMESTAMP AS OF survives a warehouse copy/rsync that resets mtimes
-      val stamped = s"ts\t${System.currentTimeMillis()}" +: lines
+      val stamped = Manifest.render(Ts(System.currentTimeMillis())) +: lines
       try out.write((stamped.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
       if (!ownsClaim) { fs.delete(tmp, true); return false } // fenced: claim broken mid-stall
       if (claim.isDefined) {
@@ -569,7 +411,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * concurrency check read-modify-write transactions (compaction) need to
     * not silently truncate away a concurrent append.
     */
-  private def publish(lines: Seq[String], precondition: () => Boolean = () => true): Unit = {
+  private def publish(actions: Seq[Action], precondition: () => Boolean = () => true): Unit = {
+    val lines = actions.map(Manifest.render)
     var attempts = 0
     while (attempts < 50) {
       val landed = publishLock.synchronized {
@@ -618,112 +461,16 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     val all = commitFiles()
     val old = all.drop(latestSnapshotIdx(all).max(0))
     if (old.size <= 1) return true
-    val parsed =
-      try old.flatMap(readLines)
+    // the snapshot IS the fold's state, rendered: whatever the live fold
+    // keeps, the snapshot keeps, and whatever it drops stays dropped
+    val st =
+      try foldFrom(old, updateCache = false)
       catch {
         // a listed manifest aged out of the grace window and was GC'd
         // mid-read; this attempt is stale anyway — a lost CAS, recompute
         case _: java.io.FileNotFoundException => return false
       }
-    val tables = parsed.collect {
-      case l if l.startsWith("add\t") || l.startsWith("truncate\t") ||
-        l.startsWith("remove\t") => l.split('\t')(1)
-    }.distinct
-    // last schema line per live table survives the fold: a snapshot
-    // subsumes the manifests before it, and dropping the lines would amnesia
-    // every table's recorded shape (schemaAt/readAt-without-schema break)
-    var schemaMap = Map.empty[String, String]
-    // last stats line per (table, file) likewise — dropping them would turn
-    // every vacuum/auto-fold into a silent skipping-regression for old files
-    var statsMap = Map.empty[(String, String), String]
-    var clusterMap = Map.empty[String, String]
-    var colmapMap = Map.empty[String, String]
-    var dvMap = Map.empty[(String, String), String]
-    var cdfSet = Set.empty[String]
-    var bloomMap = Map.empty[(String, String), String]
-    var bloomcolsMap = Map.empty[String, String]
-    var constraintMap = Map.empty[(String, String), String]
-    var fkMap = Map.empty[(String, String), String]
-    var uniqueMap = Map.empty[(String, String), String]
-    var cdffloorMap = Map.empty[String, String]
-    var txnMap = Map.empty[(String, String), Long]
-    parsed.foreach { l =>
-      if (l.startsWith("schema\t")) {
-        val f = l.split("\t", 3); schemaMap += (f(1) -> f(2))
-      } else if (l.startsWith("truncate\t")) {
-        val t = l.split('\t')(1) // the fold's rule: a truncate ends the shape
-        schemaMap = schemaMap.filterNot { case (k, _) => k == t || k.startsWith(t + "/") }
-      } else if (l.startsWith("stats\t")) {
-        val f = l.split("\t", 4); statsMap += ((f(1), f(2)) -> f(3))
-      } else if (l.startsWith("dv\t")) {
-        val f = l.split("\t", 4); dvMap += ((f(1), f(2)) -> f(3))
-      } else if (l.startsWith("changefeed\t")) {
-        val f = l.split("\t", 3)
-        if (f.length >= 3 && f(2) == "on") cdfSet += f(1) else cdfSet -= f(1)
-      } else if (l.startsWith("cluster\t")) {
-        val f = l.split("\t", 3) // same clear semantics as the fold
-        if (f.length < 3 || f(2).isEmpty) clusterMap -= f(1) else clusterMap += (f(1) -> f(2))
-      } else if (l.startsWith("colmap\t")) {
-        val f = l.split("\t", 3)
-        if (f.length < 3 || f(2).isEmpty || f(2) == "{}") colmapMap -= f(1)
-        else colmapMap += (f(1) -> f(2))
-      } else if (l.startsWith("bloom\t")) {
-        val f = l.split("\t", 4); bloomMap += ((f(1), f(2)) -> f(3))
-      } else if (l.startsWith("bloomcols\t")) {
-        val f = l.split("\t", 3)
-        if (f.length < 3 || f(2).isEmpty) bloomcolsMap -= f(1)
-        else bloomcolsMap += (f(1) -> f(2))
-      } else if (l.startsWith("constraint\t")) {
-        val f = l.split("\t", 4)
-        if (f.length < 4 || f(3).isEmpty) constraintMap -= ((f(1), f(2)))
-        else constraintMap += ((f(1), f(2)) -> f(3))
-      } else if (l.startsWith("fk\t")) {
-        val f = l.split("\t", 4)
-        if (f.length < 4 || f(3).isEmpty) fkMap -= ((f(1), f(2)))
-        else fkMap += ((f(1), f(2)) -> f(3))
-      } else if (l.startsWith("unique\t")) {
-        val f = l.split("\t", 4)
-        if (f.length < 4 || f(3).isEmpty) uniqueMap -= ((f(1), f(2)))
-        else uniqueMap += ((f(1), f(2)) -> f(3))
-      } else if (l.startsWith("cdffloor\t")) {
-        val f = l.split("\t", 3)
-        if (f.length < 3 || f(2).isEmpty) cdffloorMap -= f(1)
-        else cdffloorMap += (f(1) -> f(2))
-      } else if (l.startsWith("txn\t")) {
-        // same max-wins/clear semantics as the fold — dropping these from a
-        // snapshot would re-admit every replayed stream batch after the
-        // 65th commit (the fold-amnesia bug class)
-        val f = l.split("\t", 4)
-        if (f.length < 4 || f(3).isEmpty) txnMap -= ((f(1), f(2)))
-        else txnMap += ((f(1), f(2)) ->
-          math.max(txnMap.getOrElse((f(1), f(2)), Long.MinValue), f(3).toLong))
-      }
-    }
-    // ALL truncate lines precede ALL add lines. Truncate applies by PREFIX,
-    // so interleaving per table would let a truncated parent (Pipeline's
-    // per-batch delete("staging/<src>")) land AFTER a still-visible child's
-    // adds whenever the child appeared first in the log — and the next refold
-    // of that snapshot would silently clear the child's files.
-    val visibleNow = tables.map(t => t -> visibleFiles(t).getOrElse(Nil)).toMap
-    val lines = ("snapshot" +: tables.map(t => s"truncate\t$t")) ++
-      tables.flatMap(t => visibleNow(t).map(f => s"add\t$t\t$f")) ++
-      schemaMap.toSeq.sortBy(_._1).map { case (t, j) => s"schema\t$t\t$j" } ++
-      clusterMap.toSeq.sortBy(_._1).map { case (t, c) => s"cluster\t$t\t$c" } ++
-      colmapMap.toSeq.sortBy(_._1).map { case (t, j) => s"colmap\t$t\t$j" } ++
-      cdfSet.toSeq.sorted.map(t => s"changefeed\t$t\ton") ++
-      bloomcolsMap.toSeq.sortBy(_._1).map { case (t, j) => s"bloomcols\t$t\t$j" } ++
-      constraintMap.toSeq.sortBy(_._1).map { case ((t, n), e) => s"constraint\t$t\t$n\t$e" } ++
-      fkMap.toSeq.sortBy(_._1).map { case ((t, n), d) => s"fk\t$t\t$n\t$d" } ++
-      uniqueMap.toSeq.sortBy(_._1).map { case ((t, n), c) => s"unique\t$t\t$n\t$c" } ++
-      cdffloorMap.toSeq.sortBy(_._1).map { case (t, v) => s"cdffloor\t$t\t$v" } ++
-      txnMap.toSeq.sortBy(_._1).map { case ((t, a), b) => s"txn\t$t\t$a\t$b" } ++
-      tables.flatMap(t => visibleNow(t).flatMap(f =>
-        statsMap.get((t, f)).map(j => s"stats\t$t\t$f\t$j"))) ++
-      tables.flatMap(t => visibleNow(t).flatMap(f =>
-        dvMap.get((t, f)).map(j => s"dv\t$t\t$f\t$j"))) ++
-      tables.flatMap(t => visibleNow(t).flatMap(f =>
-        bloomMap.get((t, f)).map(j => s"bloom\t$t\t$f\t$j")))
-    publishAt(lines, versionOf(old.last) + 1, snapshot = true)
+    publishAt(Snapshot +: Manifest.render(st), versionOf(old.last) + 1, snapshot = true)
   }
 
   // ---- staged transaction state -------------------------------------------
@@ -777,7 +524,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       stageDir: Option[Path], partitioned: Boolean,
       schemaJson: Option[String] = None,
       removes: Seq[String] = Nil,
-      extraLines: Seq[String] = Nil,
+      extraLines: Seq[Action] = Nil,
       pins: Seq[Pin] = Nil)
 
   private class Tx {
@@ -815,7 +562,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
   private class TxView(tx: Tx) extends Warehouse(spark0, root0) {
     private def stage(table: String, truncate: Boolean, partitioned: Boolean,
         write: Option[Path => Unit], schemaOf: Option[StructType] = None,
-        removes: Seq[String] = Nil, extraLines: Seq[String] = Nil,
+        removes: Seq[String] = Nil, extraLines: Seq[Action] = Nil,
         pins: Seq[Pin] = Nil): Unit = {
       val dirOpt = write.map { w =>
         val d = tx.synchronized(tx.nextStageDir())
@@ -854,7 +601,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     /** Stage raw manifest lines (deletion-vector commits, stream ledger
       * `txn` lines, `cdfnoop` markers) under the given pins.
       */
-    private[sources] def manifestLines(table: String, lines: Seq[String],
+    private[sources] def manifestLines(table: String, lines: Seq[Action],
         pins: Seq[Pin] = Nil): Unit =
       stage(table, truncate = false, partitioned = false, None,
         extraLines = lines, pins = pins)
@@ -1130,7 +877,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
   }
 
   private def commit(tx: Tx): Unit = {
-    val lines = ArrayBuffer[String]()
+    val lines = ArrayBuffer[Action]()
     val deletesAfter = ArrayBuffer[String]()
     // adoption: the first manifest write to a table laid down by raw
     // df.write (legacy) records the existing physical files, so switching a
@@ -1145,13 +892,13 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     // footer-derived column stats for one just-landed (or adopted) file —
     // Try-guarded: stats are an optimization and must never fail a commit,
     // and any JSON that would corrupt the TSV is dropped rather than written
-    def statsLine(table: String, rel: String): Option[String] =
+    def statsLine(table: String, rel: String): Option[Action] =
       if (!recordStats) None
       else FileStatsRec.fromFooter(new Path(path(table), rel),
           spark.sparkContext.hadoopConfiguration)
         .map(_.toJson)
         .filter(j => !j.contains('\t') && !j.contains('\n'))
-        .map(j => s"stats\t$table\t$rel\t$j")
+        .map(Stats(table, rel, _))
     // data files this commit ADDS, per table — the Bloom-index hook indexes
     // exactly these (and nothing else) after the staging moves land
     val addedRels = scala.collection.mutable.LinkedHashMap[String, ArrayBuffer[String]]()
@@ -1162,41 +909,27 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
         stagedDataFiles(new Path(path(t)))
           .filterNot(_.split('/').last.startsWith("tx-"))
           .foreach { f =>
-            lines += s"add\t$t\t$f"; statsLine(t, f).foreach(lines += _)
+            lines += Add(t, f); statsLine(t, f).foreach(lines += _)
             noteAdd(t, f)
           }
     }
     tx.entries.zipWithIndex.foreach { case (e, i) =>
       if (e.truncate) {
-        lines += s"truncate\t${e.table}"
+        lines += Truncate(e.table)
         if (e.stageDir.isEmpty) {
           deletesAfter += e.table
           // a FULL table drop (delete(), not truncate-within-replace) also
-          // clears colmap/cluster metadata for the table and its prefix
-          // children: a table re-created under the same name must start
-          // with identity metadata, not inherit rename mappings and drop
-          // tombstones (a new column matching an old physical name would be
-          // refused; one matching an old logical name silently remapped)
-          val st = foldedState()
-          def under(k: String) = k == e.table || k.startsWith(e.table + "/")
-          st.colmap.keys.filter(under).foreach(t => lines += s"colmap\t$t\t{}")
-          st.cluster.keys.filter(under).foreach(t => lines += s"cluster\t$t\t")
-          st.cdf.filter(under).foreach(t => lines += s"changefeed\t$t\toff")
-          st.cdffloor.keys.filter(under).foreach(t => lines += s"cdffloor\t$t\t")
-          st.bloomcols.keys.filter(under).foreach(t => lines += s"bloomcols\t$t\t")
-          st.constraints.keys.filter(k => under(k._1))
-            .foreach { case (t, n) => lines += s"constraint\t$t\t$n\t" }
-          st.fks.keys.filter(k => under(k._1))
-            .foreach { case (t, n) => lines += s"fk\t$t\t$n\t" }
-          st.uniques.keys.filter(k => under(k._1))
-            .foreach { case (t, n) => lines += s"unique\t$t\t$n\t" }
-          // a dropped-and-recreated table must not inherit a streaming
-          // high-water (it would silently skip a new stream's early batches)
-          st.txns.keys.filter(k => under(k._1))
-            .foreach { case (t, a) => lines += s"txn\t$t\t$a\t" }
+          // clears every declared key of the table and its prefix children:
+          // a table re-created under the same name must start bare — not
+          // inherit rename mappings and drop tombstones (a new column
+          // matching an old physical name would be refused; one matching an
+          // old logical name silently remapped), nor a streaming high-water
+          // (it would silently skip a new stream's early batches)
+          lines ++= Manifest.clears(foldedState(),
+            k => k == e.table || k.startsWith(e.table + "/"))
         }
       }
-      e.removes.foreach(f => lines += s"remove\t${e.table}\t$f")
+      e.removes.foreach(f => lines += Remove(e.table, f))
       e.stageDir.foreach { d =>
         val tdir = new Path(path(e.table))
         fs.mkdirs(tdir)
@@ -1212,7 +945,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
           Option(dest.getParent).foreach(fs.mkdirs)
           if (!fs.rename(new Path(d, rel), dest))
             throw new java.io.IOException(s"staging move failed for ${e.table}/$destRel")
-          lines += s"add\t${e.table}\t$destRel"
+          lines += Add(e.table, destRel)
           statsLine(e.table, destRel).foreach(lines += _)
           noteAdd(e.table, destRel)
         }
@@ -1221,7 +954,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       // LAST schema line per table, so each version knows the table's shape
       // as of its last write (add-column evolution = a wider later write;
       // readAt reconciles older, narrower files by parquet null-fill)
-      e.schemaJson.foreach(j => lines += s"schema\t${e.table}\t$j")
+      e.schemaJson.foreach(j => lines += Schema(e.table, j))
       // raw manifest lines from manifestLines (deletion-vector commits)
       e.extraLines.foreach(lines += _)
     }
@@ -1238,7 +971,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
           e.removes.foreach { f =>
             st.blooms.get((e.table, f)).foreach { j =>
               BloomIndex.parseEntry(j).values.foreach { case (leaf, _) =>
-                lines += s"remove\t${e.table}/_bloom\t$leaf"
+                lines += Remove(s"${e.table}/_bloom", leaf)
               }
             }
           }
@@ -1258,7 +991,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
           e.removes.foreach { f =>
             st.dvs.get((e.table, f)).foreach { j =>
               DvRec.sidecarLeaf(j).foreach(leaf =>
-                lines += s"remove\t${e.table}/_dv\t$leaf")
+                lines += Remove(s"${e.table}/_dv", leaf))
             }
           }
         }
@@ -1482,11 +1215,11 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       s"manifests ${missing.mkString(",")} in ($fromVersion,$toVersion] were vacuumed; " +
         "the change window is no longer reconstructible")
     val truncatedInWindow = window.filterNot(isSnapshot).exists(cf =>
-      readLines(cf).exists { line =>
-        val f = line.split("\t", 4)
-        (f(0) == "truncate" && (table == f(1) || table.startsWith(f(1) + "/"))) ||
-          (f(0) == "remove" && f(1) == table) || // row-level DML rewrote files
-          (f(0) == "dv" && f(1) == table) // merge-on-read delete: rows vanished in place
+      readActions(cf).exists {
+        case Truncate(t) => table == t || table.startsWith(t + "/")
+        case Remove(t, _) => t == table // row-level DML rewrote files
+        case Dv(t, _, _) => t == table // merge-on-read delete: rows vanished in place
+        case _ => false
       })
     if (truncatedInWindow) throw new IllegalStateException(
       s"$table was truncated or row-rewritten inside ($fromVersion,$toVersion]; " +
@@ -1511,11 +1244,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     val after = stateAt(toVersion).adds.getOrElse(table, Vector.empty).toSet
     val seen = scala.collection.mutable.Set.empty[String] ++ before
     window.filterNot(isSnapshot).map { cf =>
-      val files = readLines(cf).flatMap { line =>
-        val f = line.split("\t", 4)
-        if (f(0) == "add" && f(1) == table && after.contains(f(2)) && seen.add(f(2)))
-          Some(f(2))
-        else None
+      val files = readActions(cf).collect {
+        case Add(t, f) if t == table && after.contains(f) && seen.add(f) => f
       }
       versionOf(cf) -> files.toVector
     }.filter(_._2.nonEmpty)
@@ -1650,12 +1380,12 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
   /** The stream ledger line committing (appId, batchId) for `table`, or
     * None when the high-water already covers `batchId` (a replay).
     */
-  private def txnLine(table: String, appId: String, batchId: Long): Option[String] = {
+  private def txnLine(table: String, appId: String, batchId: Long): Option[Action] = {
     require(appId.nonEmpty && !appId.exists(c => c == '\t' || c == '\n'),
       s"appId '$appId' is empty or contains TSV control characters")
     require(batchId >= 0L, s"batchId must be non-negative, got $batchId")
     if (foldedState().txns.get((table, appId)).exists(_ >= batchId)) None
-    else Some(s"txn\t$table\t$appId\t$batchId")
+    else Some(Txn(table, appId, Some(batchId)))
   }
 
   /** [[appendOnce]] for files ALREADY WRITTEN by streaming-sink tasks (the
@@ -1715,84 +1445,30 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       s"cannot restore $table to version $version: ${gone.size} of its data " +
         s"files were vacuumed (first: ${gone.head})")
     val expected = committedOrPhysical(table).sorted
-    val liveNow = foldedState()
-    // "already that state" covers METADATA too: a rename/drop/recluster is a
-    // metadata-only commit that leaves the file set identical, and restoring
-    // across one must still publish the era's schema/colmap/cluster lines
-    val sameMeta = st.schemas.get(table) == liveNow.schemas.get(table) &&
-      st.colmap.get(table) == liveNow.colmap.get(table) &&
-      st.cluster.get(table) == liveNow.cluster.get(table) &&
-      st.dvs.filter(_._1._1 == table) == liveNow.dvs.filter(_._1._1 == table) &&
-      st.blooms.filter(_._1._1 == table) == liveNow.blooms.filter(_._1._1 == table) &&
-      st.bloomcols.get(table) == liveNow.bloomcols.get(table) &&
-      st.constraints.filter(_._1._1 == table) == liveNow.constraints.filter(_._1._1 == table) &&
-      st.fks.filter(_._1._1 == table) == liveNow.fks.filter(_._1._1 == table) &&
-      st.uniques.filter(_._1._1 == table) == liveNow.uniques.filter(_._1._1 == table)
-    if (files.sorted == expected && sameMeta) return // nothing to commit
-    // the restored version's recorded SHAPE comes back with its files —
-    // without this line the table would keep the newer schema label over
-    // the older data it just restored; per-file stats likewise (skipping
-    // would otherwise silently stop working for the restored files). The
-    // era's colmap and cluster declarations restore ATOMICALLY with the
-    // schema: a restore to a pre-drop version would otherwise regain the
-    // column in the schema while the current colmap still tombstones its
-    // physical name — readable but permanently unwritable. An era without
-    // a declaration CLEARS the current one (empty-value lines).
+    // what a restore rewinds: the table with its Bloom and DV sidecar
+    // pseudo-tables — files, recorded SHAPE, per-file stats, deletion
+    // vectors and Bloom pointers, and its declarations (colmap, cluster,
+    // Bloom, CHECK/FK/UNIQUE) — everything but the change feed, its floor
+    // and the stream high-waters. The era's colmap restores ATOMICALLY with
+    // its schema: a restore to a pre-drop version would otherwise regain the
+    // column while the current colmap still tombstones its physical name —
+    // readable but permanently unwritable. A restore of the PARENT of a
+    // foreign key is an admin rewind and does not re-prove children.
+    val slice = (t: String) => t == table || t == s"$table/_bloom" || t == s"$table/_dv"
+    val rewound: Action => Boolean = {
+      case _: Truncate | _: ChangeFeed | _: CdfFloor | _: Txn => false
+      case _ => true
+    }
+    val era = Manifest.render(st, slice).filter(rewound)
     val live = foldedState()
-    val colmapLine: Seq[String] = (st.colmap.get(table), live.colmap.get(table)) match {
-      case (Some(j), _) => Seq(s"colmap\t$table\t$j")
-      case (None, Some(_)) => Seq(s"colmap\t$table\t{}")
-      case _ => Nil
-    }
-    val clusterLine: Seq[String] = (st.cluster.get(table), live.cluster.get(table)) match {
-      case (Some(c), _) => Seq(s"cluster\t$table\t$c")
-      case (None, Some(_)) => Seq(s"cluster\t$table\t")
-      case _ => Nil
-    }
-    val bloomcolsLine: Seq[String] = (st.bloomcols.get(table), live.bloomcols.get(table)) match {
-      case (Some(j), _) => Seq(s"bloomcols\t$table\t$j")
-      case (None, Some(_)) => Seq(s"bloomcols\t$table\t")
-      case _ => Nil
-    }
-    // the era's CHECK constraints come back with its schema (same staleness
-    // argument as colmap): era-present names re-publish, era-absent names
-    // that exist now clear
-    val constraintLines: Seq[String] = {
-      val era = st.constraints.collect { case ((t, n), e) if t == table => n -> e }
-      val now = live.constraints.collect { case ((t, n), e) if t == table => n -> e }
-      era.toSeq.sortBy(_._1).map { case (n, e) => s"constraint\t$table\t$n\t$e" } ++
-        (now.keySet -- era.keySet).toSeq.sorted.map(n => s"constraint\t$table\t$n\t")
-    }
-    // child-keyed FOREIGN KEY declarations round-trip the same way (a
-    // restore of the PARENT is an admin rewind and does not re-prove
-    // children — the standard formats' position; writes re-enforce after)
-    val fkLines: Seq[String] = {
-      val era = st.fks.collect { case ((t, n), d) if t == table => n -> d }
-      val now = live.fks.collect { case ((t, n), d) if t == table => n -> d }
-      era.toSeq.sortBy(_._1).map { case (n, d) => s"fk\t$table\t$n\t$d" } ++
-        (now.keySet -- era.keySet).toSeq.sorted.map(n => s"fk\t$table\t$n\t")
-    }
-    val uniqueLines: Seq[String] = {
-      val era = st.uniques.collect { case ((t, n), c) if t == table => n -> c }
-      val now = live.uniques.collect { case ((t, n), c) if t == table => n -> c }
-      era.toSeq.sortBy(_._1).map { case (n, c) => s"unique\t$table\t$n\t$c" } ++
-        (now.keySet -- era.keySet).toSeq.sorted.map(n => s"unique\t$table\t$n\t")
-    }
-    val lines = (s"truncate\t$table" +: files.map(f => s"add\t$table\t$f")) ++
-      st.schemas.get(table).map(j => s"schema\t$table\t$j").toSeq ++
-      colmapLine ++ clusterLine ++ bloomcolsLine ++ constraintLines ++ fkLines ++
-      uniqueLines ++
-      files.flatMap(f => st.stats.get((table, f)).map(j => s"stats\t$table\t$f\t$j")) ++
-      // the era's deletion vectors come back with its files (the leading
-      // truncate cleared all current ones)
-      files.flatMap(f => st.dvs.get((table, f)).map(j => s"dv\t$table\t$f\t$j")) ++
-      // the era's Bloom index comes back too: its `_bloom` sidecar adds
-      // (the truncate cleared prefix children) and per-file pointers. A
-      // sidecar vacuum already took reads as absent — always-kept, then
-      // re-indexable via backfillBloomIndex
-      st.adds.getOrElse(s"$table/_bloom", Vector.empty)
-        .map(f => s"add\t$table/_bloom\t$f") ++
-      files.flatMap(f => st.blooms.get((table, f)).map(j => s"bloom\t$table\t$f\t$j"))
+    // "already that state" covers METADATA too: a rename/drop/recluster is a
+    // metadata-only commit that leaves the file set identical
+    if (files.sorted == expected &&
+        era.toSet == Manifest.render(live, slice).filter(rewound).toSet) return
+    // declarations the era lacks but the table has now CLEAR
+    val eraKeys = Manifest.clears(st, _ == table).toSet
+    val lines = (Truncate(table) +: era) ++
+      Manifest.clears(live, _ == table).filter(rewound).filterNot(eraKeys)
     publish(lines,
       precondition = () => committedOrPhysical(table).sorted == expected)
   }
@@ -1908,7 +1584,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     cols.foreach(c => require(!c.contains("\t") && !c.contains("\n"),
       s"bloom column name '$c' contains TSV control characters"))
     if (bloomIndex(table).contains((cols, fpp))) return // already declared
-    publish(Seq(s"bloomcols\t$table\t${BloomIndex.declJson(cols, fpp)}"))
+    publish(Seq(BloomCols(table, BloomIndex.declJson(cols, fpp))))
   }
 
   /** The table's declared Bloom index: (logical columns, target fpp). */
@@ -1952,13 +1628,13 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
           s"rows violate it (first: ${bad.head})")
     }
     if (constraintsOf(table).get(name).contains(exprSql)) return // already declared
-    publish(Seq(s"constraint\t$table\t$name\t$exprSql"))
+    publish(Seq(Constraint(table, name, exprSql)))
   }
 
   /** Drop a declared constraint — metadata-only, a no-op when absent. */
   def dropConstraint(table: String, name: String): Unit =
     if (constraintsOf(table).contains(name))
-      publish(Seq(s"constraint\t$table\t$name\t"))
+      publish(Seq(Constraint(table, name, "")))
 
   /** Refuse `df` when any declared constraint on `table` evaluates to
     * FALSE on any row — ONE aggregate over the batch, all constraints
@@ -2089,7 +1765,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
     val desc = s"${childCols.mkString(",")}|$parent|${parentCols.mkString(",")}"
     if (foldedState().fks.get((child, name)).contains(desc)) return
-    publish(Seq(s"fk\t$child\t$name\t$desc"))
+    publish(Seq(Fk(child, name, desc)))
   }
 
   // the tuple-keyed probe frames join on positional `__k<i>` names so a
@@ -2105,7 +1781,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
   /** Drop a declared foreign key — metadata-only, no-op when absent. */
   def dropForeignKey(child: String, name: String): Unit =
     if (foldedState().fks.contains((child, name)))
-      publish(Seq(s"fk\t$child\t$name\t"))
+      publish(Seq(Fk(child, name, "")))
 
   // ---- SQL catalog seams (graft.sql) ------------------------------------
 
@@ -2135,22 +1811,11 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
   /** The commit wall-clock of one manifest: the `ts` line it RECORDS
     * (first line of every manifest since round 14 — survives a warehouse
     * copy/rsync that resets mtimes), falling back to the file mtime for
-    * pre-recording history. Manifests are immutable → cached forever.
+    * pre-recording history. Read through the bounded manifest cache.
     */
-  private val commitTsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] def commitTimestamp(p: Path): Long = {
-    val key = fs.makeQualified(p).toString
-    val cached = commitTsCache.get(key)
-    if (cached != null) return cached.longValue()
-    val recorded = readLines(p).collectFirst {
-      case l if l.startsWith("ts\t") => l.split("\t", 2)(1).toLong
-    }
-    val ts = recorded.getOrElse(fs.getFileStatus(p).getModificationTime)
-    commitTsCache.put(key, ts)
-    ts
-  }
+  private[graft] def commitTimestamp(p: Path): Long =
+    readActions(p).collectFirst { case Ts(ms) => ms }
+      .getOrElse(fs.getFileStatus(p).getModificationTime)
 
   /** The newest commit version whose wall-clock is at or before `tsMillis`
     * (the SQL `TIMESTAMP AS OF` resolution). The clock is the
@@ -2178,15 +1843,12 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
   private[graft] def commitHistory(tableOpt: Option[String])
       : Seq[(Int, Boolean, Long, Int)] =
     commitFiles().map { p =>
-      val lines = readLines(p).filterNot(_.startsWith("ts\t"))
-      val relevant = tableOpt match {
-        case None => lines
-        case Some(t) => lines.filter { l =>
-          val f = l.split("\t", 3)
-          f.length > 1 && (f(1) == t || f(1).startsWith(t + "/"))
-        }
+      val relevant = readActions(p).count {
+        case Ts(_) => false
+        case a: OnTable => tableOpt.forall(t => a.table == t || a.table.startsWith(t + "/"))
+        case _ => tableOpt.isEmpty
       }
-      (versionOf(p), isSnapshot(p), commitTimestamp(p), relevant.size)
+      (versionOf(p), isSnapshot(p), commitTimestamp(p), relevant)
     }.filter(r => tableOpt.isEmpty || r._4 > 0)
 
   private def recordedSchema(table: String): StructType =
@@ -2285,13 +1947,13 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
     val encoded = columns.mkString(",")
     if (foldedState().uniques.get((table, name)).contains(encoded)) return
-    publish(Seq(s"unique\t$table\t$name\t$encoded"))
+    publish(Seq(Unique(table, name, encoded)))
   }
 
   /** Drop a declared UNIQUE constraint — metadata-only, no-op when absent. */
   def dropUniqueKey(table: String, name: String): Unit =
     if (foldedState().uniques.contains((table, name)))
-      publish(Seq(s"unique\t$table\t$name\t"))
+      publish(Seq(Unique(table, name, "")))
 
   /** Refuse `df` when a declared UNIQUE column collides — within the batch
     * (one aggregate) or against the table's rows OUTSIDE `excludeFiles`
@@ -2438,7 +2100,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     if (lines.isEmpty) return 0
     publish(lines,
       precondition = () => committedOrPhysical(table).sorted == expected)
-    lines.count(_.startsWith("bloom\t"))
+    lines.count(_.isInstanceOf[Bloom])
   }
 
   /** Sidecar build + pointer lines for `rels` (just-landed data files of a
@@ -2452,14 +2114,14 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * file's index (it stays always-kept), never the commit.
     */
   private def bloomIndexLines(txid: String, table: String, rels: Seq[String],
-      decl: String): Seq[String] = try {
+      decl: String): Seq[Action] = try {
     val (cols, fpp) = BloomIndex.parseDecl(decl)
     if (cols.isEmpty || rels.isEmpty) return Nil
     val physCols = cols.map(c => physColOf(table, c)).distinct
     val bdir = new Path(path(s"$table/_bloom"))
     fs.mkdirs(bdir)
     var seq = 0
-    val out = ArrayBuffer[String]()
+    val out = ArrayBuffer[Action]()
     rels.foreach { rel =>
       try {
         FileStatsRec.fromFooter(new Path(path(table), rel),
@@ -2481,9 +2143,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
               val j = BloomIndex.entryJson(entries)
               if (!j.contains('\t') && !j.contains('\n')) {
                 entries.foreach { case (_, leaf, _) =>
-                  out += s"add\t$table/_bloom\t$leaf"
+                  out += Add(s"$table/_bloom", leaf)
                 }
-                out += s"bloom\t$table\t$rel\t$j"
+                out += Bloom(table, rel, j)
               }
             }
           }
@@ -2918,22 +2580,21 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       else {
         val cc2 = if (c == table) cc.map(x => if (x == oldName) newName else x) else cc
         val pc2 = if (pt == table) pc.map(x => if (x == oldName) newName else x) else pc
-        Some(s"fk\t$c\t$n\t${cc2.mkString(",")}|$pt|${pc2.mkString(",")}")
+        Some(Fk(c, n, s"${cc2.mkString(",")}|$pt|${pc2.mkString(",")}"))
       }
     }
     val uq2 = st0.uniques.toSeq.collect {
       case ((t, n), c0) if t == table && c0.split(',').contains(oldName) =>
-        s"unique\t$t\t$n\t${c0.split(',').map(c =>
-          if (c == oldName) newName else c).mkString(",")}"
+        Unique(t, n, c0.split(',').map(c =>
+          if (c == oldName) newName else c).mkString(","))
     }
     val bloom2 = st0.bloomcols.get(table).map(BloomIndex.parseDecl).collect {
       case (cols, fpp) if cols.contains(oldName) =>
-        s"bloomcols\t$table\t${BloomIndex.declJson(
-          cols.map(c => if (c == oldName) newName else c), fpp)}"
+        BloomCols(table, BloomIndex.declJson(
+          cols.map(c => if (c == oldName) newName else c), fpp))
     }
-    val lines = Seq(s"schema\t$table\t${sch2.json}",
-      s"colmap\t$table\t${colMapJson(m2)}") ++
-      cluster2.map(cs => s"cluster\t$table\t${cs.mkString(",")}") ++
+    val lines = Seq(Schema(table, sch2.json), ColMap(table, colMapJson(m2))) ++
+      cluster2.map(cs => Cluster(table, cs.mkString(","))) ++
       fk2 ++ uq2 ++ bloom2
     require(!sch2.json.contains('\t') && !sch2.json.contains('\n'),
       s"schema JSON for $table contains TSV control characters")
@@ -2993,8 +2654,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     val physical = m.getOrElse(name, name)
     val m2 = (m - name) + (s"$droppedPrefix$physical" -> physical)
     val sch2 = StructType(sch.fields.filterNot(_.name == name))
-    publish(Seq(s"schema\t$table\t${sch2.json}",
-      s"colmap\t$table\t${colMapJson(m2)}"))
+    publish(Seq(Schema(table, sch2.json), ColMap(table, colMapJson(m2))))
   }
 
   /** Widen a column's type WITHOUT rewriting a byte — the remaining
@@ -3035,7 +2695,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       if (f.name == name) f.copy(dataType = newType) else f))
     require(!sch2.json.contains('\t') && !sch2.json.contains('\n'),
       s"schema JSON for $table contains TSV control characters")
-    publish(Seq(s"schema\t$table\t${sch2.json}"))
+    publish(Seq(Schema(table, sch2.json)))
   }
 
   /** Add a NULLABLE column WITHOUT rewriting a byte — the metadata-only
@@ -3076,7 +2736,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     val sch2 = StructType(sch.fields :+ StructField(name, dataType, nullable = true))
     require(!sch2.json.contains('\t') && !sch2.json.contains('\n'),
       s"schema JSON for $table contains TSV control characters")
-    publish(Seq(s"schema\t$table\t${sch2.json}"))
+    publish(Seq(Schema(table, sch2.json)))
   }
 
   /** Reserved logical-name prefix marking a tombstoned physical column in
@@ -3105,7 +2765,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     cols.foreach(c => require(!c.contains(",") && !c.contains("\t") && !c.contains("\n"),
       s"cluster column name '$c' contains TSV/list control characters"))
     if (clusterBy(table).contains(cols)) return // already declared — no commit
-    publish(Seq(s"cluster\t$table\t${cols.mkString(",")}"))
+    publish(Seq(Cluster(table, cols.mkString(","))))
   }
 
   override def appendClustered(table: String, df: DataFrame, clusterCols: Seq[String],
@@ -3193,7 +2853,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     val src = readFiles(table, schema, tail, dvOpt = Some(rawDvs(st, table)))
     transact { tv =>
       tv.rewriteExcluding(table, tail, layout(src), st, validate = false)
-      if (changeFeedEnabled(table)) tv.manifestLines(table, Seq(s"cdfnoop\t$table"))
+      if (changeFeedEnabled(table)) tv.manifestLines(table, Seq(CdfNoop(table)))
     }
     ReclusterResult(tail.size, files.size - tail.size, bytes)
   }
@@ -3477,7 +3137,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     */
   def setChangeFeed(table: String, on: Boolean): Unit = {
     if (changeFeedEnabled(table) == on) return
-    publish(Seq(s"changefeed\t$table\t${if (on) "on" else "off"}"))
+    publish(Seq(ChangeFeed(table, on)))
   }
 
   def changeFeedEnabled(table: String): Boolean = foldedState().cdf.contains(table)
@@ -3585,21 +3245,18 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       var cdfAdds = Vector.empty[String]
       var rowLevel = false // removes or dv lines: a DML rewrite
       var noop = false // row-preserving maintenance marker
-      readLines(cf).foreach { line =>
-        val f = line.split("\t", 4)
-        f(0) match {
-          case "truncate" if table == f(1) || table.startsWith(f(1) + "/") =>
-            throw new IllegalStateException(
-              s"$table was truncated/replaced at version $v inside " +
-                s"($fromVersion,$toVersion]; that is not a row-level change — " +
-                "read the as-of states instead")
-          case "add" if f(1) == table => dataAdds :+= f(2)
-          case "add" if f(1) == chT => cdfAdds :+= f(2)
-          case "remove" if f(1) == table => rowLevel = true
-          case "dv" if f(1) == table => rowLevel = true
-          case "cdfnoop" if f(1) == table => noop = true
-          case _ => ()
-        }
+      readActions(cf).foreach {
+        case Truncate(t) if table == t || table.startsWith(t + "/") =>
+          throw new IllegalStateException(
+            s"$table was truncated/replaced at version $v inside " +
+              s"($fromVersion,$toVersion]; that is not a row-level change — " +
+              "read the as-of states instead")
+        case Add(t, f) if t == table => dataAdds :+= f
+        case Add(t, f) if t == chT => cdfAdds :+= f
+        case Remove(t, _) if t == table => rowLevel = true
+        case Dv(t, _, _) if t == table => rowLevel = true
+        case CdfNoop(t) if t == table => noop = true
+        case _ => ()
       }
       if (noop) None // row-preserving maintenance: file churn, zero row change
       else if (cdfAdds.nonEmpty) {
@@ -3657,9 +3314,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * any era a plannable version resolves to lives in a retained manifest.
     */
   private[graft] def colmapEras(table: String): Seq[Map[String, String]] = {
-    val eras = commitFiles().flatMap(cf => readLines(cf).collect {
-      case l if l.startsWith(s"colmap\t") && l.split("\t", 4)(1) == table =>
-        val v = l.split("\t", 4).lift(2).getOrElse("")
+    val eras = commitFiles().flatMap(cf => readActions(cf).collect {
+      case ColMap(t, v) if t == table =>
         if (v.isEmpty || v == "{}") Map.empty[String, String]
         else parseColMap(Some(v))
     })
@@ -3700,13 +3356,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     val visible = st.adds.getOrElse(chT, Vector.empty).toSet
     val victims = commitFiles().filterNot(isSnapshot)
       .filter(p => versionOf(p) < belowVersion)
-      .flatMap(cf => readLines(cf).flatMap { line =>
-        val f = line.split("\t", 4)
-        if (f(0) == "add" && f(1) == chT) Some(f(2)) else None
-      })
+      .flatMap(cf => readActions(cf).collect { case Add(t, f) if t == chT => f })
       .distinct.filter(visible.contains)
-    publish(Seq(s"cdffloor\t$table\t$belowVersion") ++
-      victims.map(f => s"remove\t$chT\t$f"))
+    publish(CdfFloor(table, Some(belowVersion)) +: victims.map(Remove(chT, _)))
     victims.size
   }
 
@@ -3748,7 +3400,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     deleteWhereDvAll(Seq((table, schema, preds)), maxDvPerFile, alsoInTx).head
 
   /** One DV delete's fully-planned commit payload (or the no-op result). */
-  private case class DvPlan(table: String, lines: Seq[String], pin: Pin,
+  private case class DvPlan(table: String, lines: Seq[Action], pin: Pin,
       changeSlice: Option[DataFrame], result: DvDeleteResult)
 
   private def planDvDelete(table: String, schema: StructType,
@@ -3794,11 +3446,11 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       // a rewrite that supersedes a sidecar-backed DV releases the old
       // sidecar in the same commit (its bytes become vacuumable garbage)
       val release = dvBefore.get(f).flatten.flatMap(DvRec.sidecarLeaf)
-        .map(old => s"remove\t$table/_dv\t$old").toSeq
+        .map(Remove(s"$table/_dv", _)).toSeq
       if (ords.size <= dvInlineMax) {
         val j = DvRec.toJson(ords)
         require(!j.contains('\t') && !j.contains('\n'), "dv JSON contains TSV control chars")
-        release :+ s"dv\t$table\t$f\t$j"
+        release :+ Dv(table, f, j)
       } else {
         // dense set → immutable binary sidecar, committed as a visible
         // file of <table>/_dv in THIS commit (the Bloom lifecycle): the
@@ -3806,8 +3458,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
         // sidecars and reclaims released/aborted ones
         val leaf = s"dv-${java.util.UUID.randomUUID().toString}.bin"
         writeDvSidecar(table, leaf, ords)
-        release ++ Seq(s"add\t$table/_dv\t$leaf",
-          s"dv\t$table\t$f\t${DvRec.toSidecarJson(ords.size.toLong, leaf)}")
+        release ++ Seq(Add(s"$table/_dv", leaf),
+          Dv(table, f, DvRec.toSidecarJson(ords.size.toLong, leaf)))
       }
     }
     val changeSlice =
@@ -4356,7 +4008,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * (historical folds must never shadow the live state).
     */
   private def stateAt(version: Int): LogState =
-    if (version <= 0) LogState(Map.empty, Set.empty) // genesis: before any commit
+    if (version <= 0) LogState.empty // genesis: before any commit
     else retryOnVanishedManifest {
     val all = commitFiles()
     // a beyond-head version is a caller error (typo'd asOfVersion), not a
@@ -4475,9 +4127,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     // per-table visible set those rels read as the parent's garbage and an
     // expired-grace vacuum would eat the child table (observed shape: a CDF
     // table's whole change history, a Bloom index's sidecars).
-    val managed = retryOnVanishedManifest(commitFiles().flatMap(readLines)).collect {
-      case l if l.startsWith("add\t") => l.split('\t')(1)
-    }.distinct
+    val managed = retryOnVanishedManifest(
+      commitFiles().flatMap(readActions(_).collect { case Add(t, _) => t }.toSet)).distinct
     val live: Set[String] = foldedState().adds.iterator.flatMap { case (t, fls) =>
       fls.iterator.map(f => fs.makeQualified(new Path(path(t), f)).toString)
     }.toSet

@@ -75,9 +75,9 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
   // the signature similarity pre-filter then runs INLINE in the per-batch
   // band join — the vocabulary-collision false-positive tail (~1000:1 over
   // true candidates at sf0.1) is rejected before the candidate distinct,
-  // and the per-batch plan stops joining the signature index twice. Layout
-  // v2: a band table persisted by the pre-carry layout must be reindexed
-  // (or read with the 3-column prefix) — the stream always writes v2.
+  // and the per-batch plan stops joining the signature index twice. This is
+  // layout v2; a band table an older build laid down with only the first
+  // three columns stays in that layout (see `bandsCarrySigs`).
   val bandSchema = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("band", IntegerType, nullable = false),
@@ -94,6 +94,22 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
     StructField("capacity", LongType, nullable = false),
     StructField("n_items", LongType, nullable = false),
     StructField("bloom", org.apache.spark.sql.types.BinaryType, nullable = false)))
+
+  /** Whether the persisted band table carries signatures — decided once per
+    * stream from its manifest-recorded schema (footers for a raw-laid
+    * table; a fresh table carries). Reading a legacy 3-column table with
+    * [[bandSchema]] would null-fill the `mh*` columns and the inline
+    * prefilter would silently reject every corpus-side candidate, so a
+    * legacy table keeps its layout: the stream writes, reads and compacts
+    * it with the 3-column [[storedBandSchema]] and prefilters after the
+    * join instead.
+    */
+  private lazy val bandsCarrySigs: Boolean =
+    wh.currentSchema(bandTable).orElse(wh.inferSchema(bandTable))
+      .forall(_.fieldNames.contains("mh0"))
+
+  private lazy val storedBandSchema: StructType =
+    if (bandsCarrySigs) bandSchema else StructType(bandSchema.take(3))
 
   /** The size-adaptive probe decision: point-probe limits apply only once
     * the persisted index outgrows `probeMinIndexBytes`; under it, (0, 0)
@@ -126,7 +142,7 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
     phase("signature scan")
     batchSigs.count()
     val batchBands = Dedup.bandKeys(batchSigs, "doc_id", numHashes, rowsPerBand,
-      carrySigs = true)
+      carrySigs = bandsCarrySigs)
     // persistCorpusSigs=false: the index is already a parquet table — its
     // consumers re-scan it narrowly instead of materializing the whole
     // accumulated index into executor memory every batch. The corpus side
@@ -159,7 +175,7 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
     if (!bloomLoaded) { bloomCache = readBloomState(); bloomLoaded = true }
     val bloomState = bloomCache.orElse {
       if (bloomMinIndexBytes >= 0 && wh.sizeBytes(bandTable) >= bloomMinIndexBytes) {
-        val keys = wh.read(bandTable, bandSchema).select(col("key"))
+        val keys = wh.read(bandTable, storedBandSchema).select(col("key"))
         val n = keys.count()
         val cap = math.max(bloomInitialCapacity, n * 2)
         Some((cap, n, buildBloom(keys, cap)))
@@ -175,10 +191,10 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
       "doc_id", "text", k, numHashes, rowsPerBand, minJaccard,
       minSigMatchesOverride, freshSigsPre = Some(batchSigs),
       persistCorpusSigs = false,
-      corpusBandsPre = Some(wh.read(bandTable, bandSchema)),
+      corpusBandsPre = Some(wh.read(bandTable, storedBandSchema)),
       probeKeyLimit = keyLim, pointLookupMaxIds = idLim,
       bandBloom = bloomState.map(_._3),
-      corpusBandsCarrySigs = true)
+      corpusBandsCarrySigs = bandsCarrySigs)
     // bloom maintenance: the batch's band keys merge in, with a 2× rebuild
     // from band-table ∪ batch at saturation so the fpp stays honest as the
     // corpus grows
@@ -191,7 +207,7 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
       val newN = n + nNew
       if (newN > cap) {
         val ncap = math.max(cap * 2, newN * 2)
-        (ncap, newN, buildBloom(wh.read(bandTable, bandSchema).select(col("key"))
+        (ncap, newN, buildBloom(wh.read(bandTable, storedBandSchema).select(col("key"))
           .unionByName(batchBands.select(col("key"))), ncap))
       } else {
         // same (capacity, fpp) → identical bit layout → mergeable
@@ -304,7 +320,7 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
     */
   def compactAll(targetFiles: Int = 1): Unit = {
     wh.compact(indexTable, sigSchema, targetFiles)
-    wh.compact(bandTable, bandSchema, targetFiles, sortCols = Seq("key"))
+    wh.compact(bandTable, storedBandSchema, targetFiles, sortCols = Seq("key"))
     wh.compact(corpusTable, docSchema, targetFiles)
     wh.compact(pairsTable, pairSchema, targetFiles)
     // the small-file floor compactEvery bounds would otherwise reappear as

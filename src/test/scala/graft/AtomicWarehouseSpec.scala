@@ -498,6 +498,57 @@ class AtomicWarehouseSpec extends SparkSpec {
     assert(dataFiles == 1, s"expected 1 referenced data file, found $dataFiles")
   }
 
+  test("vacuum(0) keeps every accessor's answer for a table using every manifest line kind") {
+    import graft.sources.{ColEq, ColIn}
+    val dir = Files.createTempDirectory("graft-aw-kinds-").toString
+    val wh = new AtomicWarehouse(spark, dir)
+    val s0 = StructType(kv.fields :+ StructField("pid", LongType, nullable = true))
+    def batch(ids: Seq[Long]) =
+      ids.map(i => (i, s"v$i", 1L)).toDF("id", "v", "pid").coalesce(1)
+    wh.append("p", Seq(1L, 2L).toDF("pid"))
+    wh.setChangeFeed("t", on = true)
+    wh.setBloomIndex("t", Seq("v"))
+    wh.setClusterBy("t", Seq("id"))
+    wh.addConstraint("t", "id_nonneg", "id >= 0", s0)
+    wh.addForeignKey("t", "pid", "p", "pid", "t_p")
+    wh.addUniqueKey("t", "id", "t_id")
+    assert(wh.appendOnce("t", "app", 0L, batch(0L until 5000L)))
+    wh.append("t", batch(5000L until 5010L))
+    wh.append("t", batch(5010L until 5020L))
+    wh.compactSmall("t", s0, minBytes = 4096) // remove lines + cdfnoop
+    // 4500 ordinals go to a sidecar; one ordinal of the compacted file inline
+    wh.deleteWhereDv("t", s0, Seq(ColIn("id", 0L until 4500L)))
+    wh.deleteWhereDv("t", s0, Seq(ColEq("id", 5005L)))
+    wh.purgeChanges("t", wh.versions().last)
+    wh.renameColumn("t", "v", "val")
+    val kinds = Files.list(java.nio.file.Paths.get(dir, "_txlog")).toArray.toSeq
+      .flatMap(p => Files.readAllLines(p.asInstanceOf[java.nio.file.Path]).toArray.toSeq)
+      .map(_.toString.split("\t")(0)).toSet
+    assert(Set("ts", "add", "remove", "schema", "stats", "dv", "bloom", "bloomcols",
+      "cluster", "colmap", "constraint", "fk", "unique", "changefeed", "cdffloor",
+      "txn", "cdfnoop").subsetOf(kinds), s"kinds written: $kinds")
+    assert(wh.deletionVectors("t").values.map(_.size).toSeq.sorted == Seq(1, 4500))
+
+    val s1 = StructType(Seq(s0(0), s0(1).copy(name = "val"), s0(2)))
+    def answers(w: AtomicWarehouse): Seq[Any] = Seq(
+      w.read("t", s1).collect().map(_.toString).sorted.toSeq,
+      w.currentSchema("t"), w.deletionVectors("t"), w.fileStats("t"),
+      w.visibleDataFiles("t"), w.visibleDataFiles("t/_bloom").sorted,
+      w.visibleDataFiles("t/_dv"), w.visibleDataFiles("t/_changes").sorted,
+      w.clusterBy("t"), w.bloomIndex("t"), w.constraintsOf("t"),
+      w.foreignKeysOf("t"), w.uniquesOf("t"), w.changeFeedEnabled("t"),
+      w.changeFeedFloor("t"), w.lastCommittedBatch("t", "app"),
+      w.describe("t").copy(headVersion = 0),
+      w.planFiles("t", Seq(ColEq("val", "v4700"))), w.catalogTables())
+    val before = answers(wh)
+    wh.vacuum(olderThanMs = 0L)
+    assert(answers(wh) == before, "vacuum's fold changed an answer")
+    // a fresh instance folds the snapshot from disk alone
+    assert(answers(new AtomicWarehouse(spark, dir)) == before,
+      "the snapshot on disk folds to a different state")
+    assert(wh.commitHistory(None).map(_._2) == Seq(true), "the log was not folded")
+  }
+
   test("restore: metadata-only rollback, undo, genesis, CDC refusal, vacuumed target refuses") {
     val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-aw-rst-").toString)
     wh.append("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v")) // v1

@@ -188,4 +188,39 @@ class DedupStreamSpec extends SparkSpec {
       }
     }
   }
+
+  test("a stream resumed over a legacy 3-column band index keeps its layout and finds planted near-dups") {
+    // 60 documents of 80 words each from a 400-word vocabulary (seeded)
+    val rnd = new scala.util.Random(42)
+    val docs = (1L to 60L).map(i =>
+      (i, Seq.fill(80)(s"w${rnd.nextInt(400)}").mkString(" "))).toDF("doc_id", "text")
+    val wh = new AtomicWarehouse(spark,
+      Files.createTempDirectory("graft-dstream-legacy-").toString)
+    def stream() = new DedupStream(wh, minJaccard = 0.35, minSigMatchesOverride = 4)
+    // what a build from before carried signatures persisted: the signature
+    // index, the corpus, and band rows of (doc_id, band, key) only
+    val legacy = stream()
+    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 5, 8)
+    wh.append(legacy.indexTable, sigs)
+    wh.append(legacy.bandTable, Dedup.bandKeys(sigs, "doc_id", 8, 2))
+    wh.append(legacy.corpusTable, docs)
+    def bandCols = wh.currentSchema(legacy.bandTable).get.fieldNames.toSeq
+    assert(bandCols == Seq("doc_id", "band", "key"))
+    val corpus = docs.as[(Long, String)].collect()
+    def found(ds: DedupStream, a: Long, b: Long): Boolean =
+      ds.pairs().collect().exists(r => r.getLong(0) == a && r.getLong(1) == b)
+    // resume, and plant a one-word edit of a corpus document
+    val ds = stream()
+    val (id0, text0) = corpus(7)
+    ds.processBatch(Seq((100001L, text0 + " again")).toDF("doc_id", "text"))
+    assert(found(ds, id0, 100001L), s"the planted near-dup of doc $id0 was missed")
+    assert(bandCols == Seq("doc_id", "band", "key"), "the batch bands changed the layout")
+    // compaction keeps the layout too (no null-filled signature columns)
+    ds.compactAll()
+    assert(bandCols == Seq("doc_id", "band", "key"), "compaction changed the layout")
+    // a restarted stream decides again, from the compacted table's schema
+    val (id1, text1) = corpus(21)
+    stream().processBatch(Seq((100002L, text1 + " again")).toDF("doc_id", "text"))
+    assert(found(ds, id1, 100002L), s"after compaction the near-dup of doc $id1 was missed")
+  }
 }

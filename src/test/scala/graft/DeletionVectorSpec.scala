@@ -183,6 +183,50 @@ class DeletionVectorSpec extends SparkSpec {
     assert(ids(wh) == (0L until 30L).toSet -- Seq(3L, 13L, 23L))
   }
 
+  test("a restore across a DV delete survives log folds: vacuum and the auto-fold keep rows and DVs") {
+    // rows 1–3, DV-delete id 2, restore to the pre-delete version: the
+    // restore's truncate clears the DV, and every later fold must agree
+    def rewound(wh: AtomicWarehouse): Unit = {
+      wh.append("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1))
+      val v1 = wh.versions().last
+      wh.deleteWhereDv("t", kv, Seq(ColEq("id", 2L)))
+      wh.restore("t", v1)
+      assert(ids(wh) == Set(1L, 2L, 3L) && wh.deletionVectors("t").isEmpty)
+    }
+    val wh = newWh()
+    rewound(wh)
+    wh.vacuum()
+    assert(ids(wh) == Set(1L, 2L, 3L), "vacuum's fold resurrected the cleared DV")
+    assert(wh.deletionVectors("t").isEmpty)
+    // the auto-fold runs the same fold: at logFoldEvery = 2 the next commit
+    // after the restore folds the 4-manifest tail into a snapshot
+    val wh2 = new AtomicWarehouse(spark,
+      Files.createTempDirectory("graft-dv-fold-").toString, logFoldEvery = 2)
+    rewound(wh2)
+    wh2.append("u", Seq((9L, "z")).toDF("id", "v"))
+    assert(wh2.commitHistory(None).exists(_._2), "the auto-fold never ran")
+    assert(ids(wh2) == Set(1L, 2L, 3L), "the auto-fold resurrected the cleared DV")
+    assert(wh2.deletionVectors("t").isEmpty)
+  }
+
+  test("restore brings back the era's DV sidecar; vacuum keeps it readable") {
+    val wh = newWh()
+    wh.append("t", (0L until 5000L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
+    // 4500 ordinals: past the inline threshold, so the DV is a t/_dv sidecar
+    wh.deleteWhereDv("t", kv, Seq(graft.sources.ColIn("id", 0L until 4500L)))
+    val withDv = wh.versions().last
+    // compaction folds the DV into a new file and releases the sidecar
+    wh.compactDv("t", kv, minDeadFraction = 0.1)
+    assert(wh.deletionVectors("t").isEmpty)
+    wh.restore("t", withDv)
+    assert(ids(wh) == (4500L until 5000L).toSet)
+    wh.vacuum(olderThanMs = 0L)
+    // a fresh instance: no in-memory copy of the sidecar's ordinals
+    val reopened = new AtomicWarehouse(spark, wh.root)
+    assert(ids(reopened) == (4500L until 5000L).toSet)
+    assert(reopened.deletionVectors("t").values.map(_.size).sum == 4500)
+  }
+
   test("metadata count subtracts tombstones; statsMinMax routes DV files to the read path") {
     val wh = newWh()
     banded(wh)
