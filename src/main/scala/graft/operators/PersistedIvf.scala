@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Transforms
-import graft.sources.{AtomicWarehouse, Warehouse}
+import graft.sources.{AtomicWarehouse, ReplayGuard, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
@@ -47,10 +47,15 @@ class PersistedIvf(private[graft] val wh: AtomicWarehouse, probeCellLimit: Int =
   val centroidsTable = "ann/Centroids"
   val assignTable = "ann/CellAssignments"
   val statsTable = "ann/AssignStats"
-  val ingestTable = "ann/IngestLedger"
   val pqCodebookTable = "ann/PqCodebook"
   val pqMetaTable = "ann/PqMeta"
-  val retractTable = "ann/RetractLedger"
+
+  /** The stream admission guard ([[addVectorsLedgered]]), keyed on the
+    * assignment table: [[build]] and [[retrain]] replace it and keep the
+    * high-water.
+    */
+  private lazy val streamGuard =
+    new ReplayGuard(wh, assignTable, "ivf-stream", legacyDir = Some("ann"))
 
   val centroidSchema: StructType = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),
@@ -87,8 +92,6 @@ class PersistedIvf(private[graft] val wh: AtomicWarehouse, probeCellLimit: Int =
     StructField("kind", StringType, nullable = false),
     StructField("n", LongType, nullable = false),
     StructField("mean_cos", DoubleType, nullable = true)))
-  val ingestSchema: StructType = StructType(Seq(
-    StructField("batch_id", LongType, nullable = false)))
 
   /** Assignment keeping the winning cosine (the drift statistic's input).
     * Same argmax as [[Similarity.assignCells]]: max_by over
@@ -285,25 +288,27 @@ class PersistedIvf(private[graft] val wh: AtomicWarehouse, probeCellLimit: Int =
     * untouched. Fails fast when the index was never built.
     */
   def addVectors(fresh: DataFrame, idCol: String, vecCol: String): Unit =
-    commit(None, Some(normalized(fresh, idCol, vecCol)), batchId = None)
+    commit(None, Some(normalized(fresh, idCol, vecCol)), _ => ())
 
-  /** [[addVectors]] plus a `(batch_id)` ingest-ledger row written in the SAME
-    * atomic section — the streaming-replay guard ([[graft.streaming.IvfStream]]):
-    * a checkpoint retry of an already-committed micro-batch sees its id in the
-    * ledger and no-ops instead of double-appending assignment rows (which would
-    * duplicate candidates into every later probe); a crash mid-admit commits
-    * none of it (exactly-once).
+  /** [[addVectors]] for stream batches ([[graft.streaming.IvfStream]]): the
+    * batch id is staged as the stream's `txn` high-water in the SAME commit
+    * as the assignments, so a checkpoint retry of an already-committed
+    * micro-batch no-ops instead of double-appending assignment rows (which
+    * would duplicate candidates into every later probe), and a crash
+    * mid-admit commits none of it (exactly-once).
     */
   def addVectorsLedgered(fresh: DataFrame, idCol: String, vecCol: String,
       batchId: Long): Unit =
-    if (!ingested(batchId)) commit(None, Some(normalized(fresh, idCol, vecCol)), Some(batchId))
+    if (!ingested(batchId))
+      commit(None, Some(normalized(fresh, idCol, vecCol)), streamGuard.mark(_, batchId))
 
-  /** True when `batchId` was already admitted (a checkpoint replay). */
-  def ingested(batchId: Long): Boolean =
-    wh.exists(ingestTable) && !wh.read(ingestTable, ingestSchema)
-      .filter(col("batch_id") === batchId).isEmpty
+  /** True when stream batch `batchId` was already admitted (a checkpoint
+    * replay) — a high-water lookup, no Spark job.
+    */
+  def ingested(batchId: Long): Boolean = streamGuard.covers(batchId)
 
-  def ingestLedger(): DataFrame = wh.read(ingestTable, ingestSchema)
+  /** The last stream batch id admitted through [[addVectorsLedgered]]. */
+  def lastIngested: Option[Long] = streamGuard.last
 
   /** GDPR-style retraction: remove `ids`' cell assignments WITHOUT
     * rewriting the cell-sorted files — ids scatter across every cell, so a
@@ -318,57 +323,43 @@ class PersistedIvf(private[graft] val wh: AtomicWarehouse, probeCellLimit: Int =
     * keep their training history — [[drifted]]/[[retrain]] remain the
     * recalibration path. Returns tombstoned assignment rows.
     */
-  def retractVectors(ids: Seq[Long]): Long = retract(ids, batchId = None)
-
-  private def retract(ids: Seq[Long], batchId: Option[Long]): Long = {
+  def retractVectors(ids: Seq[Long]): Long = {
     require(ids.nonEmpty, "retractVectors with no ids")
-    commit(Some(ids), None, batchId)
+    commit(Some(ids), None, _ => ())
   }
-
-  /** [[retractVectors]] plus a `(batch_id)` retraction-ledger row in the
-    * SAME commit — the replay guard a change-feed maintenance driver needs
-    * (the [[graft.streaming.FtsSync]] pattern): a replayed window sees its
-    * batch id and no-ops. Ledger separate from the ingest ledger (different
-    * id streams).
-    */
-  def retractVectorsLedgered(ids: Seq[Long], batchId: Long): Long =
-    if (retracted(batchId)) 0L else retract(ids, Some(batchId))
-
-  /** True when `batchId` was already retracted (a replayed window). */
-  def retracted(batchId: Long): Boolean =
-    wh.exists(retractTable) && !wh.read(retractTable, ingestSchema)
-      .filter(col("batch_id") === batchId).isEmpty
 
   /** Apply a run of change-feed commits — the [[graft.streaming.VectorSync]]
     * hook — as ONE atomic index commit PER corpus version, ascending: the
     * version's tombstones and `retract` stats row, its fresh assignments and
-    * `batch` stats row, and a ledger row per present half publish together,
-    * so an UPDATE's re-embedded vector replaces its predecessor atomically
-    * and the `batch` rows [[drifted]] reads stay one per corpus commit.
-    * Caller contract ([[graft.streaming.ChangeFeedSync]]): no listed half is
-    * already ledgered; an empty retraction id set ledgers its version
-    * without tombstoning anything.
+    * `batch` stats row, and `mark(v)` — the sync's high-water through that
+    * version — publish together, so an UPDATE's re-embedded vector replaces
+    * its predecessor atomically and the `batch` rows [[drifted]] reads stay
+    * one per corpus commit. Caller contract
+    * ([[graft.streaming.ChangeFeedSync]]): no listed half is already
+    * applied; an empty retraction id set marks its version without
+    * tombstoning anything.
     */
-  def applyWindowLedgered(retracts: Seq[(Long, Seq[Long])],
-      admits: Seq[(Long, DataFrame)], idCol: String, vecCol: String): Unit = {
+  def applyWindow(retracts: Seq[(Long, Seq[Long])],
+      admits: Seq[(Long, DataFrame)], idCol: String, vecCol: String,
+      mark: Long => Warehouse => Unit): Unit = {
     val outs = retracts.toMap
     val ins = admits.toMap
     (outs.keySet ++ ins.keySet).toSeq.sorted.foreach { v =>
-      commit(outs.get(v), ins.get(v).map(normalized(_, idCol, vecCol)), Some(v))
+      commit(outs.get(v), ins.get(v).map(normalized(_, idCol, vecCol)), mark(v))
     }
   }
 
   /** ONE index commit of a retraction and/or an admission: `out`'s
     * merge-on-read tombstones with a `retract` stats row (negative n), the
     * normalized `fresh` batch assigned against the persisted centroids with
-    * its `batch` stats row, and — under `batchId` — a ledger row per present
-    * half. The scalar aggregates (batch n, mean cosine, next seq) are ONE
+    * its `batch` stats row, and `mark`'s replay high-water. The scalar
+    * aggregates (batch n, mean cosine, next seq) are ONE
     * fused driver job and the staged writes run concurrently on a
     * transactional view; an admission-only commit also runs on the base
-    * warehouse, its ledger row last. Returns tombstoned assignment rows.
+    * warehouse. Returns tombstoned assignment rows.
     */
   private def commit(out: Option[Seq[Long]], fresh: Option[DataFrame],
-      batchId: Option[Long]): Long = {
+      mark: Warehouse => Unit): Long = {
     if (fresh.isDefined)
       require(wh.exists(centroidsTable), s"$centroidsTable absent — build() first")
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
@@ -390,25 +381,22 @@ class PersistedIvf(private[graft] val wh: AtomicWarehouse, probeCellLimit: Int =
             r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
           (retractRow ++ batchRow).reduceOption(_ union _)
         }
-      def ledgerRow(w: Warehouse, table: String): Option[() => Unit] = batchId.map { b =>
-        () => w.append(table, wh.spark.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
+      def rest(w: Warehouse): Unit = {
+        mark(w)
+        Warehouse.settleAll(wh.spark, Seq(
+          assigned.map(a => () => w.append(assignTable,
+            withCode(withPq(a.drop("cos6"), currentCb(), pqResidual(), centroids()))
+              .sortWithinPartitions("cell"))),
+          statsRows.map(s => () => w.append(statsTable, s))
+        ).flatten)
       }
-      def rest(w: Warehouse): Unit = Warehouse.settleAll(wh.spark, Seq(
-        assigned.map(a => () => w.append(assignTable,
-          withCode(withPq(a.drop("cos6"), currentCb(), pqResidual(), centroids()))
-            .sortWithinPartitions("cell"))),
-        statsRows.map(s => () => w.append(statsTable, s)),
-        out.flatMap(_ => ledgerRow(w, retractTable)),
-        fresh.flatMap(_ => ledgerRow(w, ingestTable))
-      ).flatten)
       val deleted =
         if (ids.isEmpty) 0L
         else wh.deleteWhereDv(assignTable, assignSchema,
           Seq(graft.sources.ColIn("id", ids)), alsoInTx = rest).deleted
       // ids that match no live assignment tombstone nothing (deleteWhereDv
       // no-ops WITHOUT committing), but the stats, the admission and the
-      // ledger rows must still land — atomically
+      // replay mark must still land — atomically
       if (deleted == 0L) wh.atomically(rest)
       deleted
     } finally assigned.foreach(_.unpersist(false))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{AtomicWarehouse, Warehouse}
+import graft.sources.{AtomicWarehouse, ReplayGuard, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -42,8 +42,12 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
 
   val postingsTable = "fts/Postings"
   val statsTable = "fts/CorpusStats"
-  val ingestTable = "fts/IngestLedger"
-  val retractTable = "fts/RetractLedger"
+
+  /** The stream admission guard ([[addDocsLedgered]]), keyed on the
+    * postings table: [[build]] replaces it and keeps the high-water.
+    */
+  private lazy val streamGuard =
+    new ReplayGuard(wh, postingsTable, "fts-stream", legacyDir = Some("fts"))
 
   val postingsSchema: StructType = StructType(Seq(
     StructField("t", StringType, nullable = true),
@@ -71,8 +75,6 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
     // where a footer sniff is not (a legacy index that keeps admitting new
     // position-bearing batches still has position-less rows on disk)
     StructField("haspos", org.apache.spark.sql.types.BooleanType, nullable = true)))
-  val ingestSchema: StructType = StructType(Seq(
-    StructField("batch_id", LongType, nullable = false)))
 
   /** One-pass tokenization of a doc batch: `(id, __ts)`. Both the corpus
     * stats (N, Σdl — dl IS `size(tokens)`, `tokenCountWs`'s definition)
@@ -145,21 +147,22 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
     * through [[addDocsLedgered]] for replay safety).
     */
   def addDocs(fresh: DataFrame, idCol: String, textCol: String): Unit =
-    admit(fresh, idCol, textCol, batchId = None)
+    admit(fresh, idCol, textCol, _ => ())
 
-  /** [[addDocs]] plus a `(batch_id)` ingest-ledger row written in the SAME
-    * atomic section: a checkpoint retry of an already-committed micro-batch
-    * sees its id and no-ops instead of double-counting every document;
-    * a crash mid-admit commits none of it (exactly-once).
+  /** [[addDocs]] for stream batches: the batch id is staged as the stream's
+    * `txn` high-water in the SAME commit as the postings and stats, so a
+    * checkpoint retry of an already-committed micro-batch no-ops instead of
+    * double-counting every document, and a crash mid-admit commits none of
+    * it (exactly-once). Batch ids ascend (Spark's checkpoint contract).
     */
   def addDocsLedgered(fresh: DataFrame, idCol: String, textCol: String,
       batchId: Long): Unit =
-    if (!ingested(batchId)) admit(fresh, idCol, textCol, Some(batchId))
+    if (!ingested(batchId)) admit(fresh, idCol, textCol, streamGuard.mark(_, batchId))
 
-  /** True when `batchId` was already admitted (a checkpoint replay). */
-  def ingested(batchId: Long): Boolean =
-    wh.exists(ingestTable) && !wh.read(ingestTable, ingestSchema)
-      .filter(col("batch_id") === batchId).isEmpty
+  /** True when stream batch `batchId` was already admitted (a checkpoint
+    * replay) — a high-water lookup, no Spark job.
+    */
+  def ingested(batchId: Long): Boolean = streamGuard.covers(batchId)
 
   /** `max(seq)` over the stats table as a one-row aggregate FRAME — cross-
     * joined into the other per-commit one-row aggregates so the next
@@ -175,7 +178,7 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
     if (r.isNullAt(i)) 1L else r.getLong(i) + 1L
 
   private def admit(fresh: DataFrame, idCol: String, textCol: String,
-      batchId: Option[Long]): Unit = {
+      mark: Warehouse => Unit): Unit = {
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
     val toks = tokensOf(fresh, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -189,14 +192,10 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
       val sumdl = if (r.isNullAt(1)) 0L else r.getLong(1)
       val seq = nextSeq(r, 2)
       wh.atomically { w =>
-        val writes = Seq(
+        mark(w)
+        Warehouse.settleAll(wh.spark, Seq(
           () => w.append(postingsTable, postingsOfToks(toks).sortWithinPartitions("t")),
-          () => w.append(statsTable, statsRow(seq, n, sumdl))) ++
-          batchId.map { b =>
-            () => w.append(ingestTable, wh.spark.createDataFrame(
-              java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
-          }.toSeq
-        Warehouse.settleAll(wh.spark, writes)
+          () => w.append(statsTable, statsRow(seq, n, sumdl))))
       }
     } finally toks.unpersist(false)
   }
@@ -298,28 +297,25 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
     * [[graft.sources.AtomicWarehouse.deleteWhereDv]]); [[compact]] folds the tombstones
     * into clean files when the dead fraction warrants it.
     */
-  def retractDocs(ids: Seq[Long]): Long = retract(ids, batchId = None)
-
-  /** [[retractDocs]] plus a `(batch_id)` retraction-ledger row in the SAME
-    * commit as the tombstones and the negative stats row — the replay
-    * guard [[addDocsLedgered]] gives admits: a retraction is NOT naturally
-    * idempotent (replaying the stats decrement corrupts N), so a
-    * maintenance driver replaying a change window after a crash must see
-    * its batch id and no-op. The ledger is separate from the ingest ledger
-    * (their id spaces are different streams).
-    */
-  def retractDocsLedgered(ids: Seq[Long], batchId: Long): Long =
-    if (retracted(batchId)) 0L else retract(ids, Some(batchId))
-
-  /** True when `batchId` was already retracted (a replayed window). */
-  def retracted(batchId: Long): Boolean =
-    wh.exists(retractTable) && !wh.read(retractTable, ingestSchema)
-      .filter(col("batch_id") === batchId).isEmpty
+  def retractDocs(ids: Seq[Long]): Long = {
+    require(ids.nonEmpty, "retractDocs with no ids")
+    require(wh.exists(statsTable), s"$statsTable absent — build() first")
+    val distinct = ids.distinct
+    // ONE fused driver job: Σdl of the retractees + next sequence number
+    val r0 = dlGoneAggFrame(distinct).crossJoin(seqAggFrame).head()
+    val neg = statsRow(nextSeq(r0, 1), -distinct.size.toLong, -r0.getLong(0))
+    val r = wh.deleteWhereDv(postingsTable, postingsSchema,
+      Seq(graft.sources.ColIn("id", distinct)), alsoInTx = _.append(statsTable, neg))
+    // a purge of only token-less docs tombstones nothing — the stats
+    // correction (their count in N) must still land
+    if (r.deleted == 0L) wh.append(statsTable, neg)
+    r.deleted
+  }
 
   /** Apply a change window (or its run between two over-cap commits) as
     * ONE atomic index commit — the [[graft.streaming.FtsSync]] hook. The
-    * per-commit fixed latency (ledger probes, scalar aggregates, a manifest
-    * commit fsync each) dominated small-churn windows; here K corpus
+    * per-commit fixed latency (scalar aggregates, a manifest commit fsync
+    * each) dominated small-churn windows; here K corpus
     * commits cost one index commit, and an UPDATE (retract + re-admit of the same ids) or an
     * upserting MERGE lands atomically — no crash window where the old text
     * is gone and the new not yet searchable.
@@ -341,21 +337,23 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
     *     negative row (−|R|, −Σdl_pre) + one positive row (+|A|, +Σdl_final)
     *     the fused commit writes. Individual stats ROWS differ; their sums
     *     (N, Σdl — the only consumers) are bit-equal, integer addition.
-    *   - LEDGERS: the same per-version rows land, all-or-nothing; replay of
-    *     a crashed window sees none applied and replays whole. A version
-    *     whose retraction was ledgered earlier arrives with only its
-    *     admission — the pre-window state already holds the applied half.
+    *   - REPLAY MARK: `mark(versions.max)` stages the sync's high-water
+    *     covering every listed half in the same commit, all-or-nothing; a
+    *     crashed window's replay finds none of it applied and replays
+    *     whole. A version whose retraction landed earlier arrives with only
+    *     its admission — the pre-window state already holds that half.
     *
     * A one-version window (a seed sync, a single UPDATE, a giant retraction's
     * chunk) skips the netting: its retractions all precede its admissions,
     * so R is every retracted id and A every admitted row, and no aggregation
     * shuffles the admitted text. Caller contract
     * ([[graft.streaming.ChangeFeedSync]]): no listed half is already
-    * ledgered, and `retracts` holds distinct, census-capped id sets (an
-    * empty set ledgers its version without tombstoning anything).
+    * applied, and `retracts` holds distinct, census-capped id sets (an
+    * empty set marks its version without tombstoning anything).
     */
-  def applyWindowLedgered(retracts: Seq[(Long, Seq[Long])],
-      admits: Seq[(Long, DataFrame)], idCol: String, textCol: String): Unit = {
+  def applyWindow(retracts: Seq[(Long, Seq[Long])],
+      admits: Seq[(Long, DataFrame)], idCol: String, textCol: String,
+      mark: Long => Warehouse => Unit): Unit = {
     val versions = (retracts.map(_._1) ++ admits.map(_._1)).distinct
     if (versions.isEmpty) return
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
@@ -427,21 +425,17 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
             r0.getLong(0), if (r0.isNullAt(1)) 0L else r0.getLong(1)))
           (neg ++ pos).reduceOption(_ union _)
         }
-      def ledgerDf(vs: Seq[Long]): DataFrame = wh.spark.createDataFrame(
-        java.util.Arrays.asList(vs.sorted.map(v =>
-          org.apache.spark.sql.Row(Long.box(v))): _*), ingestSchema)
-      def rest(w: Warehouse): Unit = Warehouse.settleAll(wh.spark, Seq(
-        statsRows.map(s => () => w.append(statsTable, s)),
-        toks.map(t =>
-          () => w.append(postingsTable, postingsOfToks(t).sortWithinPartitions("t"))),
-        Some(retracts.map(_._1)).filter(_.nonEmpty)
-          .map(vs => () => w.append(retractTable, ledgerDf(vs))),
-        Some(admits.map(_._1)).filter(_.nonEmpty)
-          .map(vs => () => w.append(ingestTable, ledgerDf(vs)))
-      ).flatten)
+      def rest(w: Warehouse): Unit = {
+        mark(versions.max)(w)
+        Warehouse.settleAll(wh.spark, Seq(
+          statsRows.map(s => () => w.append(statsTable, s)),
+          toks.map(t =>
+            () => w.append(postingsTable, postingsOfToks(t).sortWithinPartitions("t")))
+        ).flatten)
+      }
       // token-less retractees tombstone nothing (deleteWhereDv no-ops
       // WITHOUT committing), and an R-less window never calls it — the stats
-      // corrections, admissions and ledger rows must still land, atomically
+      // corrections, admissions and the replay mark must still land, atomically
       val deleted =
         if (R.isEmpty) 0L
         else wh.deleteWhereDv(postingsTable, postingsSchema,
@@ -457,31 +451,6 @@ class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: 
     postings().filter(col("id").isInCollection(distinct))
       .groupBy(col("id")).agg(any_value(col("dl")).as("dl"))
       .agg(coalesce(sum(col("dl")), lit(0L)).as("__dlgone"))
-
-  private def retract(ids: Seq[Long], batchId: Option[Long]): Long = {
-    require(ids.nonEmpty, "retractDocs with no ids")
-    require(wh.exists(statsTable), s"$statsTable absent — build() first")
-    val distinct = ids.distinct
-    // ONE fused driver job: Σdl of the retractees + next sequence number
-    val r0 = dlGoneAggFrame(distinct).crossJoin(seqAggFrame).head()
-    val dlGone = r0.getLong(0)
-    val seq = nextSeq(r0, 1)
-    val neg = statsRow(seq, -distinct.size.toLong, -dlGone)
-    def ledgerRow(w: Warehouse): Unit = batchId.foreach { b =>
-      w.append(retractTable, wh.spark.createDataFrame(
-        java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
-    }
-    val r = wh.deleteWhereDv(postingsTable, postingsSchema,
-      Seq(graft.sources.ColIn("id", distinct)),
-      alsoInTx = w => { w.append(statsTable, neg); ledgerRow(w) })
-    // a purge of only token-less docs tombstones nothing — the stats
-    // correction (their count in N) and the ledger row must still land,
-    // still atomically
-    if (r.deleted == 0L) wh.atomically { w =>
-      w.append(statsTable, neg); ledgerRow(w)
-    }
-    r.deleted
-  }
 
   /** Small-file maintenance: every [[addDocs]] append lands ≥1 file, and the
     * term pruning rides on tight per-row-group `t` min/max stats — the

@@ -598,7 +598,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
         Staged(table, truncate, dirOpt, partitioned, json, removes, extraLines, pins))
     }
 
-    /** Stage raw manifest lines (deletion-vector commits, stream ledger
+    /** Stage raw manifest lines (deletion-vector commits, stream high-water
       * `txn` lines, `cdfnoop` markers) under the given pins.
       */
     private[sources] def manifestLines(table: String, lines: Seq[Action],
@@ -827,6 +827,14 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     override def exists(table: String): Boolean =
       tx.synchronized(tx.entries.exists(e => e.table == table && !e.truncate)) ||
         AtomicWarehouse.this.exists(table)
+
+    override def lastCommittedBatch(table: String, appId: String): Option[Long] =
+      AtomicWarehouse.this.lastCommittedBatch(table, appId)
+
+    override def markBatch(table: String, appId: String, batchId: Long): Unit =
+      manifestLines(table, Seq(txnLine(table, appId, batchId).getOrElse(
+        throw new IllegalStateException(s"batch $batchId of '$appId' on $table " +
+          "is already committed — one writer per (table, appId)"))))
 
     // committed state, like the outer warehouse: staged writes have no
     // manifest entry (and hence no size or recorded schema) before commit
@@ -1357,8 +1365,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * }
     * }}}
     *
-    * The (appId, batchId) high-water rides the SAME manifest commit as the
-    * data files, so a batch either lands with its ledger entry or neither
+    * The (appId, batchId) high-water ([[markBatch]]) rides the SAME manifest
+    * commit as the data files, so a batch either lands with its mark or neither
     * (a crash between them cannot exist) and a REPLAYED batch — Structured
     * Streaming re-runs the last uncommitted batch after every recovery —
     * is a metadata-only no-op (returns false). Batch ids must ascend per
@@ -1367,30 +1375,30 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * replaying the same id is the same check-then-commit caveat as UNIQUE
     * keys, and one active query per checkpoint is Spark's own invariant.
     * Invariants (CHECK/FK/UNIQUE) and the change feed bind the append
-    * exactly as [[Warehouse.append]]. `delete(table)` clears the ledger
+    * exactly as [[Warehouse.append]]. `delete(table)` clears the high-water
     * (a re-created table must not skip a new stream's early batches).
     */
   def appendOnce(table: String, appId: String, batchId: Long,
       df: DataFrame): Boolean =
-    txnLine(table, appId, batchId).exists { line =>
-      transact { tv => tv.append(table, df); tv.manifestLines(table, Seq(line)) }
+    txnLine(table, appId, batchId).isDefined && {
+      transact { tv => tv.append(table, df); tv.markBatch(table, appId, batchId) }
       true
     }
 
-  /** The stream ledger line committing (appId, batchId) for `table`, or
-    * None when the high-water already covers `batchId` (a replay).
+  /** The `txn` action committing (appId, batchId) for `table`, or None when
+    * the high-water already covers `batchId` (a replay).
     */
   private def txnLine(table: String, appId: String, batchId: Long): Option[Action] = {
     require(appId.nonEmpty && !appId.exists(c => c == '\t' || c == '\n'),
       s"appId '$appId' is empty or contains TSV control characters")
     require(batchId >= 0L, s"batchId must be non-negative, got $batchId")
-    if (foldedState().txns.get((table, appId)).exists(_ >= batchId)) None
+    if (lastCommittedBatch(table, appId).exists(_ >= batchId)) None
     else Some(Txn(table, appId, Some(batchId)))
   }
 
   /** [[appendOnce]] for files ALREADY WRITTEN by streaming-sink tasks (the
-    * V2 `writeStream.table` path): same (appId, batchId) ledger riding the
-    * same manifest commit, but the data lands by RENAME from `srcDir` —
+    * V2 `writeStream.table` path): same (appId, batchId) high-water riding
+    * the same manifest commit, but the data lands by RENAME from `srcDir` —
     * written once, by executors — instead of a driver-side DataFrame
     * re-serialization. Only the task-committed `leaves` move (uncommitted
     * attempts' orphans die with the dir); a replayed batch is detected
@@ -1400,14 +1408,14 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     */
   def appendOnceStaged(table: String, appId: String, batchId: Long,
       srcDir: String, leaves: Seq[String], schema: StructType): Boolean = {
-    val line = txnLine(table, appId, batchId)
+    val fresh = txnLine(table, appId, batchId).isDefined
     require(leaves.forall(l => !l.contains("/") && !l.startsWith(".")),
       "staged stream leaves must be flat, non-hidden file names")
     val src = new Path(srcDir)
-    try line.exists { l =>
+    try fresh && {
       transact { tv =>
         if (leaves.nonEmpty) tv.appendStagedParquetDir(table, src, leaves, schema)
-        tv.manifestLines(table, Seq(l))
+        tv.markBatch(table, appId, batchId)
       }
       true
     } finally { // success: uncommitted-attempt orphans; replay or failure: the dir
@@ -1416,11 +1424,12 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
   }
 
-  /** The last batch id [[appendOnce]] committed for (table, appId) — what
-    * a monitoring loop asks to see how far a stream got; None before any.
-    */
-  def lastCommittedBatch(table: String, appId: String): Option[Long] =
+  override def lastCommittedBatch(table: String, appId: String): Option[Long] =
     foldedState().txns.get((table, appId))
+
+  /** [[Warehouse.markBatch]] alone: a metadata-only commit. */
+  override def markBatch(table: String, appId: String, batchId: Long): Unit =
+    transact(_.markBatch(table, appId, batchId))
 
   /** Restore `table` to its state as of commit `version`, as a NEW commit —
     * the RESTORE shape of the pointer-commit formats this rebuilds: the old
@@ -3481,7 +3490,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * change-feed slice when enabled) and all dv lines publish atomically,
     * pinned per table on file visibility and pre-read DV entries; any
     * racing commit aborts the whole batch, which replans. `alsoInTx` rows
-    * (derived-index stats corrections, ledgers) ride the same commit, and
+    * (derived-index stats corrections, replay marks) ride the same commit, and
     * run only when at least one target has matching rows.
     */
   def deleteWhereDvAll(targets: Seq[(String, StructType, Seq[FilePred])],
@@ -3525,7 +3534,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
             tv.manifestLines(p.table, p.lines, p.pin +: (if (i == 0) children else Nil))
             p.changeSlice.foreach(cs => tv.append(changesTable(p.table), cs))
           }
-          alsoInTx(tv) // caller rows (derived-index stats, ledgers) ride along
+          alsoInTx(tv) // caller rows (derived-index stats, replay marks) ride along
         }
       }
       planned.map(_.fold(identity, _.result))
@@ -3657,7 +3666,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * column; EXTRA source columns (a CDC op/sequence) are visible to the
     * clause conditions via the `s` alias and dropped from the output.
     * `alsoInTx` stages additional writes in the SAME commit as the rewrite
-    * (a streaming ingest-ledger row — the exactly-once seam); it does not
+    * (a stream's replay mark — the exactly-once seam); it does not
     * run when the merge publishes nothing (empty source). Same
     * conflict/retry/time-travel contract as [[deleteWhere]].
     */
@@ -3930,7 +3939,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
               sum(when(col(ctc) === "update_preimage", 1L).otherwise(0L)).as("u"),
               sum(when(col(ctc) === "delete", 1L).otherwise(0L)).as("d"),
               sum(when(col(ctc) === "insert", 1L).otherwise(0L)).as("i")))).toSeq ++
-          Seq(() => alsoInTx(tv))) // e.g. a stream's ingest-ledger row
+          Seq(() => alsoInTx(tv))) // e.g. a stream's replay mark
       }
       val (u, d, i) = eagerCounts.getOrElse {
         val m = obs.get.get

@@ -48,6 +48,20 @@ abstract class Warehouse(val spark: SparkSession, val root: String) {
 
   def delete(table: String): Unit
 
+  /** The last batch id committed for (table, appId) through [[markBatch]]
+    * — the replay high-water a stream checks before any work (a lookup in
+    * the folded manifest, no Spark job); None before any.
+    */
+  def lastCommittedBatch(table: String, appId: String): Option[Long]
+
+  /** Stage `batchId` as the (table, appId) high-water (the manifest `txn`
+    * action) in this write's commit, so a batch lands with its replay mark
+    * or not at all. Batch ids must ascend per (table, appId); a batch id the
+    * high-water already covers is refused. A `delete(table)` clears the
+    * high-water, a truncate or replace keeps it.
+    */
+  def markBatch(table: String, appId: String, batchId: Long): Unit
+
   /** Rewrite a table's accumulated small files into `targetFiles` — the
     * maintenance pass every append-heavy table needs (each micro-batch
     * append leaves one file per task; thousands of small files turn scan

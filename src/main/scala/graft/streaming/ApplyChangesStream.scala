@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.{AtomicWarehouse, ColEq, ColLt}
+import graft.sources.{AtomicWarehouse, ColEq, ColLt, ReplayGuard}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{coalesce, col, lit, not, row_number}
@@ -39,11 +39,13 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructFiel
   * never arrive again), via stats-pruned copy-on-write delete.
   *
   * ==Exactly once==
-  * The merge rewrite and a `(batch_id)` ingest-ledger row publish in the
-  * SAME manifest commit (`mergeInto(alsoInTx = ledger append)`): a
-  * checkpoint replay of a committed micro-batch sees its id and no-ops.
-  * The sequence guard makes the ledger a fast path rather than the safety
-  * argument — even a re-applied batch converges. Files per micro-batch are
+  * The merge rewrite and the batch id, staged as the target table's `txn`
+  * high-water ([[graft.sources.ReplayGuard]]), publish in the SAME manifest
+  * commit (`mergeInto(alsoInTx = mark)`): a checkpoint replay of a
+  * committed micro-batch finds its id covered and no-ops, also after the
+  * target was compacted (a truncate keeps the high-water). The sequence
+  * guard makes the mark a fast path rather than the safety argument —
+  * even a re-applied batch converges. Files per micro-batch are
   * UNCAPPED: the guard removes the in-order delivery contract that
   * previously serialized the feed on commit latency (one file per trigger),
   * so a backlog drains at source-listing speed, collapsed per batch.
@@ -73,30 +75,11 @@ class ApplyChangesStream(wh: AtomicWarehouse, table: String,
     StructField(seqCol, LongType, nullable = false),
     StructField(deletedCol, BooleanType, nullable = false)))
 
-  val ledgerTable = s"$table/_cdc/IngestLedger"
-  val ledgerSchema: StructType = StructType(Seq(
-    StructField("batch_id", LongType, nullable = false)))
+  private val guard =
+    new ReplayGuard(wh, table, "apply-changes", legacyDir = Some(s"$table/_cdc"))
 
-  // single-writer cursor (the ScdStream discipline, BASELINE.md r17): the
-  // ingest ledger is read ONCE per stream instance and the applied set
-  // advances in memory — the per-micro-batch ledger scan was a fixed
-  // driver job on every batch. A restart re-reads; only a COMMITTED batch
-  // is marked applied, so a failed-commit retry re-runs exactly as before.
-  @volatile private var applied: scala.collection.mutable.Set[Long] = null
-
-  def ingested(batchId: Long): Boolean = {
-    if (applied == null)
-      applied = if (wh.exists(ledgerTable))
-        scala.collection.mutable.Set(wh.read(ledgerTable, ledgerSchema)
-          .collect().map(_.getLong(0)).toSeq: _*)
-      else scala.collection.mutable.Set.empty[Long]
-    applied.contains(batchId)
-  }
-
-  private def ledgerRow(batchId: Long): DataFrame =
-    wh.spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(batchId))),
-      ledgerSchema)
+  /** True when `batchId` was already applied (a checkpoint replay). */
+  def ingested(batchId: Long): Boolean = guard.covers(batchId)
 
   /** Live rows, base columns — the consumer read (tombstones filtered).
     * Rows from a table that predates the CDC feed (bootstrap: an existing
@@ -146,14 +129,9 @@ class ApplyChangesStream(wh: AtomicWarehouse, table: String,
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long): Unit = {
     if (ingested(batchId)) return
-    if (batch.isEmpty) {
-      // file-source bookkeeping batch: ledger it, touch nothing
-      wh.atomically(_.append(ledgerTable, ledgerRow(batchId)))
-      applied += batchId
-      return
-    }
-    applyChanges(batch, alsoInTx = _.append(ledgerTable, ledgerRow(batchId)))
-    applied += batchId
+    // a file-source bookkeeping batch (empty) marks its id, touches nothing
+    if (batch.isEmpty) wh.atomically(guard.mark(_, batchId))
+    else applyChanges(batch, alsoInTx = guard.mark(_, batchId))
   }
 
   /** Watch `dir` for parquet change files. No per-trigger file cap and no

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.sources.AtomicWarehouse
+import graft.sources.{AtomicWarehouse, ReplayGuard, Warehouse}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, collect_set, count, lit, max, when}
+import org.apache.spark.sql.functions.{col, collect_set, count, max, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The GENERIC maintenance loop for a derived structure riding a corpus
@@ -13,14 +13,25 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * to ONE per-index hook, [[applyWindow]], and advance the cursor last. An
   * UPDATE is retract-then-admit of the same id inside one corpus commit.
   *
-  * Exactly-once rides the index's two replay LEDGERS, `(batch_id)` tables
-  * keyed by corpus COMMIT VERSION (stable across replays, where a window id
-  * would shift when a crash widens the next window): the hook writes a
-  * version's ledger rows in the same commit as its effect, and `sync()`
-  * probes both ledgers ONCE per window and drops every half already
-  * ledgered — a wound-back cursor replays the whole history and every
-  * applied commit no-ops, and a half-applied legacy commit (retraction
-  * ledgered, admission lost) finishes its missing half.
+  * Exactly-once rides ONE replay high-water per index: the `txn` mark of
+  * the cursor table ([[graft.sources.ReplayGuard]]), which the hook stages
+  * in the same commit as its effect ([[markThrough]]). The mark is a
+  * POSITION over every step the loop applies, in the order it applies
+  * them: corpus commit versions ascend (stable across replays, where a
+  * window id would shift when a crash widens the next window), and within
+  * a version a giant retraction's chunks come first in sorted-id order,
+  * then the retraction's completion, then the admission
+  * ([[ChangeFeedSync.position]]). `sync()` skips every step at or below the
+  * high-water — a wound-back cursor replays the whole history and every
+  * applied commit no-ops, and a half-applied commit (retraction landed,
+  * admission lost) finishes its missing half. The check is a manifest
+  * lookup, so the census stays one job.
+  *
+  * A root an older build wrote keeps two parquet ledgers of applied
+  * versions instead (retractions, admissions). They are read once per
+  * instance and converted to one position — refused with
+  * [[ChangeFeedSync.LegacyLedgerGap]] unless they hold a prefix of the
+  * window's step order — and the first hook commit drops them.
   *
   * A window with no corpus commit does NOT advance the cursor: the cursor
   * write itself commits, so a no-op sync would mint versions forever when
@@ -32,27 +43,32 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
     corpusSchema: StructType, idCol: String) {
+  import ChangeFeedSync._
 
-  /** Warehouse holding the maintenance cursor and the replay ledgers (the
-    * index's).
+  /** Warehouse holding the maintenance cursor and the replay high-water
+    * (the index's).
     */
-  protected def cursorWh: graft.sources.Warehouse
+  protected def cursorWh: Warehouse
 
-  /** Cursor table name — one per maintained structure. */
+  /** Cursor table name — one per maintained structure. The sync replaces
+    * it and never drops it, so it also keys the replay high-water.
+    */
   def cursorTable: String
 
-  /** The index's retraction and admission ledgers (`batch_id` rows). */
-  protected def retractLedger: String
-  protected def ingestLedger: String
+  /** Directory of the parquet replay ledgers an older build kept for this
+    * index, adopted once (class doc); None when there never were any.
+    */
+  protected def legacyLedgerDir: Option[String] = None
 
-  /** Apply a run of window commits to the index, ledgering every listed
-    * version in the same commit(s) as its effect: `retracts` are
-    * per-version distinct retraction id sets (an EMPTY set ledgers the
+  /** Apply a run of window commits to the index: `retracts` are
+    * per-version distinct retraction id sets (an EMPTY set marks the
     * version's retraction without tombstoning — the completion marker of a
-    * chunked giant retraction), `admits` per-version admission rows in
-    * corpus schema. Versions arrive ascending, none of their halves is
-    * already ledgered, and every listed retraction applies before the
-    * same version's admission.
+    * chunked giant retraction; a chunk arrives alone under a negative
+    * sub-id key), `admits` per-version admission rows in corpus schema.
+    * Keys arrive ascending, none of their halves is already applied, and
+    * every listed retraction applies before the same version's admission.
+    * Every commit the hook makes runs `markThrough(k)` for the largest key
+    * `k` it applies, so each listed half lands with its replay mark.
     */
   protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
       admits: Seq[(Long, DataFrame)]): Unit
@@ -67,8 +83,25 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
 
   private val cursorSchema = StructType(Seq(
     StructField("version", LongType, nullable = false)))
-  private val ledgerSchema = StructType(Seq(
-    StructField("batch_id", LongType, nullable = false)))
+
+  private lazy val guard = new ReplayGuard(cursorWh, cursorTable,
+    "change-feed-sync", legacyLedgerDir, retractions = true)
+
+  // the position each key of the run being applied marks (set before each
+  // applyWindow call; the loop is sequential)
+  private var runPositions = Map.empty[Long, Long]
+
+  /** Stage, inside the hook commit that applies window key `key` and every
+    * earlier listed key, the replay high-water through them.
+    */
+  protected final def markThrough(key: Long)(w: Warehouse): Unit =
+    guard.mark(w, runPositions(key))
+
+  /** True when the replay high-water has passed corpus commit `version`'s
+    * admission step — every half of that commit is applied.
+    */
+  private[graft] def synced(version: Long): Boolean =
+    guard.high.exists(_ >= position(version, Admitted))
 
   /** The corpus-log version the structure reflects (0 = never synced). */
   def cursor(): Int =
@@ -91,20 +124,31 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
     */
   @volatile private var emptyScan: Option[(Int, Int)] = None
 
-  /** The window's rows in both replay ledgers, as `(tag, batch_id, 0, 0)`
-    * rows shaped to ride the census job: corpus versions in `(from, head]`
-    * and every chunk sub-id of those versions (a contiguous negative range,
-    * [[ChangeFeedSync.chunkLedgerId]]). Both tables are batch-count sized.
+  /** The legacy ledgers as one replay position (None without any). The
+    * loop wrote them in step order, so every step of the window below
+    * their highest entry must be in them; steps of earlier versions are
+    * covered by the cursor.
     */
-  private def ledgerHits(from: Int, head: Int): Seq[DataFrame] = {
-    val b = col("batch_id")
-    val inWindow = b.between(from + 1L, head.toLong) ||
-      b.between(ChangeFeedSync.chunkLedgerId(head + 1L, 0) + 1L,
-        ChangeFeedSync.chunkLedgerId(from + 1L, 0))
-    Seq(retractLedger -> "r", ingestLedger -> "i").collect {
-      case (tbl, tag) if cursorWh.exists(tbl) =>
-        cursorWh.read(tbl, ledgerSchema).filter(inWindow)
-          .select(lit(tag), b, lit(0L), lit(0L))
+  private def legacyPosition(census: Seq[(Long, Long, Long)]): Option[Long] = {
+    val (outs, ins) = guard.legacy
+    val applied = outs.map { k =>
+      if (k < 0L) { val x = -k - 1L; position(x >> 20, (x & 0xFFFFFL).toInt) }
+      else position(k, Retracted)
+    } ++ ins.map(position(_, Admitted))
+    applied.maxOption.map { top =>
+      val steps = census.flatMap { case (v, nOut, nIn) =>
+        val chunks = applied.filter(p => p >> 21 == v && (p & StepMask) < Retracted)
+          .map(p => (p & StepMask).toInt).maxOption
+          .fold(Seq.empty[Long])(m => (0 to m).map(position(v, _)))
+        (if (nOut > 0L) chunks :+ position(v, Retracted) else Nil) ++
+          (if (nIn > 0L) Seq(position(v, Admitted)) else Nil)
+      }
+      val gaps = steps.filter(p => p < top && !applied(p))
+      if (gaps.nonEmpty) throw new LegacyLedgerGap(
+        s"the legacy replay ledgers of $cursorTable skip ${gaps.map(describe).mkString(", ")} " +
+          s"below their last entry (${describe(top)}); they are not a prefix " +
+          "of the change window — rebuild the index and reseed its cursor")
+      top
     }
   }
 
@@ -112,17 +156,20 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
     * through the driver in SORTED, cap-bounded chunks (`toLocalIterator`
     * holds one partition at a time — peak driver memory is a chunk, never
     * the commit's whole id set). Each chunk applies through the hook under
-    * its own deterministic sub-id ([[ChangeFeedSync.chunkLedgerId]]), so a
-    * crashed replay skips the chunks in `done` instead of double-applying
-    * them; the caller ledgers the plain version as the completion marker.
+    * its own sub-id key and replay position, so a crashed replay skips the
+    * chunks the high-water covers instead of double-applying them; the
+    * caller lists the plain version as the completion marker.
     */
-  private def retractChunked(out: DataFrame, version: Long, done: Set[Long]): Unit = {
+  private def retractChunked(out: DataFrame, version: Long, done: Long => Boolean): Unit = {
     val it = out.orderBy(col("id")).toLocalIterator()
     val buf = scala.collection.mutable.ArrayBuffer[Long]()
     var chunk = 0
     def flush(): Unit = if (buf.nonEmpty) {
-      val sub = ChangeFeedSync.chunkLedgerId(version, chunk)
-      if (!done(sub)) applyWindow(Seq(sub -> buf.toList), Nil)
+      if (!done(position(version, chunk))) {
+        val key = chunkKey(version, chunk)
+        runPositions = Map(key -> position(version, chunk))
+        applyWindow(Seq(key -> buf.toList), Nil)
+      }
       chunk += 1
       buf.clear()
     }
@@ -138,10 +185,10 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
     *
     * The window is materialized ONCE (it is churn-sized, never
     * corpus-sized) and ONE census job yields every per-commit retraction
-    * and admission count together with the window's replay-ledger rows; one
-    * id-set aggregate follows, for the whole window. The window then reaches
-    * [[applyWindow]] as ONE run, split only at over-cap commits, whose
-    * retraction goes through [[retractChunked]] between the runs.
+    * and admission count; one id-set aggregate follows, for the whole
+    * window. The window then reaches [[applyWindow]] as ONE run, split only
+    * at over-cap commits, whose retraction goes through [[retractChunked]]
+    * between the runs.
     */
   def sync(): Int = {
     val head = srcWh.versions().lastOption.getOrElse(0)
@@ -159,25 +206,22 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
       val admitting = ct.isin("insert", "update_postimage")
       val vCol = col("_commit_version").cast(LongType)
       // ONE driver job: per-commit churn COUNTS (no id materialization yet
-      // — a single adversarial 10⁸-row delete must not OOM the driver) and
-      // the window's replay-ledger rows
-      val rows = (feed.groupBy(vCol.as("v"))
+      // — a single adversarial 10⁸-row delete must not OOM the driver)
+      val census = feed.groupBy(vCol.as("v"))
         .agg(
           count(when(retracting, 1)).as("nOut"),
           count(when(admitting, 1)).as("nIn"))
-        .select(lit("c"), col("v"), col("nOut"), col("nIn")) +: ledgerHits(from, head))
-        .reduce(_ unionAll _).collect()
-      def tagged(tag: String) = rows.filter(_.getString(0) == tag)
-      val census = tagged("c").map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(_._1)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .sortBy(_._1).toSeq
       if (census.isEmpty) { emptyScan = Some((cur, head)); return cur }
-      val doneOut = tagged("r").map(_.getLong(1)).toSet
-      val doneIn = tagged("i").map(_.getLong(1)).toSet
+      val high = (guard.high ++ legacyPosition(census)).maxOption
+      def done(p: Long): Boolean = high.exists(_ >= p)
       val cap = censusIdCap
       // still ONE job for the whole window: id sets of the under-cap
-      // retractions not yet ledgered (each bounded by the cap)
-      val smallVs = census.toSeq.collect {
-        case (v, nOut, _) if nOut > 0L && nOut <= cap && !doneOut(v) => Long.box(v)
+      // retractions not yet applied (each bounded by the cap)
+      val smallVs = census.collect {
+        case (v, nOut, _) if nOut > 0L && nOut <= cap && !done(position(v, Retracted)) =>
+          Long.box(v)
       }
       val idSets: Map[Long, Seq[Long]] =
         if (smallVs.isEmpty) Map.empty
@@ -189,24 +233,30 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
           .toMap
       val retracts = scala.collection.mutable.ArrayBuffer[(Long, Seq[Long])]()
       val admits = scala.collection.mutable.ArrayBuffer[(Long, DataFrame)]()
+      val positions = scala.collection.mutable.Map[Long, Long]()
       def flush(): Unit = if (retracts.nonEmpty || admits.nonEmpty) {
+        runPositions = positions.toMap
         applyWindow(retracts.toList, admits.toList)
         retracts.clear()
         admits.clear()
+        positions.clear()
       }
       census.foreach { case (v, nOut, nIn) =>
-        if (nOut > 0L && !doneOut(v)) {
+        if (nOut > 0L && !done(position(v, Retracted))) {
           if (nOut <= cap) retracts += v -> idSets(v)
           else {
             flush()
             retractChunked(feed.filter(retracting && vCol === v)
-              .select(col(idCol).cast(LongType).as("id")).distinct(), v, doneOut)
+              .select(col(idCol).cast(LongType).as("id")).distinct(), v, done)
             retracts += v -> Nil
           }
+          positions(v) = position(v, Retracted)
         }
-        if (nIn > 0L && !doneIn(v))
+        if (nIn > 0L && !done(position(v, Admitted))) {
           admits += v -> feed.filter(admitting && vCol === v)
             .select(corpusSchema.fieldNames.toSeq.map(col): _*)
+          positions(v) = position(v, Admitted)
+        }
       }
       flush()
       cursorWh.replace(cursorTable, srcWh.spark.createDataFrame(
@@ -218,17 +268,40 @@ abstract class ChangeFeedSync(srcWh: AtomicWarehouse, corpusTable: String,
 }
 
 object ChangeFeedSync {
-  /** Ledger sub-id for chunk `i` of version `v`'s giant retraction:
-    * negative, injective for v < 2^42 and i < 2^20 — corpus versions are
-    * positive ints, so the spaces can never collide.
+  /** Hook key of chunk `i` of version `v`'s giant retraction — also the id
+    * legacy retraction ledgers stored it under: negative, injective for
+    * v < 2^42 and i < 2^20 — corpus versions are positive ints, so the
+    * spaces can never collide.
     */
-  private def chunkLedgerId(v: Long, i: Int): Long =
-    -((v << 20) + i + 1)
+  private def chunkKey(v: Long, i: Int): Long = -((v << 20) + i + 1)
+
+  // the steps of one version, in apply order: chunks 0 … 2^20 − 1, then
+  // the retraction's completion, then the admission
+  private val Retracted = 1 << 20
+  private val Admitted = Retracted + 1
+  private val StepMask = (1L << 21) - 1
+
+  /** The replay position of step `step` of corpus version `v`: ascending
+    * in the order [[ChangeFeedSync.sync]] applies steps (v < 2^42).
+    */
+  private def position(v: Long, step: Int): Long = (v << 21) + step
+
+  private def describe(p: Long): String = (p & StepMask).toInt match {
+    case Retracted => s"version ${p >> 21}'s retraction"
+    case Admitted => s"version ${p >> 21}'s admission"
+    case i => s"chunk $i of version ${p >> 21}'s retraction"
+  }
+
+  /** Legacy replay ledgers that are not a prefix of the change window's
+    * step order: the high-water they convert to would skip a step they do
+    * not record as applied.
+    */
+  final class LegacyLedgerGap(msg: String) extends IllegalStateException(msg)
 }
 
 /** The IVF ANN index as an incrementally-maintained MV of an embeddings
   * corpus table — [[FtsSync]]'s twin: each window run goes through
-  * [[graft.operators.PersistedIvf.applyWindowLedgered]], one atomic commit
+  * [[graft.operators.PersistedIvf.applyWindow]], one atomic commit
   * per corpus version that tombstones its deletes/update-preimages and
   * assigns-and-admits its inserts/update-postimages against the standing
   * centroids, so the per-batch stats rows `drifted` reads stay one per
@@ -242,11 +315,10 @@ class VectorSync(srcWh: AtomicWarehouse, corpusTable: String,
     extends ChangeFeedSync(srcWh, corpusTable, corpusSchema, idCol) {
 
   val cursorTable = s"${ivf.assignTable}/_sync/Cursor"
-  protected def cursorWh: graft.sources.Warehouse = ivf.wh
-  protected def retractLedger: String = ivf.retractTable
-  protected def ingestLedger: String = ivf.ingestTable
+  protected def cursorWh: Warehouse = ivf.wh
+  override protected def legacyLedgerDir: Option[String] = Some("ann")
 
   protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
       admits: Seq[(Long, DataFrame)]): Unit =
-    ivf.applyWindowLedgered(retracts, admits, idCol, vecCol)
+    ivf.applyWindow(retracts, admits, idCol, vecCol, markThrough)
 }

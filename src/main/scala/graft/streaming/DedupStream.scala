@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import graft.sources.{AtomicWarehouse, Warehouse}
+import graft.sources.{AtomicWarehouse, ReplayGuard, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -21,12 +21,16 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   * full corpus, regardless of how ingestion was batched.
   *
   * Signatures are computed ONCE per batch and serve both the join and the
-  * index append. Idempotency: the Spark checkpoint gives at-most-once file
-  * discovery, and the batch's writes run inside ONE `atomically` section:
-  * the whole batch commits as one manifest and a crash anywhere leaves the
-  * prior snapshot, so a checkpoint replay admits the batch exactly once
-  * (CrashConsistencySpec). The writes stage CONCURRENTLY; on a failure the
-  * siblings are awaited to completion before the error propagates.
+  * index append. Idempotency: the batch's writes run inside ONE
+  * `atomically` section, so the whole batch commits as one manifest and a
+  * crash anywhere leaves the prior snapshot (CrashConsistencySpec). On the
+  * [[start]] path that commit also stages the micro-batch id as the
+  * corpus table's `txn` high-water ([[graft.sources.ReplayGuard]]):
+  * `foreachBatch` is at-least-once — a crash after the commit but before
+  * Spark's commit-log entry re-runs the batch — and the replay finds its
+  * id covered and no-ops, so a checkpoint replay admits the batch exactly
+  * once. The writes stage CONCURRENTLY; on a failure the siblings are
+  * awaited to completion before the error propagates.
   *
   * ==Bloom routing==
   * Same lifecycle as [[ExactDedupStream]]'s: once the band table crosses
@@ -123,7 +127,18 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
   /** Dedup one micro-batch against the corpus-so-far, append the discovered
     * pairs, and admit the batch (docs + signatures).
     */
-  def processBatch(batch0: DataFrame): Unit = {
+  def processBatch(batch0: DataFrame): Unit = admit(batch0, _ => ())
+
+  // keyed on the corpus table: compactAll replaces it, nothing drops it
+  private lazy val guard = new ReplayGuard(wh, corpusTable, "dedup-stream")
+
+  /** [[processBatch]] for stream batch `batchId`: a replay of an
+    * already-committed batch no-ops.
+    */
+  private[graft] def processBatch(batch0: DataFrame, batchId: Long): Unit =
+    if (!guard.covers(batchId)) admit(batch0, guard.mark(_, batchId))
+
+  private def admit(batch0: DataFrame, mark: Warehouse => Unit): Unit = {
     // phase labels (guide §1.5): foreachBatch runs on the stream thread, so
     // the description is thread-local to exactly this batch's jobs — the UI
     // and job-listener probes can attribute per-batch cost to its phase
@@ -225,6 +240,7 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
       // lag the band index it routes for)
       wh.atomically { w =>
         phase("admit appends")
+        mark(w)
         Warehouse.settleAll(wh.spark, Seq(
           // coalesce(1): the spread signature cache is already materialized
           // (count above), so each admit lands ONE file per table per batch —
@@ -358,6 +374,6 @@ class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) => processBatch(batch) }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => processBatch(batch, batchId) }
       .start()
 }

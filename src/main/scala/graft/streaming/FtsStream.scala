@@ -17,14 +17,14 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * session" and "tokenize the day's arrivals".
   *
   * ==Replay idempotency==
-  * The admit goes through [[PersistedPostings.addDocsLedgered]]: a
-  * `(batch_id)` ingest-ledger row lands in the SAME atomic section as the
-  * postings + stats appends, so a checkpoint retry of a committed batch
-  * no-ops. Without it, a replay double-counts every document — tf/df/N all
-  * inflate and every later [[PersistedPostings.query]] mis-scores. The
-  * section commits as one manifest, so admission is exactly-once;
-  * FtsStreamSpec proves replay-noop and stream-ingest ≡ batch-ingest
-  * bit-identically.
+  * The admit goes through [[PersistedPostings.addDocsLedgered]]: the batch
+  * id lands as the postings table's `txn` high-water
+  * ([[graft.sources.ReplayGuard]]) in the SAME commit as the postings +
+  * stats appends, so a checkpoint retry of a committed batch no-ops.
+  * Without it, a replay double-counts every document — tf/df/N all inflate
+  * and every later [[PersistedPostings.query]] mis-scores. The section
+  * commits as one manifest, so admission is exactly-once; FtsStreamSpec
+  * proves replay-noop and stream-ingest ≡ batch-ingest bit-identically.
   *
   * The index must exist before the stream starts ([[PersistedPostings
   * .build]] — on the genesis corpus or an empty frame), the

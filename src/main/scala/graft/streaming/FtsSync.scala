@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.PersistedPostings
-import graft.sources.AtomicWarehouse
+import graft.sources.{AtomicWarehouse, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
@@ -9,10 +9,10 @@ import org.apache.spark.sql.types.StructType
   * lakehouse corpus table — the retraction IVM idea (`IncrementalAgg` over
   * the change feed) applied to a non-aggregate derived structure, riding
   * the generic [[ChangeFeedSync]] loop. Each window run lands as ONE atomic
-  * index commit ([[PersistedPostings.applyWindowLedgered]]): merge-on-read
+  * index commit ([[PersistedPostings.applyWindow]]): merge-on-read
   * tombstones for the pre-window postings of retracted ids, the postings of
   * the last admitted text of admitted ids (tokenizing only that slice), the
-  * netted stats rows and every version's ledger rows — so an UPDATE is
+  * netted stats rows and the replay high-water through the run — so an UPDATE is
   * retraction-then-admission of the same id and the index after any DML mix
   * is bit-identical to a from-scratch build over the live corpus
   * ([[PersistedPostings.retractDocs]]'s equivalence argument, now
@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.StructType
   * Caller contract: the index must reflect the corpus as of the cursor
   * (seed via [[PersistedPostings.build]] on the corpus state at
   * feed-enable time, or start both empty), and this driver is the index's
-  * ONLY maintainer (the ledger id space is corpus commit versions; mixing
-  * in a stream's micro-batch ids would collide).
+  * ONLY maintainer.
   */
 class FtsSync(srcWh: AtomicWarehouse, corpusTable: String,
     corpusSchema: StructType, idCol: String, textCol: String,
@@ -31,11 +30,10 @@ class FtsSync(srcWh: AtomicWarehouse, corpusTable: String,
     extends ChangeFeedSync(srcWh, corpusTable, corpusSchema, idCol) {
 
   val cursorTable = s"${fts.postingsTable}/_sync/Cursor"
-  protected def cursorWh: graft.sources.Warehouse = fts.wh
-  protected def retractLedger: String = fts.retractTable
-  protected def ingestLedger: String = fts.ingestTable
+  protected def cursorWh: Warehouse = fts.wh
+  override protected def legacyLedgerDir: Option[String] = Some("fts")
 
   protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
       admits: Seq[(Long, DataFrame)]): Unit =
-    fts.applyWindowLedgered(retracts, admits, idCol, textCol)
+    fts.applyWindow(retracts, admits, idCol, textCol, markThrough)
 }

@@ -18,11 +18,12 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, 
   *
   * ==Replay idempotency==
   * `foreachBatch` delivers each micro-batch with its checkpoint batch id;
-  * the admit goes through [[PersistedIvf.addVectorsLedgered]], which writes
-  * a `(batch_id)` ingest-ledger row in the SAME atomic section as the
-  * assignment append. A checkpoint retry of a committed batch no-ops —
-  * without the ledger, replays would duplicate assignment rows, and
-  * duplicated candidates surface as duplicated ranks in every later
+  * the admit goes through [[PersistedIvf.addVectorsLedgered]], which stages
+  * the batch id as the assignment table's `txn` high-water
+  * ([[graft.sources.ReplayGuard]]) in the SAME commit as the assignment
+  * append. A checkpoint retry of a committed batch no-ops — without the
+  * guard, replays would duplicate assignment rows, and duplicated
+  * candidates surface as duplicated ranks in every later
   * [[PersistedIvf.topK]]. The section commits as one manifest, so admission
   * is exactly-once; IvfStreamSpec proves replay-noop and stream-ingest ≡
   * batch-ingest bit-identically.
@@ -32,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, 
   * drift ledger ([[PersistedIvf.drifted]]: fresh batches landing measurably
   * farther from their centroids than the training data did) and retrains
   * from the persisted corpus when it fires. The retrain REPLACES
-  * centroids/assignments/stats but leaves the ingest ledger intact, so
+  * centroids/assignments/stats, and a replace keeps the high-water, so
   * replays of pre-retrain batches still no-op. Advisory by design: a crash
   * between a committed admit and its retrain just defers the retrain to the
   * next batch whose drift check fires (the statistic is monotone in the

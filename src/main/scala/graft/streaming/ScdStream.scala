@@ -1,11 +1,10 @@
 package graft.streaming
 
 import graft.operators.ScdDimension
-import graft.sources.Warehouse
+import graft.sources.{ReplayGuard, Warehouse}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming SCD2 dimension maintenance — the continuous-ingest loop for
   * [[graft.operators.ScdDimension]], completing the batch / incremental /
@@ -17,13 +16,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * "rebuild the dimension".
   *
   * ==Replay idempotency==
-  * The history replace and a `(batch_id)` ingest-ledger row publish in the
-  * SAME manifest commit (the [[IvfStream]] arrangement): a checkpoint
-  * retry of a committed micro-batch sees its id in the ledger and no-ops.
-  * SCD2 has a second, semantic safety net the other indexes lack: a replay
-  * that somehow re-applied an identical batch would change nothing anyway
+  * The history replace and the batch id, staged as the `txn` high-water of
+  * the history table ([[graft.sources.ReplayGuard]]), publish in the SAME
+  * manifest commit (the [[IvfStream]] arrangement): a checkpoint retry of a
+  * committed micro-batch finds its id covered and no-ops. SCD2 has a
+  * second, semantic safety net the other indexes lack: a replay that
+  * somehow re-applied an identical batch would change nothing anyway
   * (identical attributes are the upsert's no-op case) — but it would burn a
-  * sequence number and rewrite the history files, so the ledger still
+  * sequence number and rewrite the history files, so the guard still
   * carries the contract.
   *
   * ==Ordering contract==
@@ -38,35 +38,24 @@ class ScdStream(wh: Warehouse, name: String, keyCols: Seq[String],
     attrCols: Seq[String], baseSchema: StructType) {
 
   val dim = new ScdDimension(wh, name, keyCols, attrCols, baseSchema)
-  val ledgerTable = s"dim/$name/IngestLedger"
-  val ledgerSchema: StructType = StructType(Seq(
-    StructField("batch_id", LongType, nullable = false)))
+  private val guard =
+    new ReplayGuard(wh, dim.historyTable, "scd-stream", legacyDir = Some(s"dim/$name"))
 
   // Single-writer CURSOR state: the stream is the dimension's only writer
   // (class doc — the same assumption every index stream here makes), so
-  // the ingest ledger and the next sequence are read from their tables
-  // ONCE per stream instance and then advance in memory. The previous
-  // shape re-scanned the ledger AND re-derived max(valid_from) as two
-  // driver jobs per micro-batch — at a 3-batch AvailableNow drain those
-  // scans were a measurable share of the floor (BASELINE.md r17). The
+  // the next sequence is derived from the history ONCE per stream instance
+  // and then advances in memory — re-deriving max(valid_from) per
+  // micro-batch was a driver job at the floor (BASELINE.md r17). The
   // cursor stays exactly the DERIVED value: it advances only when the
   // batch actually OPENED version rows ([[graft.operators.ScdDimension
   // .upsertIn]] reports that as an observed metric riding the history
   // write), so an all-unchanged batch still consumes no sequence. A
-  // restart re-reads both tables; the atomic commit leaves either the
-  // whole batch or nothing, so the re-read state can never be desynced.
-  @volatile private var applied: scala.collection.mutable.Set[Long] = null
+  // restart re-derives it; the atomic commit leaves either the whole batch
+  // or nothing, so the re-derived state can never be desynced.
   @volatile private var cursor: Long = -1L
 
   /** True when `batchId` was already applied (a checkpoint replay). */
-  def ingested(batchId: Long): Boolean = {
-    if (applied == null)
-      applied = if (wh.exists(ledgerTable))
-        scala.collection.mutable.Set(wh.read(ledgerTable, ledgerSchema)
-          .collect().map(_.getLong(0)).toSeq: _*)
-      else scala.collection.mutable.Set.empty[Long]
-    applied.contains(batchId)
-  }
+  def ingested(batchId: Long): Boolean = guard.covers(batchId)
 
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     if (ingested(batchId)) return
@@ -85,13 +74,10 @@ class ScdStream(wh: Warehouse, name: String, keyCols: Seq[String],
     var opened = 0L
     wh.atomically { w =>
       if (rows > 0) opened = dim.upsertPrevalidatedIn(w, batch, seq)
-      w.append(ledgerTable, wh.spark.createDataFrame(
-        java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(batchId))),
-        ledgerSchema))
+      guard.mark(w, batchId)
     }
-    // only a committed batch marks applied / advances the cursor: a retry
-    // of a failed commit re-runs the whole fold, exactly as before
-    applied += batchId
+    // only a committed batch advances the cursor: a retry of a failed
+    // commit re-runs the whole fold, exactly as before
     if (opened > 0L) cursor = seq + 1L
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.Transforms
 import graft.operators.Similarity
-import graft.sources.AtomicWarehouse
+import graft.sources.{AtomicWarehouse, ReplayGuard}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -40,10 +40,11 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
   * tracks batch size × cell width, never the accumulated corpus.
   *
   * ==Replay idempotency==
-  * The admit (index append + survivors append + `(batch_id)` ledger row) is
-  * one `atomically` section, so a mid-admit crash leaves none of it and
-  * the replay admits the batch exactly once; a checkpoint retry of a
-  * committed batch sees its ledger row and no-ops (CrashConsistencySpec).
+  * The admit (index append + survivors append + stats row + the batch id as
+  * the cell index's `txn` high-water, [[graft.sources.ReplayGuard]]) is one
+  * `atomically` section, so a mid-admit crash leaves none of it and the
+  * replay admits the batch exactly once; a checkpoint retry of a committed
+  * batch finds its id covered and no-ops (CrashConsistencySpec).
   */
 class SemanticDedupStream(wh: AtomicWarehouse, minCosine: Double,
     probeCellLimit: Int = 1000, idCol: String = "vec_id",
@@ -52,8 +53,11 @@ class SemanticDedupStream(wh: AtomicWarehouse, minCosine: Double,
   val centroidsTable = "semdedup/Centroids"
   val indexTable = "semdedup/CellIndex"
   val survivorsTable = "semdedup/Survivors"
-  val ledgerTable = "semdedup/IngestLedger"
   val statsTable = "semdedup/AssignStats"
+
+  // keyed on the cell index: retrain replaces it, nothing drops it
+  private val guard =
+    new ReplayGuard(wh, indexTable, "semdedup-stream", legacyDir = Some("semdedup"))
 
   val centroidSchema: StructType = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),
@@ -70,8 +74,6 @@ class SemanticDedupStream(wh: AtomicWarehouse, minCosine: Double,
   val survivorSchema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("cell", IntegerType, nullable = false)))
-  val ledgerSchema: StructType = StructType(Seq(
-    StructField("batch_id", LongType, nullable = false)))
 
   def vecSchema: StructType = StructType(Seq(
     StructField(idCol, LongType, nullable = false),
@@ -92,12 +94,11 @@ class SemanticDedupStream(wh: AtomicWarehouse, minCosine: Double,
 
   def survivors(): DataFrame = wh.read(survivorsTable, survivorSchema)
   def index(): DataFrame = wh.read(indexTable, indexSchema)
-  private[graft] def ledger(): DataFrame = wh.read(ledgerTable, ledgerSchema)
   def assignStats(): DataFrame = wh.read(statsTable, statsSchema)
 
   /** (row count, mean winning cosine) of `assigned` against the standing
     * centroids — the drift statistic, fused into ONE batch-sized aggregate
-    * so the ledger costs a single extra job per admit.
+    * so the drift stats cost a single extra job per admit.
     */
   private def countAndMeanCos(assigned: DataFrame): (Long, Option[Double]) = {
     val cents = wh.read(centroidsTable, centroidSchema)
@@ -188,20 +189,8 @@ class SemanticDedupStream(wh: AtomicWarehouse, minCosine: Double,
     } finally idx.unpersist(false)
   }
 
-  // single-writer cursor (the ScdStream discipline, BASELINE.md r17): the
-  // ingest ledger is read ONCE per stream instance, the applied set then
-  // advances in memory; a restart re-reads, a failed-commit retry re-runs
-  // (only a committed batch is marked applied).
-  @volatile private var applied: scala.collection.mutable.Set[Long] = null
-
-  private def ingested(batchId: Long): Boolean = {
-    if (applied == null)
-      applied = if (wh.exists(ledgerTable))
-        scala.collection.mutable.Set(
-          ledger().collect().map(_.getLong(0)).toSeq: _*)
-      else scala.collection.mutable.Set.empty[Long]
-    applied.contains(batchId)
-  }
+  /** True when `batchId` was already admitted (a checkpoint replay). */
+  def ingested(batchId: Long): Boolean = guard.covers(batchId)
 
   def processBatch(batch0: DataFrame, batchId: Long): Unit = {
     if (ingested(batchId)) return
@@ -265,16 +254,13 @@ class SemanticDedupStream(wh: AtomicWarehouse, minCosine: Double,
         // on tight per-row-group cell min/max stats
         w.append(indexTable, assigned.sortWithinPartitions("cell"))
         w.append(survivorsTable, admitted)
-        w.append(ledgerTable, wh.spark.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(batchId))),
-          ledgerSchema))
+        guard.mark(w, batchId)
         w.append(statsTable, wh.spark.createDataFrame(
           java.util.Arrays.asList(org.apache.spark.sql.Row(
             Long.box(batchId), kind, Long.box(nAssigned),
             mc.map(Double.box).orNull)),
           statsSchema))
       }
-      applied += batchId
     } finally assigned.unpersist(false)
   }
 

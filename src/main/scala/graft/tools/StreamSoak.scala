@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * [[graft.streaming.IvfStream]] — one dim-rotated embeddings replica per
   * micro-batch, cell-sorted compaction + vacuum inline every `compactEvery`;
   * their lost-batch detectors are arrival retention (cell-index rows ≡
-  * vectors ingested) and the assignment/ingest-ledger counts respectively
+  * vectors ingested) and the assignment count / replay high-water respectively
   * (artifacts `target/streamsoak_sem.json` / `_ivf.json`). `fts` soaks
   * [[graft.streaming.FtsStream]] — doc-slice batches into the persisted
   * postings index, term-sorted compaction + vacuum every `compactEvery`;
@@ -121,7 +121,7 @@ object StreamSoak {
           ({ df => b += 1; sd.processBatch(df, b) },
             Seq(sd.indexTable, sd.survivorsTable), () => sd.compactAll())
         case "fts" =>
-          // postings maintenance: per-batch tokenize + ledgered admit; the
+          // postings maintenance: per-batch tokenize + guarded admit; the
           // flat-cost claim is that admit wall tracks the BATCH while the
           // postings table grows; maintenance = term-sorted compaction
           val fs = new graft.streaming.FtsStream(wh)
@@ -206,10 +206,11 @@ object StreamSoak {
         s""""index_rows":$idx,"survivors":$surv,"expected_ingested":$expected"""
       case "ivf" =>
         val ivf = new graft.operators.PersistedIvf(wh)
-        val (n, led) = (ivf.assignments().count(), ivf.ingestLedger().count())
+        // batch ids 0 … nBatches − 1: the replay high-water counts them
+        val (n, led) = (ivf.assignments().count(), ivf.lastIngested.fold(0L)(_ + 1L))
         val expected = emb0.count() * (nBatches + 1) // + the built replica 0
         assert(n == expected, s"LOST BATCH: assignments $n != expected $expected")
-        assert(led == nBatches, s"ledger $led rows != $nBatches batches")
+        assert(led == nBatches, s"high-water covers $led batches != $nBatches")
         s""""assignments":$n,"ledger_batches":$led,"expected_ingested":$expected"""
       case "fts" =>
         // lost-batch detector: the streamed index must rank EXACTLY like

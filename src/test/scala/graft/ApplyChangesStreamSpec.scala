@@ -167,4 +167,16 @@ class ApplyChangesStreamSpec extends SparkSpec {
     acs.processBatch(changes((1L, "CORRUPT", "u", 3L)), batchId = 7L)
     assert(wh.versions().last == head && state(acs) == Map(1L -> "a"))
   }
+
+  test("a compacted target still reports its applied batches (the high-water survives truncates)") {
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-cdc-compact-").toString)
+    val acs = new ApplyChangesStream(wh, "t", Seq("id"), base)
+    acs.processBatch(changes((1L, "a", "u", 1L), (2L, "b", "u", 2L)), batchId = 7L)
+    wh.compact("t", acs.storedSchema)
+    val fresh = new ApplyChangesStream(wh, "t", Seq("id"), base) // a restarted stream
+    assert(fresh.ingested(7L), "compacting the target forgot batch 7")
+    val head = wh.versions().last
+    fresh.processBatch(changes((1L, "CORRUPT", "u", 3L)), batchId = 7L)
+    assert(wh.versions().last == head && state(fresh) == Map(1L -> "a", 2L -> "b"))
+  }
 }

@@ -139,8 +139,7 @@ class CrashConsistencySpec extends SparkSpec {
     assert(intercept[java.io.IOException](sd.processBatch(b2, 1L))
       .getMessage.contains("injected crash"))
     assert(sd.index().count() == 150, "no index row of the crashed batch may be visible")
-    assert(sd.ledger().filter($"batch_id" === 1L).isEmpty,
-      "batch 1 must not be ledgered after the crash")
+    assert(!sd.ingested(1L), "batch 1 must not be marked applied after the crash")
     wh.failOn = None
     sd.processBatch(b2, 1L) // checkpoint replay
     sd.processBatch(b3, 2L)
@@ -151,13 +150,13 @@ class CrashConsistencySpec extends SparkSpec {
     assert(sd.index().count() == 500 && sd.index().select("id").distinct().count() == 500)
     assert(sd.survivors().count() == want.size)
 
-    // second window: survivors staged, the ledger append crashed — the
-    // replay admits the batch once
+    // second window: survivors and the replay mark staged, the stats append
+    // crashed — the replay admits the batch once
     val wh2 = failing("graft-crash-sem2-")
     val sd2 = new graft.streaming.SemanticDedupStream(wh2, minCosine = 0.45)
     sd2.init(seeds)
     sd2.processBatch(b1, 0L)
-    wh2.failOn = Some(sd2.ledgerTable)
+    wh2.failOn = Some(sd2.statsTable)
     assert(intercept[java.io.IOException](sd2.processBatch(b2, 1L))
       .getMessage.contains("injected crash"))
     wh2.failOn = None
@@ -185,10 +184,10 @@ class CrashConsistencySpec extends SparkSpec {
     wh.failOn = None
     st.processBatch(emb.filter($"vec_id" >= 300), 0L) // checkpoint replay
 
-    // exactly-once: every id assigned once, the batch ledgered once
+    // exactly-once: every id assigned once, the batch marked applied
     val ids = st.ivf.assignments().select("id").distinct().count()
     assert(ids == 500, s"assignment id set $ids != 500")
     assert(st.ivf.assignments().count() == 500)
-    assert(st.ivf.ingestLedger().collect().map(_.getLong(0)).toSeq == Seq(0L))
+    assert(st.ivf.lastIngested == Some(0L))
   }
 }

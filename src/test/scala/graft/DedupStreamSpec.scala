@@ -49,6 +49,38 @@ class DedupStreamSpec extends SparkSpec {
     assert(ds.corpus().count() == docs.count())
   }
 
+  test("a checkpoint replay of a committed micro-batch is a no-op (its id rides the commit)") {
+    val inDir = Files.createTempDirectory("graft-dstream-rp-in-").toString
+    val ckpt = Files.createTempDirectory("graft-dstream-rp-ck-").toString
+    val wh = new AtomicWarehouse(spark,
+      Files.createTempDirectory("graft-dstream-rp-wh-").toString)
+    val tmp = Files.createTempDirectory("graft-dstream-rp-c-").toString + "/out"
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select($"doc_id".cast("long").as("doc_id"), $"text").coalesce(1).write.parquet(tmp)
+    Files.move(graft.LocalFs.onlyParquet(tmp), Paths.get(inDir, "chunk_00.parquet"),
+      StandardCopyOption.ATOMIC_MOVE)
+    def drain(): DedupStream = {
+      val ds = new DedupStream(wh, minJaccard = 0.35, minSigMatchesOverride = 4)
+      val q = ds.start(inDir, ckpt, Trigger.AvailableNow())
+      assert(q.awaitTermination(300000), "stream failed to drain within 300 s")
+      ds
+    }
+    def pairs(ds: DedupStream) = ds.pairs().collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    val first = drain()
+    val (corpus, found) = (first.corpus().count(), pairs(first))
+    assert(found.nonEmpty, "the fixture must find near-duplicates")
+    // a crash after the batch's manifest commit but before Spark wrote its
+    // commit-log entry: the restarted query re-runs batch 0
+    Seq("0", ".0.crc").foreach(f => Files.deleteIfExists(Paths.get(ckpt, "commits", f)))
+    val head = wh.versions().last
+    val replayed = drain()
+    assert(Files.exists(Paths.get(ckpt, "commits", "0")), "batch 0 was not re-run")
+    assert(replayed.corpus().count() == corpus, "the replay re-admitted the corpus")
+    assert(pairs(replayed) == found, "the replay re-appended pairs")
+    assert(wh.versions().last == head, "the replay committed")
+  }
+
   test("band-key bloom routing: pairs identical to the plain stream, state maintained") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id".cast("long").as("doc_id"), $"text")

@@ -33,6 +33,8 @@ class FailingWarehouse(spark: SparkSession, root: String)
     }
     def replace(t: String, df: DataFrame): Unit = { maybeFail(t); w.replace(t, df) }
     def delete(t: String): Unit = { maybeFail(t); w.delete(t) }
+    def lastCommittedBatch(t: String, app: String): Option[Long] = w.lastCommittedBatch(t, app)
+    def markBatch(t: String, app: String, b: Long): Unit = w.markBatch(t, app, b)
     def compactWith(t: String, s: StructType, f: DataFrame => DataFrame): Unit = {
       maybeFail(t); w.compactWith(t, s, f)
     }

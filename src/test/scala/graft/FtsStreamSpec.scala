@@ -74,4 +74,38 @@ class FtsStreamSpec extends SparkSpec {
     assert(rows(st.fts.query(queries, "q_id", "qtext", 10)) == want,
       "replay moved the ranking (tf/df/N inflated)")
   }
+
+  test("a legacy ingest ledger is adopted: its last batch's replay no-ops, the next commit retires it") {
+    def chunk(i: Int) = docs.filter(pmod($"doc_id", lit(2)) === i)
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-ftss-legacy-").toString)
+    // batch 0 admitted the way an older build did: postings and stats plus
+    // a row in its parquet `(batch_id)` ingest ledger
+    val old = new PersistedPostings(wh)
+    old.build(docs.limit(0), "doc_id", "text")
+    old.addDocs(chunk(0), "doc_id", "text")
+    wh.append("fts/IngestLedger", Seq(0L).toDF("batch_id"))
+
+    val st = new FtsStream(wh) // the restarted stream
+    val before = postingsSet(st.fts)
+    val head = wh.versions().last
+    st.processBatch(chunk(0), batchId = 0L) // the checkpoint's replay of batch 0
+    assert(postingsSet(st.fts) == before && wh.versions().last == head,
+      "the replay of a legacy-ledgered batch was admitted again")
+    st.processBatch(chunk(1), batchId = 1L)
+    assert(!wh.exists("fts/IngestLedger"), "the first new commit must retire the legacy ledger")
+    assert(st.fts.ingested(0L) && st.fts.ingested(1L))
+
+    val batch = new PersistedPostings(new AtomicWarehouse(spark,
+      Files.createTempDirectory("graft-ftsb-legacy-").toString))
+    batch.build(chunk(0), "doc_id", "text")
+    batch.addDocs(chunk(1), "doc_id", "text")
+    val want = rows(batch.query(queries, "q_id", "qtext", 10))
+    assert(postingsSet(st.fts) == postingsSet(batch) &&
+      rows(st.fts.query(queries, "q_id", "qtext", 10)) == want)
+    // a log fold keeps every answer, and the ledger stays gone
+    wh.vacuum(0L)
+    val resumed = new FtsStream(wh)
+    assert(resumed.fts.ingested(1L) && !wh.exists("fts/IngestLedger"))
+    assert(rows(resumed.fts.query(queries, "q_id", "qtext", 10)) == want)
+  }
 }

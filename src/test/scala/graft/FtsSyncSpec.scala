@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * to a from-scratch build over the live corpus, applying the window as ONE
   * index commit (split only at over-cap commits, whose retraction chunks);
   * replays (wound-back cursor, repeated sync, a half-applied legacy commit)
-  * drop every half the per-version ledgers already hold instead of
-  * corrupting N; un-reconstructible windows refuse.
+  * drop every step the replay high-water (or an adopted legacy ledger)
+  * already covers instead of corrupting N; un-reconstructible windows
+  * refuse.
   */
 class FtsSyncSpec extends SparkSpec {
   import spark.implicits._
@@ -127,7 +128,7 @@ class FtsSyncSpec extends SparkSpec {
 
   test("fused multi-commit window: churn algebra stays bit-exact (insert→delete, update×2, delete→reinsert)") {
     // the window-fusion equivalence argument's hard cases, all in ONE
-    // multi-commit window (applyWindowLedgered's R/A classification):
+    // multi-commit window (applyWindow's R/A classification):
     //   - doc 10 inserted then deleted inside the window → net zero (never
     //     in R: first event is an admit; never in A: last is a retract)
     //   - doc 1 updated twice → one tombstone of the PRE-window rows, one
@@ -172,8 +173,6 @@ class FtsSyncSpec extends SparkSpec {
     val mv = new graft.streaming.ChangeFeedSync(wh, "corpus", docSchema, "doc_id") {
       protected def cursorWh: graft.sources.Warehouse = wh
       val cursorTable = "sync/Cursor"
-      protected def retractLedger: String = "sync/RetractLedger"
-      protected def ingestLedger: String = "sync/IngestLedger"
       override protected def censusIdCap: Int = 10
       protected def applyWindow(retracts: Seq[(Long, Seq[Long])],
           admits: Seq[(Long, DataFrame)]): Unit = calls.add(retracts)
@@ -355,38 +354,89 @@ class FtsSyncSpec extends SparkSpec {
       s"expected 3 commits (update, fused apply, cursor); head moved " +
         s"${wh.versions().last - before}")
     assert(bm25(fts) == bm25(freshOver(wh.read("corpus", docSchema))))
-    // both ledgers carry the corpus commit version — one atomic publish
+    // the replay high-water covers both halves of the corpus commit — one
+    // atomic publish
     val v = (before + 1).toLong
-    assert(fts.retracted(v) && fts.ingested(v))
+    assert(mv.synced(v))
+  }
+
+  /** A root as an older build's sync left it: the corpus commits through
+    * `through` applied to the index (`fts.addDocs`, as its admission did),
+    * the cursor at `through`, and the applied versions in the two parquet
+    * `(batch_id)` replay ledgers that build kept beside the index.
+    */
+  private def legacyRoot(wh: AtomicWarehouse, fts: PersistedPostings, mv: FtsSync,
+      admitted: Seq[Long]): Unit = {
+    fts.addDocs(wh.read("corpus", docSchema), "doc_id", "text")
+    plantLedgers(wh, Nil, admitted)
+    wh.replace(mv.cursorTable, Seq(wh.versions().last.toLong).toDF("version"))
+  }
+
+  private def plantLedgers(wh: AtomicWarehouse, retracted: Seq[Long],
+      admitted: Seq[Long]): Unit = wh.atomically { w =>
+    if (retracted.nonEmpty) w.append("fts/RetractLedger", retracted.toDF("batch_id"))
+    if (admitted.nonEmpty) w.append("fts/IngestLedger", admitted.toDF("batch_id"))
   }
 
   test("a legacy half-applied commit (retract landed, admit lost) finishes") {
     val (wh, fts, mv) = fixture()
     wh.append("corpus", Seq(
       (1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text").coalesce(1))
-    mv.sync()
+    legacyRoot(wh, fts, mv, admitted = Seq(wh.versions().last.toLong))
     wh.updateWhere("corpus", docSchema, Seq(ColEq("doc_id", 1L)),
       Seq("text" -> lit("alpha delta")))
-    // simulate the OLD two-commit driver crashing between its halves:
-    // the retraction ledgered under the corpus commit version, no admit
+    // the OLD two-commit driver crashed between its halves: the retraction
+    // landed with its ledger row under the corpus commit version, no admit
     val v = wh.versions().last.toLong
-    fts.retractDocsLedgered(Seq(1L), v)
+    fts.retractDocs(Seq(1L))
+    plantLedgers(wh, Seq(v), Nil)
     mv.sync() // must skip the done retraction, land only the admission
     assert(bm25(fts) == bm25(freshOver(wh.read("corpus", docSchema))),
       "recovery from a half-applied commit diverged")
     assert(fts.corpusStats().agg(sum(col("n"))).head().getLong(0)
       == wh.read("corpus", docSchema).count())
+    // the admission's commit retired both legacy ledgers; the high-water
+    // alone now covers every step: a full replay no-ops
+    assert(!wh.exists("fts/RetractLedger") && !wh.exists("fts/IngestLedger"))
+    assert(mv.synced(v))
+    val want = bm25(fts)
+    wh.replace(mv.cursorTable, Seq(0L).toDF("version"))
+    new FtsSync(wh, "corpus", docSchema, "doc_id", "text", new PersistedPostings(wh)).sync()
+    assert(bm25(fts) == want, "replay after adoption corrupted the index")
+    // and a log fold keeps every answer
+    wh.vacuum(0L)
+    val resumed = new FtsSync(wh, "corpus", docSchema, "doc_id", "text",
+      new PersistedPostings(wh))
+    assert(resumed.synced(v) && bm25(fts) == want)
+    assert(!wh.exists("fts/RetractLedger") && !wh.exists("fts/IngestLedger"))
+  }
+
+  test("legacy ledgers that are not a prefix of the window refuse with LegacyLedgerGap") {
+    val (wh, fts, mv) = fixture()
+    wh.append("corpus", Seq((1L, "alpha beta")).toDF("doc_id", "text").coalesce(1))
+    val v1 = wh.versions().last.toLong
+    wh.append("corpus", Seq((2L, "beta gamma")).toDF("doc_id", "text").coalesce(1))
+    val v2 = wh.versions().last.toLong
+    // v2's admission is ledgered, v1's is not: a high-water through v2
+    // would skip v1's documents
+    plantLedgers(wh, Nil, Seq(v2))
+    val e = intercept[graft.streaming.ChangeFeedSync.LegacyLedgerGap](mv.sync())
+    assert(e.getMessage.contains(s"version $v1's admission"), e.getMessage)
+    assert(mv.cursor() == 0 && wh.exists("fts/IngestLedger"), "a refused sync changed state")
+    assert(fts.corpusStats().agg(sum(col("n"))).head().getLong(0) == 0L)
   }
 
   test("a window mixing a legacy half-applied commit with fresh ones lands as ONE index commit") {
     val (wh, fts, mv) = fixture()
     wh.append("corpus", Seq((1L, "alpha beta"), (2L, "beta gamma"),
       (3L, "gamma delta")).toDF("doc_id", "text").coalesce(1))
-    mv.sync()
+    legacyRoot(wh, fts, mv, admitted = Seq(wh.versions().last.toLong))
     wh.updateWhere("corpus", docSchema, Seq(ColEq("doc_id", 1L)),
       Seq("text" -> lit("alpha delta")))
     // the OLD two-commit driver crashed between its halves of this commit
-    fts.retractDocsLedgered(Seq(1L), wh.versions().last.toLong)
+    val v = wh.versions().last.toLong
+    fts.retractDocs(Seq(1L))
+    plantLedgers(wh, Seq(v), Nil)
     // fresh churn behind it, including the half-applied doc again
     wh.updateWhere("corpus", docSchema, Seq(ColEq("doc_id", 1L)),
       Seq("text" -> lit("alpha zulu")))

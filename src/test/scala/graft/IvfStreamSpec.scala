@@ -68,8 +68,8 @@ class IvfStreamSpec extends SparkSpec {
 
   test("checkpoint replay of a committed batch is a ledgered no-op") {
     val (st, chunk) = streamed()
-    val ledger = st.ivf.ingestLedger().collect().map(_.getLong(0)).toSet
-    assert(ledger == Set(0L, 1L), s"expected batch ids 0,1 in the ledger, got $ledger")
+    assert(st.ivf.lastIngested == Some(1L),
+      s"expected batch ids 0,1 under the high-water, got ${st.ivf.lastIngested}")
     val before = assignSet(st.ivf)
     val statsBefore = st.ivf.assignStats().count()
     st.processBatch(chunk(0), batchId = 0L) // what a checkpoint retry delivers
@@ -107,7 +107,37 @@ class IvfStreamSpec extends SparkSpec {
     // every vector (train + streamed) is still exactly once in the index
     assert(st.ivf.assignments().select($"id").collect().map(_.getLong(0)).sorted.toSeq ==
       ((0L until 40L) ++ (100L until 140L)).toSeq)
-    // and the ingest ledger survived build()'s table replacement
-    assert(st.ivf.ingestLedger().collect().map(_.getLong(0)).toSet == Set(0L))
+    // and the replay high-water survived build()'s table replacement
+    assert(st.ivf.lastIngested == Some(0L))
+  }
+
+  test("a legacy ingest ledger is adopted: its last batch's replay no-ops, the next commit retires it") {
+    val tail = emb.filter($"vec_id" >= 300)
+    def chunk(i: Int) = tail.filter(pmod($"vec_id", lit(2)) === i)
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-ivfs-legacy-").toString)
+    // batch 0 admitted the way an older build did: assignments and stats
+    // plus a row in its parquet `(batch_id)` ingest ledger
+    val old = new PersistedIvf(wh)
+    old.buildWith(emb.filter($"vec_id" < 300), "vec_id", "embedding", seeds)
+    old.addVectors(chunk(0), "vec_id", "embedding")
+    wh.append("ann/IngestLedger", Seq(0L).toDF("batch_id"))
+
+    val st = new IvfStream(wh) // the restarted stream
+    val before = assignSet(st.ivf)
+    val head = wh.versions().last
+    st.processBatch(chunk(0), batchId = 0L) // the checkpoint's replay of batch 0
+    assert(assignSet(st.ivf) == before && wh.versions().last == head,
+      "the replay of a legacy-ledgered batch was admitted again")
+    assert(st.ivf.lastIngested == Some(0L))
+    st.processBatch(chunk(1), batchId = 1L)
+    assert(!wh.exists("ann/IngestLedger"), "the first new commit must retire the legacy ledger")
+    assert(st.ivf.lastIngested == Some(1L))
+    assert(st.ivf.assignments().count() == 500L && assignSet(st.ivf).size == 500)
+    // a log fold keeps every answer, and the ledger stays gone
+    val want = assignSet(st.ivf)
+    wh.vacuum(0L)
+    val resumed = new IvfStream(wh)
+    assert(resumed.ivf.lastIngested == Some(1L) && assignSet(resumed.ivf) == want)
+    assert(!wh.exists("ann/IngestLedger"))
   }
 }
