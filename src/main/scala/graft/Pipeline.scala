@@ -3,7 +3,7 @@ package graft
 import graft.model.Schemas
 import graft.model.Schemas.{FileStatus, InvoiceProcessingResult, ProcessingResult, StagingSummary}
 import graft.operators._
-import graft.sources.{CsvSource, InvoiceExtractor, Warehouse}
+import graft.sources.{AtomicWarehouse, CsvSource, InvoiceExtractor, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end orchestrator mirroring the reference's entry points
@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Steps 5-9 of EP1 (parse → canonicalize → transform → staging) stay one
   * lazy logical plan; only the merge layer and the ledger touch storage.
   */
-class Pipeline(val spark: SparkSession, val wh: Warehouse) {
+class Pipeline(val spark: SparkSession, val wh: AtomicWarehouse) {
 
   val ledger = new Ledger(wh)
 
@@ -103,8 +103,7 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
 
   /** EP1 — full CSV pipeline with ledger lifecycle (skip-if-done, 2 → 3/4). */
   def processCsv(raw: DataFrame, container: String, fileName: String): ProcessingResult = {
-    if (ledger.statusOf(container, fileName) == FileStatus.Success)
-      return ProcessingResult(status = true, s"File $fileName already processed successfully, skipping")
+    if (ledger.statusOf(container, fileName) == FileStatus.Success) return skipped(fileName)
 
     val attemptId = ledger.markInProgress(container, fileName)
     try {
@@ -123,10 +122,16 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
     }
   }
 
-  /** EP3 — CSV from a path (the blob-download entry point). */
+  private def skipped(fileName: String): ProcessingResult =
+    ProcessingResult(status = true, s"File $fileName already processed successfully, skipping")
+
+  /** EP3 — CSV from a path (the blob-download entry point). The ledger is
+    * asked before the CSV is opened: a redelivered blob runs no Spark job.
+    */
   def processCsvPath(path: String, container: String = "products"): ProcessingResult = {
     val name = new org.apache.hadoop.fs.Path(path).getName
-    processCsv(CsvSource.readPath(spark, path), container, name)
+    if (ledger.statusOf(container, name) == FileStatus.Success) skipped(name)
+    else processCsv(CsvSource.readPath(spark, path), container, name)
   }
 
   /** EP2 — invoice image → extractor → persisted CSV → same pipeline.

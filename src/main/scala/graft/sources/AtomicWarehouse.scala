@@ -90,6 +90,14 @@ object AtomicWarehouse {
     walk(dir, "")
     b.toSeq
   }
+
+  /** One table's readable data files with each file's deletion-vector
+    * entry (rel file → DV JSON, absent when the file has none) and its
+    * column mapping, all as of ONE folded log state
+    * ([[AtomicWarehouse.fileSet]]).
+    */
+  private[graft] final case class FileSet(files: Seq[String], dvs: Map[String, String],
+      colMap: Map[String, String])
 }
 
 class AtomicWarehouse(spark0: SparkSession, root0: String,
@@ -211,19 +219,25 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * instance noticing a new version refolds); per-read work is one
     * `listStatus` + a map lookup. [[commit]]'s auto-fold bounds the refold
     * cost itself.
+    *
+    * Refolds are single-flight: callers meeting the same new version (the
+    * concurrent staging threads of one transaction) wait for ONE fold under
+    * `foldLock` instead of each reading the new manifests, so a version is
+    * read and folded once per instance. A cache hit takes no lock.
     */
   @volatile private var foldCache: (String, LogState) = ("", LogState.empty)
+  private val foldLock = new Object
 
   private def foldedState(): LogState = retryOnVanishedManifest {
     val all = commitFiles()
-    val cached = foldCache
     // fold from the latest snapshot onward: pre-snapshot manifests are
     // subsumed (see latestSnapshotIdx) and may linger until vacuumed —
     // reading them would make per-read cost grow with the vacuum backlog
     val cfs = all.drop(latestSnapshotIdx(all).max(0))
+    def cachedHead: Option[LogState] =
+      Some(foldCache).collect { case (name, st) if name == cfs.last.getName => st }
     if (cfs.isEmpty) LogState.empty
-    else if (cached._1 == cfs.last.getName) cached._2
-    else foldFrom(cfs)
+    else cachedHead.getOrElse(foldLock.synchronized(cachedHead.getOrElse(foldFrom(cfs))))
   }
 
   /** The log manifests `cfs`, folded in order by the codec ([[Manifest.fold]]). */
@@ -244,8 +258,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * directory — caller falls back to the directory listing), Some(files)
     * otherwise (possibly empty after a truncate).
     */
-  private def visibleFiles(table: String): Option[Seq[String]] = {
-    val st = foldedState()
+  private def visibleFiles(table: String, st: LogState = foldedState()): Option[Seq[String]] = {
     val touched = st.adds.contains(table) ||
       st.truncated.exists(t => table == t || table.startsWith(t + "/"))
     if (touched) Some(st.adds.getOrElse(table, Vector.empty)) else None
@@ -546,8 +559,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * the first manifest write ADOPTS those files so no rows vanish when a
     * directory-laid table starts being written transactionally).
     */
-  private def committedOrPhysical(table: String): Seq[String] =
-    visibleFiles(table).getOrElse(
+  private def committedOrPhysical(table: String, st: LogState = foldedState()): Seq[String] =
+    visibleFiles(table, st).getOrElse(
       // raw/legacy fallback skips tx- leaves like adoption does: such a
       // file is either a racing commit's moved-but-unpublished staging
       // (must not be visible before its manifest) or an ABORTED commit's
@@ -863,7 +876,15 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   // ---- public transactional surface ---------------------------------------
 
-  override def atomically(fn: Warehouse => Unit): Unit = transact(fn)
+  override def atomically(fn: Warehouse => Unit): Unit = { atomicallyAdding(fn); () }
+
+  /** [[atomically]], returning the data files its commit added, per table:
+    * how a writer learns which files hold its own rows without listing or
+    * reading them back. [[atomically]] and the single-table writes run
+    * through this method, so it is the one overridable transaction entry.
+    */
+  private[graft] def atomicallyAdding(fn: Warehouse => Unit): Map[String, Seq[String]] =
+    transactAdding(fn)._2
 
   /** Run `fn` against a fresh transaction view and commit what it staged —
     * the typed entry of every conflict-checked operation ([[atomically]] is
@@ -871,12 +892,14 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     * and propagates; a failed [[Pin]] surfaces as
     * `ConcurrentModificationException`.
     */
-  private def transact[T](fn: TxView => T): T = {
+  private def transact[T](fn: TxView => T): T = transactAdding(fn)._1
+
+  /** [[transact]], also returning the data files the commit added per table. */
+  private def transactAdding[T](fn: TxView => T): (T, Map[String, Seq[String]]) = {
     val tx = new Tx()
     try {
       val out = fn(new TxView(tx))
-      commit(tx)
-      out
+      (out, commit(tx))
     } catch {
       case e: Throwable =>
         fs.delete(new Path(stageRoot, tx.txid), true) // staged files only
@@ -884,7 +907,10 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
   }
 
-  private def commit(tx: Tx): Unit = {
+  /** Publish `tx`'s staged writes as one manifest; returns the data files
+    * it added (moved in or adopted), per table.
+    */
+  private def commit(tx: Tx): Map[String, Seq[String]] = {
     val lines = ArrayBuffer[Action]()
     val deletesAfter = ArrayBuffer[String]()
     // adoption: the first manifest write to a table laid down by raw
@@ -1033,6 +1059,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       val cfs = commitFiles()
       if (cfs.size - latestSnapshotIdx(cfs).max(0) > logFoldEvery) foldLogToSnapshot()
     }
+    addedRels.map { case (t, rels) => t -> rels.toSeq }.toMap
   }
 
   /** The one optimistic-concurrency retry loop: `attempt` re-reads its
@@ -1060,8 +1087,12 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
         "intact — retry when the writers are quieter", lost)
   }
 
-  override def append(table: String, df: DataFrame): Unit =
-    retryConflicts(s"append to $table")(atomically(_.append(table, df)))
+  override def append(table: String, df: DataFrame): Unit = { appendAdding(table, df); () }
+
+  /** [[append]], returning the data files its commit added to `table`. */
+  private[graft] def appendAdding(table: String, df: DataFrame): Seq[String] =
+    retryConflicts(s"append to $table")(
+      atomicallyAdding(_.append(table, df)).getOrElse(table, Nil))
 
   override def appendPartitioned(table: String, df: DataFrame,
       partitionCols: Seq[String]): Unit =
@@ -1816,6 +1847,27 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   private[graft] def visibleDataFiles(table: String): Seq[String] =
     committedOrPhysical(table)
+
+  /** A table's [[AtomicWarehouse.FileSet]] from one folded state, with no
+    * Spark job: the key a driver-side copy of a small table is valid for.
+    * Data files are immutable and uniquely named, so an unchanged file with
+    * an unchanged DV entry still holds the same live rows; any other change
+    * (compaction, restore, DML, another writer) shows as a file added, gone
+    * or re-tombstoned.
+    */
+  private[graft] def fileSet(table: String): AtomicWarehouse.FileSet = {
+    val st = foldedState()
+    AtomicWarehouse.FileSet(committedOrPhysical(table, st), rawDvs(st, table),
+      parseColMap(st.colmap.get(table)))
+  }
+
+  /** The live rows of `files` (a subset of `set.files`), read under `set`'s
+    * own DV entries and column mapping — the same read [[read]] does, over
+    * only the files named.
+    */
+  private[graft] def readFileSet(table: String, schema: StructType,
+      set: AtomicWarehouse.FileSet, files: Seq[String]): DataFrame =
+    readFiles(table, schema, files, Some(set.colMap), Some(set.dvs))
 
   /** The commit wall-clock of one manifest: the `ts` line it RECORDS
     * (first line of every manifest since round 14 — survives a warehouse

@@ -230,6 +230,27 @@ class AtomicWarehouseSpec extends SparkSpec {
     assert(after <= 2, s"vacuum left $after manifests (want snapshot only)")
   }
 
+  test("threads meeting one fresh log version read each new manifest once") {
+    val dir = Files.createTempDirectory("graft-aw-fold1-").toString
+    val reader = new AtomicWarehouse(spark, dir)
+    val writer = new AtomicWarehouse(spark, dir)
+    writer.append("t", Seq((0L, "a")).toDF("id", "v"))
+    assert(reader.visibleFileCount("t") == 1)
+    val k = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(k)
+    try (1 to 5).foreach { round =>
+      (1 to 3).foreach(i => writer.append("t", Seq((round * 10L + i, "b")).toDF("id", "v")))
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val before = reader.manifestReads.get()
+      val counts = (1 to k).map(_ => pool.submit(() => { go.await(); reader.visibleFileCount("t") }))
+      go.countDown()
+      assert(counts.map(_.get()).toSet == Set(1 + 3 * round))
+      assert(reader.manifestReads.get() - before == 3,
+        s"round $round: $k readers of one new version read ${reader.manifestReads.get() - before} " +
+          "manifests for 3 new ones")
+    } finally pool.shutdown()
+  }
+
   test("snapshot fold keeps a child table's files across a truncated parent prefix") {
     // the data-loss shape: the child's adds appear in the log BEFORE the
     // parent's truncate (Pipeline.runBatch deletes staging/<src> each batch

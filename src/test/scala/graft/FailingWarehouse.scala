@@ -18,8 +18,10 @@ class FailingWarehouse(spark: SparkSession, root: String)
     if (failOn.contains(table))
       throw new java.io.IOException(s"injected crash writing $table")
 
-  override def atomically(fn: Warehouse => Unit): Unit =
-    super.atomically(w => fn(if (failOn.isEmpty) w else new Failing(w)))
+  // the one transaction entry: `atomically` and every single-table write
+  // (the ledger's own-files append included) run through it
+  override private[graft] def atomicallyAdding(fn: Warehouse => Unit): Map[String, Seq[String]] =
+    super.atomicallyAdding(w => fn(if (failOn.isEmpty) w else new Failing(w)))
 
   /** The transaction's view, with the injected failure on its writes. */
   private class Failing(w: Warehouse) extends Warehouse(spark, root) {
